@@ -2,6 +2,9 @@ package graft
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -102,8 +105,9 @@ final class PlanAuditor(spark: SparkSession) {
         f"ckpt=$ckpt%2d rt_shuf=${rtShufStages.get()}%3d " +
         f"rt_mb=$mb%8.1f", name, mb)
     } catch {
-      case e: Throwable =>
-        (f"$name%-22s PLAN-ERROR ${e.getMessage.take(60)}", name, -1.0)
+      // a fatal error propagates: PlanAudit.main stops the run on it
+      case NonFatal(e) =>
+        (f"$name%-22s PLAN-ERROR ${String.valueOf(e.getMessage).take(60)}", name, -1.0)
     } finally {
       // release this query's pins so ckpt deltas don't compound
       sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
@@ -128,7 +132,7 @@ object PlanAudit {
       // NonFatal only (round-10 ADVICE): the intended catch is a
       // missing PLANS.md; a fatal error must not silently disable
       // the tripwire
-      case scala.util.control.NonFatal(_) => Map.empty
+      case NonFatal(_) => Map.empty
     }
 
   /** The tripwire predicate: a >2.5× jump over the committed prior is
@@ -147,9 +151,18 @@ object PlanAudit {
     // diffs against the committed numbers.
     val prior = priorMb()
     val auditor = new PlanAuditor(spark)
-    val rows = SparkEntry.queries.toSeq.sortBy(_._1)
+    val rows = ArrayBuffer.empty[(String, String, Double)]
+    SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only.exists(n.startsWith) }
-      .map { case (name, fn) => auditor.auditOne(sfDir, name, fn) }
+      .foreach { case (name, fn) =>
+        rows += (try auditor.auditOne(sfDir, name, fn) catch {
+          case e: Throwable if !NonFatal(e) =>
+            Harness.abort("plan-audit", name, e) {
+              rows.foreach { case (line, _, _) => println(line) }
+              println(f"$name%-22s FATAL $e")
+            }
+        })
+      }
     rows.foreach { case (line, _, _) => println(line) }
     val regressions = rows.collect { case (_, name, mb)
         if mb >= 0 && prior.get(name).exists(p => regressed(p, mb)) =>

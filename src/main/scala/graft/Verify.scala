@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -23,34 +24,35 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    Files.deleteIfExists(Paths.get(s"$outDir/FATAL.json")) // from an earlier run
+    def writeOracleSql(): Unit = {
+      val json = SparkEntry.oracleSql
+        .map { case (k, v) => s"${Harness.jsonString(k)}: ${Harness.jsonString(v)}" }
+        .mkString("{", ",", "}")
+      Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    }
     SparkEntry.queries
       .filter { case (name, _) =>
         only.isEmpty || only.exists(name.startsWith) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch {
+        case NonFatal(e) =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        // the dumps so far stay checkable: oracle_sql.json is written,
+        // and FATAL.json (not a dump directory) names the query
+        case e: Throwable => Harness.abort("verify", name, e) {
+          writeOracleSql()
+          Files.writeString(Paths.get(s"$outDir/FATAL.json"),
+            s"""{"query": ${Harness.jsonString(name)}, "error": ${Harness.jsonString(e.toString)}}""")
+        }
       }
       // drop blocks left pinned by iterative ops (see Bench)
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql()
     spark.stop()
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * The original q106 formulation —
   * `size(filter(transform(sh, s -> xxhash64(s)), h -> forall(
   *    transform(array(c0..c4), c -> pmod(xxhash64(h ^ c), B)),
-  *    p -> (element_at(bf, p div 64 + 1) & shiftleft(1, p % 64)) != 0)))`
+  *    p -> (element_at(bf, p div 64 + 1) & shiftleft(1L, p % 64)) != 0L)))`
   * — is three nested higher-order functions (CodegenFallback): every
   * shingle of every document walks boxed lambda evaluation for 1 + k
   * xxhash64 calls and k word probes, and the projection drops out of
@@ -22,7 +22,8 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * preference order as [[RingKernels]] / [[VectorKernels]] (SURVEY.md
   * §7.3 (b)): custom Expression before any UDF.
   *
-  * Semantics (bit-identical to the HOF form, pinned by BloomKernelSpec):
+  * Semantics (bit-identical to the HOF form, pinned by CurationSpec's
+  * kernel-vs-HOF test):
   *  - element hash = SQL `xxhash64(s)` (seed 42; a NULL element hashes
   *    to the seed itself, exactly like the SQL function);
   *  - probe i ∈ [0, k): `pmod(xxhash64(h ^ (i·0x9E3779B97F4A7C15)), B)`
@@ -31,12 +32,18 @@ import org.apache.spark.sql.types.{DataType, LongType}
   *  - a shingle counts iff ALL k probe bits are set in the `bf` long
   *    array (`p div 64` word, `1L << (p % 64)` mask — p ≥ 0 so the
   *    Java shift's implicit &63 is identical);
+  *  - `numBits` ≤ [[BloomKernels.MaxBits]] (Int.MaxValue): a probe
+  *    position is an Int array index, as in the HOF form's
+  *    `cast(pmod(...) as int)`; a larger filter is rejected when the
+  *    expression is built rather than wrapping to a wrong position;
   *  - returns the count as BIGINT (the HOF form's final cast); NULL
   *    array → NULL (size(NULL) = NULL under the 3.0+ default this
   *    repo runs with).
   */
 object BloomKernels {
   private final val Golden = 0x9E3779B97F4A7C15L
+  /** Largest filter width whose bit positions an Int can address. */
+  final val MaxBits: Long = Int.MaxValue.toLong
 
   /** Count of elements of `sh` whose `numHashes` probe bits are all
     * set in `bf`. Bit-for-bit the HOF pipeline above. */
@@ -78,6 +85,8 @@ case class BloomCountHits(left: Expression, right: Expression,
                           numBits: Long, numHashes: Int)
     extends BinaryExpression {
   require(numBits > 0 && numHashes > 0)
+  require(numBits <= BloomKernels.MaxBits,
+    s"numBits $numBits exceeds ${BloomKernels.MaxBits}: probe positions are Int indexes")
   override def dataType: DataType = LongType
   override def nullSafeEval(sh: Any, bf: Any): Any =
     BloomKernels.countHits(sh.asInstanceOf[ArrayData],

@@ -81,8 +81,9 @@ object ReadTable {
     // sentinel like -999 must not survive as data), then re-run the
     // reference's Int→Float64→Bool cascade over string columns whose
     // non-sentinel values now all parse (a column held string only by
-    // its NA marker becomes numeric, as in the reference). One
-    // aggregate pass decides every candidate column together.
+    // its NA marker becomes numeric, as in the reference). A head
+    // probe decides most columns; one aggregate pass decides the rest
+    // together (see inferencePostCast).
     df = nullExtraNaStrings(df, opts)
     if (opts.inferSchema) df = inferencePostCast(df, opts)
     if (opts.colNames.nonEmpty) {
@@ -116,6 +117,9 @@ object ReadTable {
     }
   }
 
+  /** Rows the post-cast head probe reads (see [[inferencePostCast]]). */
+  private[graft] val HeadRows = 1000
+
   /** Post-parse finish of the reference's Int→Float64→Bool→String
     * inference cascade (src/io.jl:135-263, 356-368, 602-603) for the
     * pieces Spark's CSV options can't express: a string column whose
@@ -123,8 +127,21 @@ object ReadTable {
     * trueStrings ∪ falseStrings is cast accordingly — needed because
     * Spark's inference ran BEFORE the extra naStrings were nulled, so
     * a column held string only by its NA marker must still come out
-    * numeric. Costs one aggregate scan over the string columns, same
-    * order as the inference scan itself.
+    * numeric.
+    *
+    * Each string column has four flags: three "every non-null value
+    * parses" flags (`bool_and`) and one "some value is non-null" flag
+    * (`bool_or`). A head probe evaluates the same per-row checks on the
+    * first [[HeadRows]] rows (one `limit` collect, one task for a file
+    * whose first split holds that many rows) and settles a flag when
+    * the head can only decide it one way: an "every" flag false on the
+    * head is false on the file, a "some" flag true on the head is true
+    * on the file, and a head shorter than [[HeadRows]] is the whole
+    * frame, so it settles every flag. Only the flags left open go into
+    * the full aggregate scan, which does not run when none are — the
+    * common case, since a text column usually shows a non-numeric
+    * value early. The decisions, and so the schema, are the same as
+    * aggregating every flag over the whole file.
     */
   private def inferencePostCast(df: DataFrame,
                                 opts: ReadOptions): DataFrame = {
@@ -134,28 +151,44 @@ object ReadTable {
       .filter(_.dataType == StringType).map(_.name).toSeq
     if (strCols.isEmpty) return df
     val tf = opts.trueStrings ++ opts.falseStrings
-    val aggs = strCols.flatMap { c =>
+    // (flag name, per-row check, isAll): the "every" flags aggregate
+    // with bool_and, the "some" flag with bool_or; no check is null
+    val checks = strCols.flatMap { c =>
       val v = F.col(c)
       Seq(
-        F.bool_and(v.isNull || F.expr(s"try_cast(`$c` as long)").isNotNull)
-          .as(s"${c}__lng"),
-        F.bool_and(v.isNull || F.expr(s"try_cast(`$c` as double)").isNotNull)
-          .as(s"${c}__dbl"),
-        F.bool_and(v.isNull || v.isin(tf: _*)).as(s"${c}__bool"),
-        F.bool_or(v.isNotNull).as(s"${c}__any"))
+        (s"${c}__lng", v.isNull || F.expr(s"try_cast(`$c` as long)").isNotNull, true),
+        (s"${c}__dbl", v.isNull || F.expr(s"try_cast(`$c` as double)").isNotNull, true),
+        (s"${c}__bool", v.isNull || v.isin(tf: _*), true),
+        (s"${c}__any", v.isNotNull, false))
     }
-    val row = df.agg(aggs.head, aggs.tail: _*).first()
-    def flag(name: String): Boolean = {
-      val i = row.fieldIndex(name)
-      !row.isNullAt(i) && row.getBoolean(i)
+    val head = df.select(checks.map { case (n, e, _) => e.as(n) }: _*)
+      .limit(HeadRows).collect()
+    val whole = head.length < HeadRows
+    // more rows can only turn an "every" flag false and a "some" flag
+    // true, so the head settles a flag that already reads that way
+    val settled: Map[String, Boolean] = checks.zipWithIndex.flatMap {
+      case ((n, _, isAll), i) =>
+        val v = if (isAll) head.forall(_.getBoolean(i))
+                else head.exists(_.getBoolean(i))
+        if (whole || v != isAll) Some(n -> v) else None
+    }.toMap
+    val open = checks.filterNot { case (n, _, _) => settled.contains(n) }
+    val flags = if (open.isEmpty) settled else {
+      val aggs = open.map { case (n, e, isAll) =>
+        (if (isAll) F.bool_and(e) else F.bool_or(e)).as(n) }
+      val row = df.agg(aggs.head, aggs.tail: _*).first()
+      settled ++ open.map { case (n, _, _) =>
+        val i = row.fieldIndex(n)
+        n -> (!row.isNullAt(i) && row.getBoolean(i))
+      }
     }
     strCols.foldLeft(df) { (d, c) =>
-      if (!flag(s"${c}__any")) d // all-null: leave string, like Spark
-      else if (flag(s"${c}__lng"))
+      if (!flags(s"${c}__any")) d // all-null: leave string, like Spark
+      else if (flags(s"${c}__lng"))
         d.withColumn(c, F.col(c).cast("long"))
-      else if (flag(s"${c}__dbl"))
+      else if (flags(s"${c}__dbl"))
         d.withColumn(c, F.col(c).cast("double"))
-      else if (tf.nonEmpty && flag(s"${c}__bool"))
+      else if (tf.nonEmpty && flags(s"${c}__bool"))
         d.withColumn(c,
           F.when(F.col(c).isin(opts.trueStrings: _*), true)
             .when(F.col(c).isin(opts.falseStrings: _*), false))
@@ -166,13 +199,16 @@ object ReadTable {
   /** reference writetable (src/io.jl:726-791): header + separator +
     * quoting; `coalesce(1)` mimics the single-file output, omit it for
     * the distributed part-file layout (dwritetable,
-    * src/dataframe_blocks.jl:590-625). */
+    * src/dataframe_blocks.jl:590-625). Quotes inside a quoted field are
+    * doubled, the dialect [[readtable]] reads (Spark's default writer
+    * escapes them with a backslash instead). */
   def writetable(df: DataFrame, path: String, separator: Char = ',',
                  header: Boolean = true, singleFile: Boolean = true): Unit = {
     val out = if (singleFile) df.coalesce(1) else df
     out.write.mode("overwrite")
       .option("header", header.toString)
       .option("sep", separator.toString)
+      .option("escape", "\"")
       .csv(path)
   }
 

@@ -1,6 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 import graft.sources.{ReadOptions, ReadTable}
@@ -23,6 +26,42 @@ class CsvSpec extends SparkSpec {
     Files.writeString(p, content)
     p.toString
   }
+
+  /** A file with `header` and one line per row index. */
+  private def rowsFixture(name: String, header: String, rows: Int)(
+      line: Int => String): String =
+    fixture(name, (0 until rows).map(line).mkString(header + "\n", "\n", "\n"))
+
+  /** The result of `body` and the number of Spark jobs it submitted,
+    * counted under a job group of its own (other suites may share the
+    * session). Listener events arrive in order, so once a marker job
+    * run afterwards has been seen, so has every job of `body`. */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"csvspec-jobs-${java.util.UUID.randomUUID}"
+    val marker = s"$group-marker"
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(marker), "listener never saw the marker job")
+      (out, seen.asScala.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def typesOf(df: org.apache.spark.sql.DataFrame): Map[String, DataType] =
+    df.schema.fields.map(f => f.name -> f.dataType).toMap
 
   test("separator inferred from extension: csv/tsv/wsv") {
     assert(ReadTable.separatorFor("x.csv") == ',')
@@ -164,13 +203,96 @@ class CsvSpec extends SparkSpec {
   }
 
   test("round-trip: write then read equals original (reference io test)") {
-    val orig = T.load(spark, sf, "customer")
+    val s = spark
+    import s.implicits._
+    val cust = T.load(spark, sf, "customer")
       .select("c_custkey", "c_name", "c_acctbal")
+    // names holding the characters a CSV dialect must escape: a quote,
+    // the separator, both, and a backslash before a quote
+    val tricky = Seq(
+      (900001L, "say \"hi\"", 1.5),
+      (900002L, "Smith, Jr.", 2.5),
+      (900003L, "\"Quoted, with comma\"", 3.5),
+      (900004L, "back\\\"slash", 4.5))
+      .toDF("c_custkey", "c_name", "c_acctbal")
+      .select(cust.schema.fields.map(f => F.col(f.name).cast(f.dataType)): _*)
+    val orig = cust.unionByName(tricky)
     val out = dir.resolve("roundtrip").toString
     ReadTable.writetable(orig, out)
     val back = ReadTable.readtable(spark, out)
     assert(back.count() == orig.count())
     assert(back.exceptAll(orig).isEmpty && orig.exceptAll(back).isEmpty)
+    val names = back.filter(F.col("c_custkey") >= 900001L)
+      .orderBy("c_custkey").collect().map(_.getString(1)).toSeq
+    assert(names == tricky.collect().map(_.getString(1)).toSeq)
+  }
+
+  // The post-cast inference settles what it can from the first
+  // ReadTable.HeadRows rows and aggregates the whole file for the rest.
+  // Each file below puts the deciding value past the head, so the head
+  // alone would decide wrongly; the result must be the whole file's.
+  private val pastHead = ReadTable.HeadRows + 5
+  /** Jobs of a readtable whose head settles the post-cast: the header
+    * line, Spark's inference scan and the head probe. The full-file
+    * aggregate adds its own jobs on top. */
+  private val ReadJobs = 3
+
+  test("post-cast: a non-numeric value past the head keeps a column string") {
+    val p = rowsFixture("late_text.csv", "k,v", pastHead + 10) { i =>
+      s"$i,${if (i == pastHead) "oops" else i.toString}"
+    }
+    val (df, jobs) = jobsOf(ReadTable.readtable(spark, p))
+    assert(typesOf(df)("v") == StringType)
+    assert(df.filter(F.col("v") === "oops").count() == 1)
+    assert(jobs > ReadJobs, s"head cannot settle v, yet only $jobs jobs ran")
+  }
+
+  test("post-cast: a column null throughout the head but typed later is cast") {
+    val p = rowsFixture("late_typed.csv", "k,w", pastHead + 10) { i =>
+      s"$i,${if (i < pastHead) "NULL" else (i * 2).toString}"
+    }
+    val (df, jobs) = jobsOf(ReadTable.readtable(spark, p,
+      ReadOptions(naStrings = Seq("NA", "", "NULL"))))
+    assert(jobs > ReadJobs, s"head cannot settle w, yet only $jobs jobs ran")
+    assert(typesOf(df)("w") == LongType)
+    assert(df.filter(F.col("w").isNotNull).count() == 10)
+    assert(df.agg(F.max("w")).head().getLong(0) == 2L * (pastHead + 9))
+  }
+
+  test("post-cast: an extra NA marker past the head still comes out numeric") {
+    val p = rowsFixture("late_na.csv", "k,m,d", pastHead + 10) { i =>
+      if (i == pastHead) s"$i,NULL,NULL" else s"$i,$i,$i.5"
+    }
+    val (df, jobs) = jobsOf(ReadTable.readtable(spark, p,
+      ReadOptions(naStrings = Seq("NA", "", "NULL"))))
+    assert(jobs > ReadJobs, s"head cannot settle m, yet only $jobs jobs ran")
+    val types = typesOf(df)
+    assert(types("m") == LongType && types("d") == DoubleType)
+    assert(df.filter(F.col("m").isNull).count() == 1)
+    assert(df.filter(F.col("d").isNull).count() == 1)
+  }
+
+  test("post-cast: a header-only file keeps string columns, no aggregate") {
+    val p = fixture("header_only.csv", "a,b\n")
+    val (df, jobs) = jobsOf(ReadTable.readtable(spark, p))
+    assert(df.columns.toSeq == Seq("a", "b") && df.count() == 0)
+    assert(df.schema.fields.forall(_.dataType == StringType))
+    assert(jobs == ReadJobs, s"an empty head settles every flag, got $jobs jobs")
+  }
+
+  test("post-cast: a head that settles every string column runs no aggregate") {
+    // title and mpaa are strings from their first rows on; the numeric
+    // column is typed by Spark's own inference. Jobs: header, inference
+    // and head probe, and no full-file aggregate.
+    val p = rowsFixture("settled.csv", "id,title,mpaa,year",
+        3 * ReadTable.HeadRows) { i =>
+      s"$i,\"Film, $i\",${if (i % 3 == 0) "PG" else "NA"},${1900 + i % 100}"
+    }
+    val (df, jobs) = jobsOf(ReadTable.readtable(spark, p))
+    val types = typesOf(df)
+    assert(types("title") == StringType && types("mpaa") == StringType)
+    assert(types("year") == IntegerType)
+    assert(jobs == ReadJobs, s"expected header, inference and probe jobs only, got $jobs")
   }
 
   test("UTF-8 content survives") {

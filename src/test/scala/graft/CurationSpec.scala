@@ -194,6 +194,16 @@ class CurationSpec extends SparkSpec {
       assert(both.filter(F.col("kern") =!= F.col("hof")).count() === 0,
         s"kernel/HOF divergence at bits=$bits")
     }
+    // the HOF form casts positions to int; a wider filter is refused
+    // up front instead of probing wrapped positions
+    val maxBits = graft.plans.BloomKernels.MaxBits
+    assert(maxBits == Int.MaxValue.toLong)
+    graft.plans.BloomExpressions.bloomCountHits(
+      F.col("sh"), F.col("bf"), maxBits, 5)
+    intercept[IllegalArgumentException] {
+      graft.plans.BloomExpressions.bloomCountHits(
+        F.col("sh"), F.col("bf"), maxBits + 1, 5)
+    }
   }
 
   test("count-min estimates dominate exact counts for EVERY token") {
