@@ -11,44 +11,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  private def registries = Seq(
-    _root_.graft.queries.CoreQueries.queries,
-    _root_.graft.queries.RelQueries.queries,
-    _root_.graft.queries.StatQueries.queries,
-    _root_.graft.queries.PipelineQueries.queries,
-    _root_.graft.queries.CurationQueries.queries,
-    _root_.graft.queries.StreamQueries.queries,
-    _root_.graft.queries.MiscQueries.queries,
-    _root_.graft.queries.AnalyticsQueries.queries,
-    _root_.graft.queries.MlQueries.queries,
-    _root_.graft.queries.MiningQueries.queries,
-    _root_.graft.queries.RetrievalQueries.queries,
-    _root_.graft.queries.FunnelQueries.queries,
-    _root_.graft.queries.EvalQueries.queries,
-    _root_.graft.queries.ScoreQueries.queries,
-    _root_.graft.queries.TrainQueries.queries,
-    _root_.graft.queries.MetricQueries.queries,
-    _root_.graft.queries.AuditQueries.queries
-  )
-  private def oracleRegistries = Seq(
-    _root_.graft.queries.CoreQueries.oracleSql,
-    _root_.graft.queries.RelQueries.oracleSql,
-    _root_.graft.queries.StatQueries.oracleSql,
-    _root_.graft.queries.PipelineQueries.oracleSql,
-    _root_.graft.queries.CurationQueries.oracleSql,
-    _root_.graft.queries.StreamQueries.oracleSql,
-    _root_.graft.queries.MiscQueries.oracleSql,
-    _root_.graft.queries.AnalyticsQueries.oracleSql,
-    _root_.graft.queries.MlQueries.oracleSql,
-    _root_.graft.queries.MiningQueries.oracleSql,
-    _root_.graft.queries.RetrievalQueries.oracleSql,
-    _root_.graft.queries.FunnelQueries.oracleSql,
-    _root_.graft.queries.EvalQueries.oracleSql,
-    _root_.graft.queries.ScoreQueries.oracleSql,
-    _root_.graft.queries.TrainQueries.oracleSql,
-    _root_.graft.queries.MetricQueries.oracleSql,
-    _root_.graft.queries.AuditQueries.oracleSql
-  )
+  private val registries: Seq[_root_.graft.queries.QueryRegistry] = {
+    import _root_.graft.queries._
+    Seq(CoreQueries, RelQueries, StatQueries, PipelineQueries,
+      CurationQueries, StreamQueries, MiscQueries, AnalyticsQueries,
+      MlQueries, MiningQueries, RetrievalQueries, FunnelQueries,
+      EvalQueries, ScoreQueries, TrainQueries, MetricQueries,
+      AuditQueries)
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -56,10 +26,10 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registries.reduce(_ ++ _)
+    registries.map(_.queries).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    oracleRegistries.reduce(_ ++ _)
+    registries.map(_.oracleSql).reduce(_ ++ _)
 }

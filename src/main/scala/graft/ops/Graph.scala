@@ -23,7 +23,7 @@ import org.apache.spark.sql.GraftReleaseBridge
   *    (plus every [[CkptRounds]]th round so a deep loop's lineage
   *    stays bounded at scale): one job runs the whole chain, vs one
   *    job + one O(|V|) cache write per round;
-  *  - '''convergence loops''' (BFS, k-core, CC, the quantile engines)
+  *  - '''convergence loops''' (BFS, k-core, CC)
   *    mark the round's state with a LAZY `localCheckpoint(false)` and
   *    let the convergence count materialize it — Spark persists local
   *    checkpoint partitions as the counting job computes them and
@@ -46,9 +46,7 @@ object Graph {
     * AQE's runtime join conversion already broadcasts genuinely small
     * sides from ACTUAL shuffle stats — locally and on a cluster —
     * without the driver round-trip. The state-side joins therefore
-    * stay planner-chosen. (Contrast with the grouped-quantile engine,
-    * where the hinted relation is O(groups) ≪ O(|V|) and the win was
-    * measured.) */
+    * stay planner-chosen. */
 
   /** Damped PageRank with a fixed iteration count.
     *

@@ -50,6 +50,19 @@ object Quantiles {
   val DefaultCollectLimit = 65536L
   private val MaxRounds = 64 // safety valve; ~2 rounds in practice
 
+  /** GK warm-start knobs. A warm start probes each target quantile
+    * ± `WarmMargin` with one `percentile_approx` sketch —
+    * Greenwald-Khanna, deterministic rank error ≤ n/accuracy. The two
+    * probe VALUES bracket the target's true floor/ceil ranks whenever
+    * 3·(n/accuracy) covers the probe-vs-rank slack, i.e. n ≳ accuracy;
+    * below [[WarmMinN]] the bracket is not attempted. The bracket is a
+    * PERFORMANCE hint only: round 1 count-verifies it with sentinel
+    * bins, so a wrong bracket costs one extra round, never a wrong
+    * answer. */
+  val WarmAccuracy = 1000
+  val WarmMargin: Double = 4.0 / WarmAccuracy
+  val WarmMinN = 2000L
+
   /** Exact interpolated quantiles of one numeric column. */
   def exact(df: DataFrame, col: String, qs: Seq[Double]): Seq[Double] =
     exactMulti(df, Seq(col), qs)(col)
@@ -86,8 +99,7 @@ object Quantiles {
     * computes the sketch itself at no extra pass. Warm targets run
     * round 1 over their bracket with SENTINEL bins (−1 / k for values
     * outside it), so rank arithmetic stays global and a wrong bracket
-    * costs one extra round, never a wrong answer — the same
-    * count-verified design as the grouped engines. Because a GK
+    * costs one extra round, never a wrong answer. Because a GK
     * bracket holds ~8·n/accuracy rows, round-1 bins over it are
     * near-singleton and most ranks resolve IN the histogram pass,
     * eliminating the final collect pass (3 full scans → 2). */
@@ -383,393 +395,5 @@ object Quantiles {
     }
     val doneKeys = resolved.map(s => (s.col, s.q)).toSet
     states.filterNot(s => doneKeys.contains((s.col, s.q))) ++ resolved
-  }
-
-  /** GROUPED exact interpolated quantile of an integer (long) column —
-    * the scale path for the "grouped exact percentile" bottleneck
-    * documented in SCALE.md: `percentile()` merges a per-partition
-    * value map that is O(distinct values per group) on one reducer,
-    * and a per-group sort shuffles the whole column. This runs the
-    * same iterative histogram refinement as [[exactMulti]] but keeps
-    * ALL per-group search state IN THE PLAN — a (group, rank-target,
-    * lo, hi, offset) relation that narrows ~k× per round — so a
-    * billion groups cost zero driver memory; the driver only sees one
-    * "any interval still open?" count per round (the q24/CC loop
-    * discipline). Integer domains terminate WITHOUT any value
-    * collect: once an interval's width is below k every bin is a
-    * single value, so each rank resolves to `lo` exactly —
-    * ceil(log_k(range)) + 1 rounds total (3-4 for cent values).
-    *
-    * Returns one row per group: key columns + `out` (double,
-    * interpolated between floor/ceil ranks exactly like
-    * `percentile`/`quantile_cont`). Nulls in `valCol` are ignored;
-    * empty groups don't appear (no non-null values = no row).
-    */
-  def groupedExactLong(df: DataFrame, keys: Seq[String], valCol: String,
-                       q: Double, out: String,
-                       k: Int = 4096, pinned: Boolean = false): DataFrame =
-    groupedExactLongMulti(df, keys, valCol, Seq(q -> out), k, pinned)
-
-  /** Multi-target sibling of [[groupedExactLong]]: resolves SEVERAL
-    * quantiles of the same grouped column through ONE shared
-    * refinement loop. The per-round histogram join already carries
-    * one rank row per open (group, rank) target, so adding a target
-    * adds O(groups) rank-state rows — NOT extra passes over the data.
-    * A 3-quantile profile (p05/p50/p95) costs the same number of
-    * full-data scans as a single median. Duplicate ranks across
-    * targets (p50's ceil == p90's floor in a small group) dedup in
-    * the shared rank state. `qs` maps each quantile to its output
-    * column name; interpolation per target is `lo + (q(n−1) − ⌊q(n−1)⌋) ·
-    * (hi − lo)` — like quantile_cont, within one ulp of
-    * `percentile`'s (1−g)·lo + g·hi form.
-    */
-  /** GK warm-start knobs (round-11 verdict task 1). The init
-    * aggregation also runs one `percentile_approx` sketch per call —
-    * Greenwald-Khanna, deterministic rank error ≤ n/accuracy — probing
-    * each target quantile ± `WarmMargin`. The two probe VALUES bracket
-    * the target's true floor/ceil ranks whenever 3·(n/accuracy) covers
-    * the probe-vs-rank slack, i.e. n ≳ accuracy; below [[WarmMinN]]
-    * the bracket is not attempted (min/max init is near-free there).
-    * The bracket is a PERFORMANCE hint only: round 1 count-verifies it
-    * with sentinel bins (values outside [lo, hi] land in bins −1 / k,
-    * so a rank falling outside the bracket narrows to the outside
-    * region and the loop continues) — a wrong bracket costs one extra
-    * round, never a wrong answer, and a collapsed bracket (aLo == aHi)
-    * is still verified because `__warm` states must survive one round
-    * before they can close. Typical effect: the bracket holds
-    * ~8·n/accuracy rows, so round 1's k bins are already single values
-    * (long domains) or already under the endgame budget (double
-    * domains) — 3-4 full-data rounds collapse to 1. */
-  val WarmAccuracy = 1000
-  val WarmMargin: Double = 4.0 / WarmAccuracy
-  val WarmMinN = 2000L
-
-  /** The grouped engines hint `broadcast()` on every state-side join —
-    * the state relation is lazily planned (no stats), so without the
-    * hint Spark picks an SMJ that re-shuffles the FULL data relation
-    * every refinement round (the single biggest constant found in the
-    * round-11 warm-start work). But the state is O(groups × targets)
-    * rows, and these are PUBLIC entry points: a high-cardinality group
-    * key must not force a driver-side broadcast each round (driver OOM
-    * at the 100 TB scale this engine targets — round-12 ADVICE). The
-    * hint is therefore gated on the init row count (already computed:
-    * init is checkpointed before the loop); past the bound the joins
-    * fall back to the planner's shuffle join, which is the right plan
-    * at that cardinality anyway. ~4M state rows ≈ a few hundred MB
-    * broadcast — comfortably under executor memory, far under driver
-    * OOM territory. */
-  val BroadcastStateMaxRows: Long = 4L * 1000 * 1000
-
-  /** Shared grouped-refinement setup: the pinned (keys, __v)
-    * projection, the CHECKPOINTED per-group init row (n, per-target
-    * floor/ceil ranks, min/max, GK warm probes — O(groups), reused by
-    * the final interpolation so the data is never re-aggregated) and
-    * the initial rank-state rows (one per distinct rank across all
-    * targets; warm-bracketed where the GK guarantee holds). `castType`
-    * is the only long-vs-double difference at this stage. `pinned`
-    * callers guarantee `df` is already materialized (localCheckpoint)
-    * so re-deriving the projection per round is an in-memory scan —
-    * used by q69's two sequential engine passes to share ONE pin. */
-  private def groupedInit(df: DataFrame, keys: Seq[String],
-      valCol: String, qs: Seq[(Double, String)], castType: String,
-      pinned: Boolean)
-      : (DataFrame, DataFrame, DataFrame) = {
-    require(keys.nonEmpty && qs.nonEmpty &&
-      qs.forall { case (q, _) => q >= 0 && q <= 1 })
-    val kCols = keys.map(F.col)
-    val proj = df.select(kCols :+ F.col(valCol).cast(castType).as("__v"): _*)
-      .filter(F.col("__v").isNotNull)
-    val data = if (pinned) proj
-      else proj.localCheckpoint() // read once per refinement round
-    val rkExprs = qs.zipWithIndex.flatMap { case ((q, _), i) =>
-      Seq(F.expr(s"cast(floor($q * (__n - 1)) as bigint)")
-          .as(s"__rkLo$i"),
-        F.expr(s"cast(ceil($q * (__n - 1)) as bigint)").as(s"__rkHi$i"))
-    }
-    // 2 probes per target: value at quantile q∓margin (clamped). GK
-    // guarantees rank(probe) within n·margin∓n/accuracy of the target
-    // rank, so [probe_lo, probe_hi] ⊇ the target's value for n ≥
-    // WarmMinN — and round 1 verifies it by count regardless.
-    val probes = qs.flatMap { case (q, _) =>
-      Seq(math.max(0.0, q - WarmMargin), math.min(1.0, q + WarmMargin))
-    }
-    val init = data.groupBy(kCols: _*)
-      .agg(F.count(F.lit(1)).as("__n"),
-        F.min("__v").as("__lo"), F.max("__v").as("__hi"),
-        F.percentile_approx(F.col("__v"),
-          F.array(probes.map(F.lit): _*), F.lit(WarmAccuracy)).as("__wb"))
-      .select((kCols ++ Seq(F.col("__n")) ++ rkExprs ++
-        Seq(F.col("__lo"), F.col("__hi"), F.col("__wb"))): _*)
-      // LAZY: stateHint's gate count (always the next action, both
-      // engines) materializes it — ckpt+count fused to one job (r15;
-      // the eager form paid a separate materialization job per call)
-      .localCheckpoint(false) // O(groups) rows; reused by interpTargets
-    val allRk = F.array_distinct(F.array(qs.indices.flatMap(i =>
-      Seq(F.col(s"__rkLo$i"), F.col(s"__rkHi$i"))): _*))
-    val rkCols = qs.indices.flatMap(i =>
-      Seq(F.col(s"__rkLo$i"), F.col(s"__rkHi$i")))
-    val exploded = init
-      .select((kCols ++ rkCols ++ Seq(F.col("__n"), F.col("__lo"),
-        F.col("__hi"), F.col("__wb"), F.explode(allRk).as("__rk"))): _*)
-    // a rank shared by several targets takes the ENVELOPE of their
-    // brackets (least/greatest skip the null non-owner branches; the
-    // trailing typed null only satisfies the ≥2-arg arity for a
-    // single-target call)
-    val nullV = F.lit(null).cast(castType)
-    val wLo = F.least(qs.indices.flatMap(i => Seq(
-      F.when(F.col("__rk") === F.col(s"__rkLo$i")
-        || F.col("__rk") === F.col(s"__rkHi$i"),
-        F.element_at(F.col("__wb"), 2 * i + 1)))) :+ nullV: _*)
-    val wHi = F.greatest(qs.indices.flatMap(i => Seq(
-      F.when(F.col("__rk") === F.col(s"__rkLo$i")
-        || F.col("__rk") === F.col(s"__rkHi$i"),
-        F.element_at(F.col("__wb"), 2 * i + 2)))) :+ nullV: _*)
-    val warm = F.col("__n") >= WarmMinN &&
-      wLo.isNotNull && wHi.isNotNull
-    val state0 = exploded
-      .select((kCols ++ Seq(F.col("__n"), F.col("__rk"),
-        F.lit(0L).as("__off"),
-        F.when(warm, wLo).otherwise(F.col("__lo")).as("__lo"),
-        F.when(warm, wHi).otherwise(F.col("__hi")).as("__hi"),
-        warm.as("__warm"))): _*)
-    (data, init, state0)
-  }
-
-  /** Broadcast-or-identity for the state-side joins: hint only while
-    * the worst-case state row count (groups × 2 ranks per target) is
-    * under [[BroadcastStateMaxRows]]. `init` is checkpointed, so the
-    * count is an in-memory O(groups) scan, paid once per engine call. */
-  private def stateHint(init: DataFrame,
-      targets: Int): DataFrame => DataFrame =
-    if (init.count() * 2L * targets <= BroadcastStateMaxRows)
-      F.broadcast
-    else identity
-
-  def groupedExactLongMulti(df: DataFrame, keys: Seq[String],
-                            valCol: String, qs: Seq[(Double, String)],
-                            k: Int = 4096,
-                            pinned: Boolean = false): DataFrame = {
-    val kCols = keys.map(F.col)
-    val (data, init, state0) =
-      groupedInit(df, keys, valCol, qs, "long", pinned)
-    val hintState = stateHint(init, qs.size)
-    // state0 is a select+explode over the checkpointed init —
-    // re-deriving it per reference is O(groups), so it is NOT
-    // checkpointed and the pre-loop open count is skipped: round 1
-    // always runs (warm states must verify anyway; a workload whose
-    // state0 is fully closed pays one empty join — trivial)
-    var state = state0
-    // a warm (GK-bracketed) state must survive one count-verifying
-    // round before it may close — its interval was never witnessed
-    val openCond = F.col("__warm") || F.col("__hi") > F.col("__lo")
-    var open = -1L // unknown until a round has counted
-    var rounds = 0
-    while (open != 0 && rounds < MaxRounds) {
-      val done = state.filter(!openCond)
-      val pending = state.filter(openCond)
-      // bucket the open intervals: k uniform integer bins; width ≤ k
-      // means every bin is one value and next round closes the
-      // interval. The bin arithmetic runs in DECIMAL(38,0): in int64,
-      // (v−lo)·k wraps once a group's span exceeds 2^63/k (~9e15 for
-      // k=1024) and hi−lo+1 itself wraps near the full long range — a
-      // wrapped bin silently drops the rank row and the group vanishes.
-      // Decimal multiply/int-divide is exact for the full long domain
-      // ((2^64)·1024 ≈ 1.9e22 ≪ 10^38) and costs one codegen'd decimal
-      // op per row per round — noise next to the join it rides on.
-      // Warm states keep EVERY row of the group: values outside the
-      // unverified bracket land in sentinel bins −1 / k, so the cum
-      // counts are global and the rank's true bin is found whether or
-      // not the bracket was right. Verified states filter to their
-      // witnessed interval exactly as before (no sentinel rows).
-      val binned = data.join(hintState(pending), keys)
-        .filter(F.col("__warm") || (F.col("__v") >= F.col("__lo") &&
-          F.col("__v") <= F.col("__hi")))
-        .withColumn("__bin",
-          F.when(F.col("__v") < F.col("__lo"), F.lit(-1L))
-            .when(F.col("__v") > F.col("__hi"), F.lit(k.toLong))
-            .otherwise(F.expr(
-              s"""cast(((cast(__v as decimal(38,0)) - __lo) * $k)
-                  div (cast(__hi as decimal(38,0)) - __lo + 1)
-                  as bigint)""")))
-        .groupBy((kCols ++ Seq(F.col("__rk"), F.col("__bin"))): _*)
-        .agg(F.count(F.lit(1)).as("__c"),
-          F.min("__v").as("__bmin"), F.max("__v").as("__bmax"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy((kCols :+ F.col("__rk")): _*).orderBy("__bin")
-        .rowsBetween(org.apache.spark.sql.expressions.Window
-          .unboundedPreceding, -1) // ≤k+2 rows per (group, rk)
-      val next = binned
-        .withColumn("__cb", F.coalesce(F.sum("__c").over(w), F.lit(0L)))
-        .join(hintState(pending.select((kCols ++ Seq(F.col("__rk"),
-          F.col("__n"), F.col("__off"))): _*)), keys :+ "__rk")
-        // the bin holding local rank (__rk − __off); for warm states
-        // __off = 0 and the sentinel bins make __cb global, so the
-        // same arithmetic verifies the bracket by count
-        .filter(F.col("__rk") - F.col("__off") >= F.col("__cb") &&
-          F.col("__rk") - F.col("__off") < F.col("__cb") + F.col("__c"))
-        .select((kCols ++ Seq(F.col("__n"), F.col("__rk"),
-          (F.col("__off") + F.col("__cb")).as("__off"),
-          F.col("__bmin").as("__lo"), F.col("__bmax").as("__hi"),
-          F.lit(false).as("__warm"))): _*)
-      val prev = state
-      // LAZY checkpoint: the open count scans every state partition,
-      // so the checkpoint materializes inside the count job — one job
-      // per round where ckpt+count used to be two (round 12). The
-      // superseded round releases only after that job has pinned its
-      // successor (the GraftReleaseBridge ordering contract).
-      state = done.unionByName(next).localCheckpoint(false)
-      open = state.filter(openCond).count()
-      org.apache.spark.sql.GraftReleaseBridge.release(prev)
-      rounds += 1
-      if (sys.env.contains("GRAFT_QUANTILE_DEBUG"))
-        System.err.println(s"[quantiles] round=$rounds open=$open " +
-          s"targets=${qs.size} t=${System.nanoTime() / 1000000}")
-    }
-    require(open == 0, s"grouped quantile did not converge in $MaxRounds rounds")
-    val res = state.select((kCols ++ Seq(F.col("__rk"),
-      F.col("__lo").as("__val"))): _*)
-    interpTargets(init, res, keys, qs)
-  }
-
-  /** Shared final pivot: fold the resolved-rank relation to ONE
-    * rank→value map row per group and join it to init once —
-    * 2 aggregation-shuffle ops total, independent of target count
-    * (round 11; the previous 2-joins-per-target shape planned 8 joins
-    * for a 4-quantile profile). Both relations are O(groups) rows;
-    * every floor/ceil lookup is an element_at on the map. */
-  private def interpTargets(init: DataFrame, res: DataFrame,
-      keys: Seq[String], qs: Seq[(Double, String)]): DataFrame = {
-    val kCols = keys.map(F.col)
-    val rkMap = res.groupBy(kCols: _*)
-      .agg(F.map_from_entries(
-        F.collect_list(F.struct(F.col("__rk"), F.col("__val"))))
-        .as("__rkv"))
-    val out = init.drop("__lo", "__hi", "__wb").join(rkMap, keys)
-    val outCols = qs.zipWithIndex.map { case ((q, name), i) =>
-      F.expr(
-        s"""cast(element_at(__rkv, __rkLo$i) as double)
-            + ($q * (__n - 1) - __rkLo$i)
-            * (cast(element_at(__rkv, __rkHi$i) as double)
-               - element_at(__rkv, __rkLo$i))""").as(name)
-    }
-    out.select((kCols ++ outCols): _*)
-  }
-
-  /** GROUPED exact interpolated quantiles of a DOUBLE column — the
-    * float-domain sibling of [[groupedExactLongMulti]] (verdict r8/r9
-    * task: latency/score columns are doubles, and their fallback was
-    * the native `percentile` this engine exists to retire). Same
-    * in-plan (group, rank, lo, hi, offset) search state narrowing ~k×
-    * per round, with two float-specific differences:
-    *
-    *   - bin arithmetic is the half-space division-first form from
-    *     [[exactMulti]] (a span near the full double range overflows
-    *     (hi−lo) and (v−lo)·k to Inf; halves and a ≤1 ratio cannot);
-    *   - float domains have no integer-bin exhaustion, so targets
-    *     whose candidate count drops to ≤`endgame` leave the loop and
-    *     resolve by an IN-PLAN per-(group, rank) sort of just their
-    *     candidate rows — a window partitioned by (keys, rank), ≤
-    *     `endgame` rows per partition, distributed across groups
-    *     (zero driver collects, zero single-partition exchanges; the
-    *     batched replacement for exactMulti's driver-side endgame).
-    *     Duplicate-heavy groups still close in-loop via bmin == bmax.
-    *
-    * Interpolation matches [[groupedExactLongMulti]] (quantile_cont's
-    * `lo + g·(hi − lo)`, within one ulp of native `percentile`).
-    * Nulls ignored; NaN and ±Infinity unsupported (NaN is unordered
-    * by </>=; an infinite interval bound poisons bin arithmetic —
-    * same contract as [[exactMulti]] documents for NaN).
-    */
-  def groupedExactDoubleMulti(df: DataFrame, keys: Seq[String],
-                              valCol: String, qs: Seq[(Double, String)],
-                              k: Int = 4096,
-                              endgame: Int = 4096,
-                              pinned: Boolean = false): DataFrame = {
-    val kCols = keys.map(F.col)
-    val (data, init, state0) =
-      groupedInit(df, keys, valCol, qs, "double", pinned)
-    val hintState = stateHint(init, qs.size)
-    // lazy state0 + unconditional round 1: see groupedExactLongMulti
-    var state = state0.withColumn("__cnt", F.col("__n"))
-    // a target refines while its interval is non-degenerate AND its
-    // candidate count exceeds the in-plan endgame budget; a warm
-    // (GK-bracketed) target must survive one count-verifying round
-    // regardless — its interval and __off were never witnessed, so
-    // neither the close-on-degenerate nor the endgame may trust them
-    val openCond = F.col("__warm") || (F.col("__hi") > F.col("__lo") &&
-      F.col("__cnt") > endgame)
-    var open = -1L // unknown until a round has counted
-    var rounds = 0
-    while (open != 0 && rounds < MaxRounds) {
-      val done = state.filter(!openCond)
-      val pending = state.filter(openCond)
-      // warm states keep every row (sentinel bins −1 / k outside the
-      // bracket — see groupedExactLongMulti); the `lo == hi` guard
-      // keeps a collapsed bracket's in-range rows out of the 0/0
-      // half-space division (they are all exactly lo → bin 0)
-      val binned = data.join(hintState(pending), keys)
-        .filter(F.col("__warm") || (F.col("__v") >= F.col("__lo") &&
-          F.col("__v") <= F.col("__hi")))
-        .withColumn("__bin",
-          F.when(F.col("__v") < F.col("__lo"), F.lit(-1L))
-            .when(F.col("__v") > F.col("__hi"), F.lit(k.toLong))
-            .when(F.col("__lo") === F.col("__hi"), F.lit(0L))
-            .otherwise(F.least(F.lit((k - 1).toLong),
-              F.greatest(F.lit(0L),
-                F.floor((F.col("__v") / 2 - F.col("__lo") / 2)
-                  / (F.col("__hi") / 2 - F.col("__lo") / 2) * k)))))
-        .groupBy((kCols ++ Seq(F.col("__rk"), F.col("__bin"))): _*)
-        .agg(F.count(F.lit(1)).as("__c"),
-          F.min("__v").as("__bmin"), F.max("__v").as("__bmax"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy((kCols :+ F.col("__rk")): _*).orderBy("__bin")
-        .rowsBetween(org.apache.spark.sql.expressions.Window
-          .unboundedPreceding, -1) // ≤k rows per (group, rk)
-      val next = binned
-        .withColumn("__cb", F.coalesce(F.sum("__c").over(w), F.lit(0L)))
-        .join(hintState(pending.select((kCols ++ Seq(F.col("__rk"),
-          F.col("__n"), F.col("__off"))): _*)), keys :+ "__rk")
-        .filter(F.col("__rk") - F.col("__off") >= F.col("__cb") &&
-          F.col("__rk") - F.col("__off") < F.col("__cb") + F.col("__c"))
-        .select((kCols ++ Seq(F.col("__n"), F.col("__rk"),
-          (F.col("__off") + F.col("__cb")).as("__off"),
-          F.col("__bmin").as("__lo"), F.col("__bmax").as("__hi"),
-          F.lit(false).as("__warm"),
-          F.col("__c").as("__cnt"))): _*)
-      val prev = state
-      // LAZY checkpoint: the open count scans every state partition,
-      // so the checkpoint materializes inside the count job — one job
-      // per round where ckpt+count used to be two (round 12). The
-      // superseded round releases only after that job has pinned its
-      // successor (the GraftReleaseBridge ordering contract).
-      state = done.unionByName(next).localCheckpoint(false)
-      open = state.filter(openCond).count()
-      org.apache.spark.sql.GraftReleaseBridge.release(prev)
-      rounds += 1
-      if (sys.env.contains("GRAFT_QUANTILE_DEBUG"))
-        System.err.println(s"[quantiles] round=$rounds open=$open " +
-          s"targets=${qs.size} t=${System.nanoTime() / 1000000}")
-    }
-    require(open == 0,
-      s"grouped double quantile did not converge in $MaxRounds rounds")
-    // closed in-loop (bmin == bmax): the rank's value is the interval
-    val closed = state.filter(F.col("__hi") <= F.col("__lo"))
-      .select((kCols ++ Seq(F.col("__rk"), F.col("__lo").as("__val"))): _*)
-    // in-plan endgame: each narrow-but-unclosed target sorts ONLY its
-    // ≤endgame candidate rows, partitioned by (keys, rank) — no
-    // driver collect, no single-partition exchange
-    val narrow = state.filter(F.col("__hi") > F.col("__lo"))
-      .select((kCols ++ Seq(F.col("__rk"), F.col("__off"),
-        F.col("__lo"), F.col("__hi"))): _*)
-    val ew = org.apache.spark.sql.expressions.Window
-      .partitionBy((kCols :+ F.col("__rk")): _*).orderBy("__v")
-    val endRows = data.join(hintState(narrow), keys)
-      .filter(F.col("__v") >= F.col("__lo") &&
-        F.col("__v") <= F.col("__hi"))
-      .withColumn("__rn",
-        F.row_number().over(ew).cast("long") - 1L)
-      .filter(F.col("__rn") === F.col("__rk") - F.col("__off"))
-      .select((kCols ++ Seq(F.col("__rk"), F.col("__v").as("__val"))): _*)
-    interpTargets(init, closed.unionByName(endRows), keys, qs)
   }
 }

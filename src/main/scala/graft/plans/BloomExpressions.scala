@@ -22,8 +22,8 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * preference order as [[RingKernels]] / [[VectorKernels]] (SURVEY.md
   * §7.3 (b)): custom Expression before any UDF.
   *
-  * Semantics (bit-identical to the HOF form, pinned by CurationSpec's
-  * kernel-vs-HOF test):
+  * Semantics (bit-identical to the HOF form for a non-null filter,
+  * pinned by CurationSpec's kernel-vs-HOF test):
   *  - element hash = SQL `xxhash64(s)` (seed 42; a NULL element hashes
   *    to the seed itself, exactly like the SQL function);
   *  - probe i ∈ [0, k): `pmod(xxhash64(h ^ (i·0x9E3779B97F4A7C15)), B)`
@@ -38,7 +38,10 @@ import org.apache.spark.sql.types.{DataType, LongType}
   *    expression is built rather than wrapping to a wrong position;
   *  - returns the count as BIGINT (the HOF form's final cast); NULL
   *    array → NULL (size(NULL) = NULL under the 3.0+ default this
-  *    repo runs with).
+  *    repo runs with);
+  *  - NULL filter → NULL. Here the HOF form differs: every probe
+  *    reads NULL, `filter` drops every element and it returns 0. The
+  *    CurationSpec test pins both sides of this divergence.
   */
 object BloomKernels {
   private final val Golden = 0x9E3779B97F4A7C15L

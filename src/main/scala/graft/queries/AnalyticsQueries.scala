@@ -11,7 +11,7 @@ import graft.ops.RelOps._
   * operator COMPOSITION, which is where plan quality (join order,
   * broadcast choice, partial agg placement) actually shows.
   */
-object AnalyticsQueries {
+object AnalyticsQueries extends QueryRegistry {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -479,37 +479,27 @@ object AnalyticsQueries {
     // Inter-event-time profile per event type: per-user event-sequence
     // gaps (one partitioned lag window) rolled up to exact interpolated
     // p50/p90 + mean. Integer epoch gaps in, so the only float work is
-    // the final percentile interpolation. Round-10 migration: gaps are
-    // LONG seconds with O(timespan) distinct values, so both quantiles
-    // resolve through one groupedExactLongMulti refinement loop
-    // (ulp-identical interpolation to percentile; hash verified
-    // unchanged under the 2-dp output rounding)
-    // instead of native percentile's single-reducer value-map merge.
-    // Round 11: ONE outer pin of the post-window gap rows now serves
-    // BOTH consumers — the engine (pinned = true, so it skips its own
-    // checkpoint and re-derives the 2-column projection from memory
-    // per round) and the base aggregate (which previously recomputed
-    // the O(events) lag-window shuffle a second time).
+    // the final percentile interpolation; count, mean and both
+    // quantiles share one aggregate over the lag-window output.
+    // percentile-audit: BOUNDED — gaps are LONG seconds, so each
+    // per-group value map holds at most the distinct gaps of the
+    // dataset's time span, not the row count. See SCALE.md
+    // §percentile-audit.
     "q145_gap_stats" -> { (s, dir) =>
       val w = Window.partitionBy("user_id", "event_type")
         .orderBy("sec", "event_id")
-      val gaps = T.load(s, dir, "events")
+      T.load(s, dir, "events")
         .select(F.col("user_id"), F.col("event_type"), F.col("event_id"),
           F.unix_timestamp(F.col("ts")).as("sec"))
         .withColumn("gap", F.col("sec") - F.lag("sec", 1).over(w))
         .filter(F.col("gap").isNotNull)
-        .select("event_type", "gap")
-        .localCheckpoint()
-      val base = gaps.groupBy("event_type")
+        .groupBy("event_type")
         .agg(F.count(F.lit(1)).as("n_gaps"),
-          (F.floor((F.avg("gap")) * 1e2 + 0.5) / 1e2).as("mean_gap"))
-      val qq = graft.ops.Quantiles.groupedExactLongMulti(gaps,
-        Seq("event_type"), "gap", Seq(0.5 -> "__p50", 0.9 -> "__p90"),
-        pinned = true)
-      base.join(qq, "event_type")
+          (F.floor((F.avg("gap")) * 1e2 + 0.5) / 1e2).as("mean_gap"),
+          F.expr("percentile(gap, array(0.5D, 0.9D))").as("__p"))
         .select(F.col("event_type"), F.col("n_gaps"), F.col("mean_gap"),
-          (F.floor((F.col("__p50")) * 1e2 + 0.5) / 1e2).as("p50"),
-          (F.floor((F.col("__p90")) * 1e2 + 0.5) / 1e2).as("p90"))
+          (F.floor(F.col("__p")(0) * 1e2 + 0.5) / 1e2).as("p50"),
+          (F.floor(F.col("__p")(1) * 1e2 + 0.5) / 1e2).as("p90"))
     },
 
     // TPC-H Q15 shape (top supplier): the `WHERE total_revenue =
@@ -712,48 +702,11 @@ object AnalyticsQueries {
         .filter(F.col("id1") < F.col("id2") && F.col("x1") =!= F.col("x2"))
         .withColumn("slope",
           (F.col("y2") - F.col("y1")) / (F.col("x2") - F.col("x1")))
-      // Median by RANK SELECTION instead of `percentile(slope, 0.5)`
-      // (r16): the native percentile is a TypedImperativeAggregate that
-      // builds a per-group value→count OpenHashMap per map task,
-      // serializes the maps through the shuffle, merges, and sorts —
-      // measured +2.5 s of q192's 3.5 s warm wall at sf0.1 (scratch
-      // decomposition: pair fan-out alone 1.0 s, fan-out + avg 1.0 s,
-      // fan-out + percentile 3.4-3.7 s). One ordered window over the
-      // SAME user partitioning ranks the 3.3M slopes in-stream, the two
-      // boundary ranks survive a filter, and the interpolation below is
-      // Spark Percentile.getPercentile's own op order —
-      // `(higher − pos)·a[lo] + (pos − lower)·a[hi]` with pos =
-      // 0.5·(n−1) — so the result is bit-identical to the old plan
-      // (AnalyticsSpec pins equality on real data; oracle re-proven at
-      // sf0.01 AND sf0.1). Rank arithmetic mirrors percentile's
-      // null handling (position over the NON-NULL count, nulls rank
-      // first and are never selected); n_pairs stays the all-rows
-      // count. Per-group state is one row_number — bounded by the
-      // per-user pair cap (≤ C(99,2)), same scale contract as before.
-      val wRank = Window.partitionBy("user_id").orderBy("slope")
-      val wAll = Window.partitionBy("user_id")
-      val ranked = pairs.select(F.col("user_id"), F.col("slope"))
-        .withColumn("rn", F.row_number().over(wRank).cast("long"))
-        .withColumn("na", F.count(F.lit(1)).over(wAll))
-        .withColumn("nv", F.count(F.col("slope")).over(wAll))
-        .withColumn("pos", F.lit(0.5) * (F.col("nv") - 1L).cast("double"))
-        .withColumn("lo", F.floor(F.col("pos")))
-        .withColumn("hi", F.ceil(F.col("pos")))
-        .withColumn("off", F.col("na") - F.col("nv")) // nulls rank first
-      ranked
-        .filter(F.col("slope").isNotNull &&
-          (F.col("rn") === F.col("off") + F.col("lo") + 1L ||
-            F.col("rn") === F.col("off") + F.col("hi") + 1L))
-        .groupBy("user_id")
-        .agg(F.max("na").as("n_pairs"),
-          F.max("pos").as("pos"), F.max("lo").as("lo"), F.max("hi").as("hi"),
-          F.min(F.when(F.col("rn") === F.col("off") + F.col("lo") + 1L,
-            F.col("slope"))).as("vlo"),
-          F.min(F.when(F.col("rn") === F.col("off") + F.col("hi") + 1L,
-            F.col("slope"))).as("vhi"))
-        .withColumn("m", F.when(F.col("hi") === F.col("lo"), F.col("vlo"))
-          .otherwise((F.col("hi").cast("double") - F.col("pos")) * F.col("vlo")
-            + (F.col("pos") - F.col("lo").cast("double")) * F.col("vhi")))
+      // n_pairs counts every pair; the median skips null slopes, and a
+      // user whose slopes are all null keeps its row with a NULL median
+      pairs.groupBy("user_id")
+        .agg(F.count(F.lit(1)).as("n_pairs"),
+          F.expr("percentile(slope, 0.5D)").as("m"))
         .filter(F.col("n_pairs") >= 10)
         .select(F.col("user_id"), F.col("n_pairs"),
           F.round(F.col("m") * 3600, 6).as("slope_per_hour"))

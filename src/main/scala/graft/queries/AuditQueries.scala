@@ -21,7 +21,7 @@ import graft.ops.RelOps.Ordering
   * rounded 6 dp. Deterministic pseudo-randomness is the replayable
   * Knuth-mod hash family (q103/q109/q266 precedent) — never rand().
   */
-object AuditQueries {
+object AuditQueries extends QueryRegistry {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -616,23 +616,21 @@ object AuditQueries {
     // INTEGER cent thresholds (floor(p5)/ceil(p95) of the exact
     // percentile), so winsorized clamps and trim filters sum exact
     // BIGINT cents — no float accumulation anywhere; the four centers
-    // divide once at the end. All three cut quantiles resolve through
-    // ONE groupedExactLongMulti refinement loop (round-10 migration
-    // off native percentile's single-reducer value-map merge); the
-    // interpolation agrees with percentile/quantile_cont to one ulp —
-    // identical under the oracle's 6-dp rounding contract (hashes
-    // verified unchanged). Sketch path: percentile_approx.
+    // divide once at the end. All three cut quantiles come from one
+    // native `percentile` aggregate. Sketch path: percentile_approx.
+    // percentile-audit: BOUNDED — cents of 2-decimal `value`, so each
+    // per-group value map holds at most the cent domain, not the row
+    // count. See SCALE.md §percentile-audit.
     "q329_robust_means" -> { (s, dir) =>
       val ev = T.load(s, dir, "events")
         .select(F.col("event_type"),
           F.expr("cast(floor((value * 100) * 1e0 + 0.5) / 1e0 as bigint)").as("cents"))
-      val cuts = graft.ops.Quantiles.groupedExactLongMulti(
-          ev, Seq("event_type"), "cents",
-          Seq(0.05 -> "__q05", 0.95 -> "__q95", 0.5 -> "__q50"))
+      val cuts = ev.groupBy("event_type")
+        .agg(F.expr("percentile(cents, array(0.05D, 0.95D, 0.5D))").as("__q"))
         .select(F.col("event_type"),
-          F.expr("cast(floor(__q05) as bigint)").as("lo"),
-          F.expr("cast(ceil(__q95) as bigint)").as("hi"),
-          F.expr("floor((__q50 / 100) * 1e6 + 0.5) / 1e6").as("median"))
+          F.expr("cast(floor(__q[0]) as bigint)").as("lo"),
+          F.expr("cast(ceil(__q[1]) as bigint)").as("hi"),
+          F.expr("floor((__q[2] / 100) * 1e6 + 0.5) / 1e6").as("median"))
       ev.join(F.broadcast(cuts), "event_type")
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).as("n"),
@@ -1015,56 +1013,42 @@ object AuditQueries {
         .orderBy("stage")
     },
 
-    // GROUPED exact quantile at scale — closes the one documented
-    // single-node bottleneck: native `percentile()` merges an
-    // O(distinct-values-per-group) map on one reducer, and a
-    // per-group sort shuffles the whole column. `groupedExactLong`
-    // (ops/Quantiles.scala) runs iterative histogram refinement with
-    // ALL per-group search state in the plan — a (group, rank, lo,
-    // hi, offset) relation narrowing 1024× per round, zero driver
-    // state, zero value collects (integer domains close when every
-    // bin is a single value; 3-4 rounds for cents). Interpolation
-    // matches percentile/quantile_cont bit-for-bit, which is exactly
-    // what this query's oracle asserts.
+    // GROUPED exact quantile over an integer domain: both targets of
+    // the cents image from one native `percentile` aggregate, whose
+    // (1-g)·a[k] + g·a[k+1] interpolation the oracle's quantile_cont
+    // matches under the 6-dp rounding.
+    // percentile-audit: BOUNDED — each per-group value map holds at
+    // most the cent domain of `value`, not the row count. See SCALE.md
+    // §percentile-audit.
     "q339_grouped_quantile" -> { (s, dir) =>
-      val ev = T.load(s, dir, "events")
+      T.load(s, dir, "events")
+        .groupBy("event_type")
+        .agg(F.expr("percentile(cast(round(value * 100) as bigint), " +
+          "array(0.5D, 0.9D))").as("__q"))
         .select(F.col("event_type"),
-          F.expr("cast(round(value * 100) as bigint)").as("cents"))
-      // round 10: both targets through ONE shared refinement loop
-      // (groupedExactLongMulti) — AuditSpec proves multi == the old
-      // per-target singles exactly, so the hash is unchanged
-      graft.ops.Quantiles.groupedExactLongMulti(ev, Seq("event_type"),
-          "cents", Seq(0.5 -> "p50c", 0.9 -> "p90c"))
-        .select(F.col("event_type"),
-          F.expr("round(p50c / 100, 6)").as("p50"),
-          F.expr("round(p90c / 100, 6)").as("p90"))
+          F.expr("round(__q[0] / 100, 6)").as("p50"),
+          F.expr("round(__q[1] / 100, 6)").as("p90"))
         .orderBy("event_type")
     },
 
-    // GROUPED exact quantile for DOUBLE domains — the float sibling
-    // q339 left open (verdict r8/r9 task 3): revenue
-    // l_extendedprice·(1−l_discount) is a continuous double, so there
-    // is no integer-bin exhaustion and the old fallback was exactly
-    // the native percentile this engine retires. groupedExactDoubleMulti
-    // keeps all search state in-plan and finishes narrow targets with
-    // an in-plan per-(group, rank) sort over ≤4096 candidate rows —
-    // zero driver collects, zero single-partition exchanges (PLANS
-    // single=0). Both engines compute bit-identical revenue doubles
-    // and the same lo + g·(hi−lo) interpolation; round-6 output is
-    // the repo's standard float contract.
+    // GROUPED exact quantile over a DOUBLE domain: revenue
+    // l_extendedprice·(1−l_discount), four targets from one native
+    // `percentile` aggregate; round-6 output is the repo's standard
+    // float contract.
+    // percentile-audit: BOUNDED — revenue is a 2-dp price times one of
+    // 11 2-dp discount factors, so each per-group value map holds at
+    // most 11× the cent domain of l_extendedprice, not the row count.
+    // See SCALE.md §percentile-audit.
     "q344_grouped_double_quantile" -> { (s, dir) =>
-      val li = T.load(s, dir, "lineitem")
+      T.load(s, dir, "lineitem")
+        .groupBy("l_returnflag")
+        .agg(F.expr("percentile(l_extendedprice * (1 - l_discount), " +
+          "array(0.25D, 0.5D, 0.75D, 0.95D))").as("__q"))
         .select(F.col("l_returnflag"),
-          F.expr("l_extendedprice * (1 - l_discount)").as("rev"))
-      graft.ops.Quantiles.groupedExactDoubleMulti(li,
-          Seq("l_returnflag"), "rev",
-          Seq(0.25 -> "__q1", 0.5 -> "__q2", 0.75 -> "__q3",
-            0.95 -> "__q4"))
-        .select(F.col("l_returnflag"),
-          F.expr("round(__q1, 6)").as("p25"),
-          F.expr("round(__q2, 6)").as("p50"),
-          F.expr("round(__q3, 6)").as("p75"),
-          F.expr("round(__q4, 6)").as("p95"))
+          F.expr("round(__q[0], 6)").as("p25"),
+          F.expr("round(__q[1], 6)").as("p50"),
+          F.expr("round(__q[2], 6)").as("p75"),
+          F.expr("round(__q[3], 6)").as("p95"))
         .orderBy("l_returnflag")
     },
 

@@ -13,7 +13,7 @@ import graft.ops.RelOps._
   * BOTH sides so parallel-summation float noise cannot flip the driver's
   * canonical hash.
   */
-object CoreQueries {
+object CoreQueries extends QueryRegistry {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // TPC-H Q1 shape: pushed date filter → partial/final hash aggregate.

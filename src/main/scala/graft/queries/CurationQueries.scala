@@ -22,7 +22,7 @@ import graft.text.{Decontam, PII, TextOps}
   * emits the exact values and literal TRUE, so a sketch drifting out of
   * tolerance fails the hash gate deterministically.
   */
-object CurationQueries {
+object CurationQueries extends QueryRegistry {
 
   // ---- shared DuckDB fragments ---------------------------------------
 

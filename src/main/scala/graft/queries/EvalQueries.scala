@@ -28,7 +28,7 @@ import org.apache.spark.sql.GraftReleaseBridge
   * reports a large-scale training-data pipeline ships; each entry is
   * oracle-gated like every other wave.
   */
-object EvalQueries {
+object EvalQueries extends QueryRegistry {
 
   private val duckToks =
     "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x != '')"

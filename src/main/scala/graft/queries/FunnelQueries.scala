@@ -15,7 +15,7 @@ import graft.text.{Decontam, TextOps}
   * MinHash LSH, q90 curation, q128 Gopher rules, q134 overlap
   * decontam, q130 DSIR).
   */
-object FunnelQueries {
+object FunnelQueries extends QueryRegistry {
 
   // ---- shared DuckDB fragments (same literals as PipelineQueries /
   // CurationQueries — the cross-file single source of truth is the

@@ -20,7 +20,7 @@ import org.apache.spark.sql.GraftReleaseBridge
   * only inside the final closed-form projection; round published
   * floats to 6 dp on both engines.
   */
-object MetricQueries {
+object MetricQueries extends QueryRegistry {
 
   private val duckToks =
     "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x != '')"

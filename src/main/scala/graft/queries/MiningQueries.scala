@@ -15,7 +15,7 @@ import org.apache.spark.sql.GraftReleaseBridge
   * math integer-exact until a final rounded division so the DuckDB
   * oracle hash-matches bit-for-bit.
   */
-object MiningQueries {
+object MiningQueries extends QueryRegistry {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -11,7 +11,7 @@ import graft.plans.{MathFunctions, SpecialMath}
   * membership predicates, set operations, string describe, product
   * aggregate — closing the remaining SURVEY §2 inventory lines.
   */
-object MiscQueries {
+object MiscQueries extends QueryRegistry {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -231,32 +231,26 @@ object MiscQueries {
     },
 
     // Median absolute deviation per group (reference mad export,
-    // src/operators.jl:52): two exact-median passes composed at plan
-    // level. Round-10 migration: both passes run groupedExactLong
-    // over exact integer images (cents, then half-cents for the
-    // deviations — 2·median is integer even when the median
-    // interpolates between two cents) instead of native percentile's
-    // single-reducer value-map merge over ~5.5e7 distinct doubles.
-    // True values land on the 0.0025-dollar grid, so round(·,4) is
-    // ulp-safe and the oracle hash unchanged.
+    // src/operators.jl:52): two native exact-median passes composed at
+    // plan level over exact integer images (cents, then half-cents for
+    // the deviations — 2·median is integer even when the median
+    // interpolates between two cents). True values land on the
+    // 0.0025-dollar grid, so round(·,4) is ulp-safe.
+    // percentile-audit: BOUNDED — each per-group value map holds at
+    // most the cent domain of o_totalprice (≤2·that for the half-cent
+    // deviations), not the row count. See SCALE.md §percentile-audit.
     "q69_mad" -> { (s, dir) =>
-      // ONE pin serves both engine passes (round-11 verdict task 1):
-      // the deviation projection is a broadcast join over the pinned
-      // cents, so each refinement round of pass 2 re-derives it from
-      // memory instead of paying a second O(orders) checkpoint write
       val o = T.load(s, dir, "orders")
         .select(F.col("o_orderstatus"),
           F.expr("cast(floor((o_totalprice * 100) * 1e0 + 0.5) / 1e0 as bigint)").as("__c"))
-        .localCheckpoint()
-      val med = graft.ops.Quantiles.groupedExactLong(
-        o, Seq("o_orderstatus"), "__c", 0.5, "__medc", pinned = true)
-      val adev = o.join(F.broadcast(med), Seq("o_orderstatus"))
+      val med = o.groupBy("o_orderstatus")
+        .agg(F.expr("percentile(__c, 0.5D)").as("__medc"))
+      o.join(F.broadcast(med), Seq("o_orderstatus"))
         .select(F.col("o_orderstatus"),
           F.expr("abs(2L * __c - cast(floor((2 * __medc) * 1e0 + 0.5) / 1e0 as bigint))")
             .as("__a2")) // half-cent units, exact longs
-      graft.ops.Quantiles.groupedExactLong(
-          adev, Seq("o_orderstatus"), "__a2", 0.5, "__mad2",
-          pinned = true)
+        .groupBy("o_orderstatus")
+        .agg(F.expr("percentile(__a2, 0.5D)").as("__mad2"))
         .select(F.col("o_orderstatus"),
           F.expr("floor((__mad2 / 200) * 1e4 + 0.5) / 1e4").as("mad"))
     },

@@ -16,7 +16,7 @@ import graft.similarity.Knn
   * ordering goes through the distributed prefix-sum (never a
   * single-task window).
   */
-object MlQueries {
+object MlQueries extends QueryRegistry {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -21,7 +21,7 @@ import graft.text.TextOps
   * the IVF routing decision (rounded centroid cosine, q46), so every
   * query here is hash-checked.
   */
-object PipelineQueries {
+object PipelineQueries extends QueryRegistry {
 
   // ---- shared DuckDB fragments ---------------------------------------
 

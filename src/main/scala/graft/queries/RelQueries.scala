@@ -8,7 +8,7 @@ import graft.ops.SeqOps._
 /** Wave-2a: remaining join kinds, multi-key joins, semi/anti, sortperm,
   * window/sequence ops, hcat, dedup — SURVEY.md §2.3, §2.5, §2.6, §2.7.
   */
-object RelQueries {
+object RelQueries extends QueryRegistry {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -10,7 +10,7 @@ import graft.T
   * with a mergeable-HLL gate. Counts stay integer-exact until one
   * final rounded division so the DuckDB oracle hash-matches.
   */
-object RetrievalQueries {
+object RetrievalQueries extends QueryRegistry {
 
   /** (doc_id, phrase) positional word-trigram relation — the inverted
     * index both q220 and RetrievalSpec rank over. */

@@ -25,7 +25,7 @@ import graft.similarity.Knn
   * the final projection, and identical formula TEXT on both sides for
   * every double expression.
   */
-object ScoreQueries {
+object ScoreQueries extends QueryRegistry {
 
   // ---- shared DuckDB fragments (same literals as PipelineQueries —
   // the single source of truth is the TextKernels tokenize contract)

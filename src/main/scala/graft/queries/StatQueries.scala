@@ -11,7 +11,7 @@ import graft.ops.StatOps._
   * quantiles, colwise, cut/paste, Kleene any/all, NA ops, scalar
   * math/string/json/date functions — SURVEY.md §2.4, §2.8, §2.9.
   */
-object StatQueries {
+object StatQueries extends QueryRegistry {
 
   private val orderStatuses = Seq("F", "O", "P")
 
@@ -29,11 +29,8 @@ object StatQueries {
     // money (`value`, then |value−med| which lives on the half-cent
     // grid), so each per-group value map is capped by the cent domain
     // (≤100·range+1 ≈ 5.7e4 / ≤2·that for the deviations), not the
-    // row count. Kept native (vs groupedExactLong) because med/mad
-    // feed a strict |rz|>3 row filter where an engine-side ulp
-    // difference could flip a knife-edge row; the bounded domain makes
-    // the merge map small at any scale. See SCALE.md
-    // §percentile-audit.
+    // row count, so the merge map stays small at any scale. See
+    // SCALE.md §percentile-audit.
     "q190_mad_outliers" -> { (s, dir) =>
       val ev = T.load(s, dir, "events")
         .select("event_id", "event_type", "value")
@@ -180,25 +177,22 @@ object StatQueries {
     },
 
     // grouped exact quantiles (reference colmedians + distributed
-    // quantile, src/dataframe_blocks.jl:263-356). Round-10 migration:
-    // o_totalprice is 2-dp money, so its exact-cents image is a LONG
-    // domain and all three quartiles resolve through one
-    // groupedExactLongMulti refinement loop instead of native
-    // percentile's single-reducer value-map merge (O(distinct prices
-    // per status) ≈ 5.5e7 at TPC-H bounds — ~1 GB/group maps). The
-    // quarter-rank interpolation of 2-dp values lands on the 4-decimal
-    // grid, so round(·,4) is ulp-safe and the oracle hash unchanged.
+    // quantile, src/dataframe_blocks.jl:263-356): one native
+    // `percentile` over the exact-cents image of o_totalprice, all three
+    // quartiles in one aggregate. Integer cents interpolate exactly at
+    // quarter ranks, so round(·,4) after the /100 is ulp-safe.
+    // percentile-audit: BOUNDED — each per-group value map holds at
+    // most the cent domain of o_totalprice, not the row count. See
+    // SCALE.md §percentile-audit.
     "q24_quantiles" -> { (s, dir) =>
-      val o = T.load(s, dir, "orders")
-        .select(F.col("o_orderstatus"),
-          F.expr("cast(round(o_totalprice * 100) as bigint)")
-            .as("__cents"))
-      graft.ops.Quantiles.groupedExactLongMulti(o, Seq("o_orderstatus"),
-          "__cents", Seq(0.25 -> "__q1", 0.5 -> "__q2", 0.75 -> "__q3"))
+      T.load(s, dir, "orders")
+        .groupBy("o_orderstatus")
+        .agg(F.expr("percentile(cast(round(o_totalprice * 100) as bigint), " +
+          "array(0.25D, 0.5D, 0.75D))").as("__q"))
         .basedOn("o_orderstatus" -> "o_orderstatus",
-          "q25" -> "round(__q1 / 100, 4)",
-          "q50" -> "round(__q2 / 100, 4)",
-          "q75" -> "round(__q3 / 100, 4)")
+          "q25" -> "round(__q[0] / 100, 4)",
+          "q50" -> "round(__q[1] / 100, 4)",
+          "q75" -> "round(__q[2] / 100, 4)")
     },
 
     // cut: numeric binning to interval labels (reference cut,

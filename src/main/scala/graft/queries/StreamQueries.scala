@@ -11,7 +11,7 @@ import graft.streaming.DataStream
   * the driver's batch-style Verify/Bench harness can consume it; the
   * oracle is the equivalent whole-input batch SQL.
   */
-object StreamQueries {
+object StreamQueries extends QueryRegistry {
 
   private def uniq(prefix: String) = s"${prefix}_${System.nanoTime()}"
 
@@ -75,7 +75,6 @@ object StreamQueries {
     val prev = s.conf.get(key)
     s.conf.set(key, math.min(8, prev.toInt).toString)
     try {
-      val t0 = System.nanoTime()
       val q = df.writeStream.outputMode(mode)
         .format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -83,27 +82,6 @@ object StreamQueries {
       // AvailableNow terminates on its own; the bound is insurance so a
       // wedged stream cannot stall the driver's whole verify run.
       q.awaitTermination(600000L)
-      // GRAFT_STREAM_PROFILE=1: decompose the wall into micro-batch
-      // work (triggerExecution, with its addBatch/stateOps breakdown)
-      // vs everything else (query planning/start/teardown fixed cost)
-      // — the r14 verdict's streaming-fixed-cost question, answered by
-      // measurement instead of guesswork. Diagnostic only; default off.
-      if (sys.env.get("GRAFT_STREAM_PROFILE").contains("1")) {
-        val wall = (System.nanoTime() - t0) / 1e6
-        val ps = q.recentProgress
-        val trig = ps.map(p => Option(p.durationMs.get("triggerExecution"))
-          .map(_.toLong).getOrElse(0L)).sum
-        val detail = {
-          import scala.jdk.CollectionConverters._
-          ps.flatMap(_.durationMs.asScala.toSeq
-              .map { case (k, v) => k -> v.toLong })
-            .groupBy(_._1).map { case (k, v) => s"$k=${v.map(_._2).sum}" }
-            .toSeq.sorted.mkString(" ")
-        }
-        System.err.println(f"[stream-profile] $name: wall=$wall%.0fms " +
-          f"batches=${ps.length} trigger=${trig}ms " +
-          f"setup+teardown=${wall - trig}%.0fms | $detail")
-      }
       q.stop()
     } finally s.conf.set(key, prev)
     s.table(name)
@@ -189,7 +167,7 @@ object StreamQueries {
     * is the only shape that survives. The gate reads the key
     * DIMENSION's row count — q341's key is an FK into the part
     * catalog, and a parquet count(*) is footer metadata, not a scan —
-    * the same cheap-observable pattern as the quantile engine's
+    * the same cheap-observable pattern as `Quantiles.exactMulti`'s
     * n > k·collectLimit auto-sketch gate. Read per call (a def, not a
     * cached val) so an operator redeploy with a new allowance takes
     * effect without a JVM bounce. */

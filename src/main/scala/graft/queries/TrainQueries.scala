@@ -21,7 +21,7 @@ import org.apache.spark.sql.GraftReleaseBridge
   * character counts), so engine and oracle are bit-identical with no
   * rounding care.
   */
-object TrainQueries {
+object TrainQueries extends QueryRegistry {
 
   private val duckToks =
     "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x != '')"

@@ -351,39 +351,6 @@ class AnalyticsSpec extends SparkSpec {
   }
 
 
-  test("q192 rank-selected median == percentile(slope, 0.5), bit for bit") {
-    // the r16 rewrite replaced the native percentile value-map agg with
-    // rank selection + Percentile.getPercentile's own interpolation op
-    // order; this is the executable spec pinning the two formulations
-    // on the REAL pair relation (both SFs' events land here via sf)
-    val ev = T.load(spark, sf, "events")
-      .select(F.col("user_id"), F.col("event_id"),
-        F.unix_timestamp(F.col("ts")).as("x"), F.col("value").as("y"))
-    val a = ev.toDF("user_id", "id1", "x1", "y1")
-    val b = ev.toDF("user_id", "id2", "x2", "y2")
-    val pairs = a.join(b, Seq("user_id"))
-      .filter(F.col("id1") < F.col("id2") && F.col("x1") =!= F.col("x2"))
-      .withColumn("slope",
-        (F.col("y2") - F.col("y1")) / (F.col("x2") - F.col("x1")))
-    val viaPercentile = pairs.groupBy("user_id")
-      .agg(F.count(F.lit(1)).as("n_pairs"),
-        F.expr("percentile(slope, 0.5D)").as("m"))
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-      .toMap
-    val got = SparkEntry.queries("q192_theilsen")(spark, sf)
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-      .toMap
-    val want = viaPercentile.collect { case (u, (n, m)) if n >= 10 =>
-      // the query's own final projection over the percentile value
-      (u, (n, BigDecimal(m * 3600)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
-    }
-    assert(got.keySet === want.keySet)
-    got.foreach { case (u, (n, s)) =>
-      assert((n, s) === want(u), s"user $u")
-    }
-  }
-
   test("q187 EWMA equals driver-side pandas-style adjust=true smoothing") {
     val counts = T.load(spark, sf, "events")
       .groupBy(F.col("event_type"), F.to_date(F.col("ts")).as("day"))

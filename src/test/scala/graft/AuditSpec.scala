@@ -330,201 +330,90 @@ class AuditSpec extends SparkSpec {
     }
   }
 
-  test("q339/groupedExactLong matches percentile() on adversarial groups") {
-    import spark.implicits._
-    // many groups, heavy duplicates, singleton groups, negative
-    // values — every branch of the in-plan histogram refinement
-    val rows = (0 until 200).flatMap { g =>
-      val n = 1 + (g % 17)
-      (0 until n).map(i => (g.toLong, ((i * 7919 + g) % 23).toLong - 5))
+  test("grouped quantile queries equal driver-side sorted-rank interpolation") {
+    // Every grouped exact quantile runs on native `percentile`, which
+    // interpolates (1−g)·a[k] + g·a[k+1]; the reference here is the
+    // oracle's quantile_cont form a[k] + g·(a[k+1] − a[k]) over the
+    // group's sorted values, under each query's own rounding. Exact
+    // equality: a one-ulp interpolation difference that crosses a
+    // rounding or floor boundary fails the site.
+    def qcont(s: IndexedSeq[Double], q: Double): Double = {
+      val pos = q * (s.length - 1)
+      val (lo, hi) = (s(pos.floor.toInt), s(pos.ceil.toInt))
+      lo + (pos - pos.floor) * (hi - lo)
     }
-    val df = rows.toDF("g", "v")
-    for (q <- Seq(0.0, 0.25, 0.5, 0.9, 1.0)) {
-      val got = graft.ops.Quantiles
-        .groupedExactLong(df, Seq("g"), "v", q, "qv")
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val want = df.groupBy("g")
-        .agg(F.expr(s"percentile(v, $q)").as("qv"))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(got.keySet == want.keySet, s"group sets differ at q=$q")
-      got.foreach { case (g, v) =>
-        // percentile() interpolates (1-f)*lo + f*hi; groupedExactLong
-        // (like quantile_cont) uses lo + f*(hi-lo) — equal to within
-        // one ulp, and identical at the repo's 6-dp oracle contract
-        assert(math.abs(v - want(g)) <= 1e-9 * math.max(1.0, math.abs(want(g))),
-          s"q=$q group=$g: $v != ${want(g)}")
-      }
-    }
-  }
-
-  test("groupedExactLongMulti: shared loop matches per-target singles " +
-      "and native percentile") {
-    import spark.implicits._
-    // multi-target rank state shares one refinement loop; duplicate
-    // ranks across targets (tiny groups where p50's ceil == p90's
-    // floor) must dedup without losing either target's answer
-    val rows = (0 until 60).flatMap { g =>
-      val n = 1 + (g % 9) // singletons through 9-row groups
-      (0 until n).map(i => (g.toLong, ((i * 31 + g * 7) % 13).toLong - 3))
-    }
-    val df = rows.toDF("g", "v")
-    val qs = Seq(0.05 -> "a", 0.5 -> "b", 0.9 -> "c")
-    val multi = graft.ops.Quantiles
-      .groupedExactLongMulti(df, Seq("g"), "v", qs)
-      .collect().map(r => r.getLong(0) ->
-        (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
-    // single-target calls (the q339-era API, now a delegation)
-    val singles = qs.map { case (q, _) =>
-      graft.ops.Quantiles.groupedExactLong(df, Seq("g"), "v", q, "qv")
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    }
-    // native percentile oracle
-    val native = df.groupBy("g").agg(
-        F.expr("percentile(v, 0.05)").as("a"),
-        F.expr("percentile(v, 0.5)").as("b"),
-        F.expr("percentile(v, 0.9)").as("c"))
-      .collect().map(r => r.getLong(0) ->
-        (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
-    assert(multi.keySet == native.keySet)
-    multi.foreach { case (g, (a, b, c)) =>
-      // multi == single EXACTLY (same arithmetic, shared loop)
-      assert(a == singles(0)(g) && b == singles(1)(g) && c == singles(2)(g),
-        s"multi/single diverge for group $g")
-      val (na, nb, nc) = native(g)
-      Seq((a, na), (b, nb), (c, nc)).foreach { case (got, want) =>
-        assert(math.abs(got - want) <= 1e-9 * math.max(1.0, math.abs(want)),
-          s"group $g: $got != $want")
-      }
-    }
-  }
-
-  test("groupedExactDoubleMulti: matches native percentile incl. the " +
-      "in-plan endgame sort path") {
-    import spark.implicits._
-    // continuum values (no integer-bin exhaustion — the float-only
-    // code path), duplicate-heavy groups (must close in-loop via
-    // bmin == bmax), singletons; k=8 and endgame=4 force several
-    // refinement rounds AND the per-(group, rank) candidate-sort
-    // endgame on the continuum groups
-    val rows = (0 until 40).flatMap { g =>
-      val n = 1 + (g % 11) * 3
-      (0 until n).map { i =>
-        val v = if (g % 3 == 0) (i % 4).toDouble
-        else math.sin(i * 2.7 + g) * 100
-        (g.toLong, v)
-      }
-    }
-    val df = rows.toDF("g", "v")
-    val qs = Seq(0.05 -> "a", 0.5 -> "b", 0.95 -> "c")
-    val got = graft.ops.Quantiles
-      .groupedExactDoubleMulti(df, Seq("g"), "v", qs, k = 8, endgame = 4)
-      .collect().map(r => r.getLong(0) ->
-        (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
-    val native = df.groupBy("g").agg(
-        F.expr("percentile(v, 0.05)").as("a"),
-        F.expr("percentile(v, 0.5)").as("b"),
-        F.expr("percentile(v, 0.95)").as("c"))
-      .collect().map(r => r.getLong(0) ->
-        (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
-    assert(got.keySet == native.keySet, "group sets differ")
-    got.foreach { case (g, (a, b, c)) =>
-      val (na, nb, nc) = native(g)
-      Seq((a, na), (b, nb), (c, nc)).foreach { case (x, want) =>
-        assert(math.abs(x - want) <= 1e-9 * math.max(1.0, math.abs(want)),
-          s"group $g: $x != $want")
-      }
-    }
-  }
-
-  test("warm-start (GK bracket) groups match native percentile, " +
-      "both engines") {
-    import spark.implicits._
-    // n = 2500 per group ≥ WarmMinN → the round-11 percentile_approx
-    // warm bracket activates and round 1 count-verifies it through
-    // the sentinel-bin path. Group shapes chosen to stress it:
-    //  g=0 dense wide domain (bracket ≈ tens of distinct values —
-    //      the one-round fast path), g=1 duplicate-heavy (3 distinct
-    //      values — the bracket COLLAPSES to one value and must still
-    //      close verified, never trusted), g=2 skewed tail (extreme
-    //      outliers far outside every bracket → sentinel bins carry
-    //      almost all mass)
-    assert(graft.ops.Quantiles.WarmMinN <= 2500,
-      "test data no longer reaches the warm path")
-    val rows = (0 until 3).flatMap { g =>
-      (0 until 2500).map { i =>
-        val v = g match {
-          case 0 => ((i * 7919) % 100000).toLong
-          case 1 => (i % 3).toLong
-          case _ => if (i < 2400) i.toLong else i * 1000000L
+    def halfUp(x: Double, d: Int): Double =
+      BigDecimal(x).setScale(d, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def floorForm(x: Double, p: Double): Double = math.floor(x * p + 0.5) / p
+    // (group, value) pairs of one projected column, sorted per group
+    def values(table: String, key: String,
+               v: String): Map[String, IndexedSeq[Double]] =
+      T.load(spark, sf, table).select(F.col(key), F.expr(v))
+        .collect().toSeq.groupBy(_.getString(0))
+        .map { case (k, rs) =>
+          k -> rs.map(r => r.getAs[Number](1).doubleValue).sorted.toIndexedSeq }
+    // q145's input: per-(user, type) gaps between successive events
+    def gaps: Map[String, IndexedSeq[Double]] =
+      T.load(spark, sf, "events")
+        .select(F.col("user_id"), F.col("event_type"), F.col("event_id"),
+          F.unix_timestamp(F.col("ts")))
+        .collect().toSeq
+        .groupBy(r => (r.getLong(0), r.getString(1)))
+        .toSeq.flatMap { case ((_, t), rs) =>
+          val secs = rs.map(r => (r.getLong(3), r.getLong(2))).sorted.map(_._1)
+          secs.zip(secs.drop(1)).map { case (a, b) => t -> (b - a).toDouble }
         }
-        (g.toLong, v)
-      }
-    }
-    val df = rows.toDF("g", "v")
-    val qs = Seq(0.05 -> "a", 0.5 -> "b", 0.95 -> "c")
-    val gotL = graft.ops.Quantiles
-      .groupedExactLongMulti(df, Seq("g"), "v", qs)
-      .collect().map(r => r.getLong(0) ->
-        (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
-    // double engine over a fractional image of the same data
-    val ddf = df.select(F.col("g"),
-      (F.col("v") + (F.col("v") % 7) / 7.0).as("v"))
-    val gotD = graft.ops.Quantiles
-      .groupedExactDoubleMulti(ddf, Seq("g"), "v", qs)
-      .collect().map(r => r.getLong(0) ->
-        (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
-    def check(got: Map[Long, (Double, Double, Double)],
-              src: org.apache.spark.sql.DataFrame): Unit = {
-      val native = src.groupBy("g").agg(
-          F.expr("percentile(v, 0.05)").as("a"),
-          F.expr("percentile(v, 0.5)").as("b"),
-          F.expr("percentile(v, 0.95)").as("c"))
-        .collect().map(r => r.getLong(0) ->
-          (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
-      assert(got.keySet == native.keySet)
-      got.foreach { case (g, (a, b, c)) =>
-        val (na, nb, nc) = native(g)
-        Seq((a, na), (b, nb), (c, nc)).foreach { case (x, want) =>
-          assert(math.abs(x - want) <=
-            1e-9 * math.max(1.0, math.abs(want)),
-            s"group $g: $x != $want")
-        }
-      }
-    }
-    check(gotL, df)
-    check(gotD, ddf)
-  }
+        .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).sorted.toIndexedSeq }
 
-  test("groupedExactLong: full-long-span domains (decimal bin guard)") {
-    import spark.implicits._
-    // Spans that wrap the old int64 bin arithmetic: (v−lo)·1024
-    // overflows once span > 2^63/1024 ≈ 9e15, and hi−lo+1 itself
-    // overflows for the Long.Min..Long.Max group. The decimal(38,0)
-    // bin path must resolve these exactly; before the fix the rank
-    // row silently vanished (group missing) or converge require'd.
-    val rows = Seq(
-      // group 0: full long range — hi−lo+1 wraps in int64
-      (0L, Long.MinValue), (0L, -1L), (0L, 7L), (0L, Long.MaxValue),
-      // group 1: span ~4.6e18 — (v−lo)·k wraps in int64
-      (1L, -2300000000000000000L), (1L, 0L),
-      (1L, 1500000000000000000L), (1L, 2300000000000000000L),
-      // group 2: narrow control group (old path was already correct)
-      (2L, 10L), (2L, 20L), (2L, 30L))
-    val df = rows.toDF("g", "v")
-    for (q <- Seq(0.0, 0.5, 1.0)) {
-      val got = graft.ops.Quantiles
-        .groupedExactLong(df, Seq("g"), "v", q, "qv")
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val want = rows.groupBy(_._1).map { case (g, vs) =>
-        val s = vs.map(_._2).sorted
-        val pos = q * (s.length - 1)
-        val (lo, hi) = (s(pos.toInt), s(math.ceil(pos).toInt))
-        g -> (lo.toDouble + (pos - pos.toInt) * (hi.toDouble - lo.toDouble))
-      }
-      assert(got.keySet == Set(0L, 1L, 2L), s"group lost at q=$q: $got")
-      got.foreach { case (g, v) =>
-        assert(math.abs(v - want(g)) <= 1e-9 * math.max(1.0, math.abs(want(g))),
-          s"q=$q group=$g: $v != ${want(g)}")
+    case class Site(query: String, key: String, cols: Seq[String],
+                    input: Map[String, IndexedSeq[Double]],
+                    ref: IndexedSeq[Double] => Seq[Double])
+    val sites = Seq(
+      Site("q24_quantiles", "o_orderstatus", Seq("q25", "q50", "q75"),
+        values("orders", "o_orderstatus",
+          "cast(round(o_totalprice * 100) as bigint)"),
+        s => Seq(0.25, 0.5, 0.75).map(q => halfUp(qcont(s, q) / 100, 4))),
+      Site("q69_mad", "o_orderstatus", Seq("mad"),
+        values("orders", "o_orderstatus",
+          "cast(floor((o_totalprice * 100) * 1e0 + 0.5) / 1e0 as bigint)"),
+        s => {
+          val m2 = floorForm(2 * qcont(s, 0.5), 1.0)
+          val dev = s.map(c => math.abs(2 * c - m2)).sorted
+          Seq(floorForm(qcont(dev, 0.5) / 200, 1e4))
+        }),
+      Site("q145_gap_stats", "event_type", Seq("p50", "p90"), gaps,
+        s => Seq(0.5, 0.9).map(q => floorForm(qcont(s, q), 1e2))),
+      Site("q329_robust_means", "event_type",
+        Seq("median", "winsorized_mean", "trimmed_mean"),
+        values("events", "event_type",
+          "cast(floor((value * 100) * 1e0 + 0.5) / 1e0 as bigint)"),
+        s => {
+          val (lo, hi) = (math.floor(qcont(s, 0.05)), math.ceil(qcont(s, 0.95)))
+          val kept = s.filter(c => c >= lo && c <= hi)
+          Seq(floorForm(qcont(s, 0.5) / 100, 1e6),
+            floorForm(s.map(c => math.max(math.min(c, hi), lo)).sum
+              / s.length / 100, 1e6),
+            if (kept.isEmpty) 0.0
+            else floorForm(kept.sum / kept.length / 100, 1e6))
+        }),
+      Site("q339_grouped_quantile", "event_type", Seq("p50", "p90"),
+        values("events", "event_type",
+          "cast(round(value * 100) as bigint)"),
+        s => Seq(0.5, 0.9).map(q => halfUp(qcont(s, q) / 100, 6))),
+      Site("q344_grouped_double_quantile", "l_returnflag",
+        Seq("p25", "p50", "p75", "p95"),
+        values("lineitem", "l_returnflag",
+          "l_extendedprice * (1 - l_discount)"),
+        s => Seq(0.25, 0.5, 0.75, 0.95).map(q => halfUp(qcont(s, q), 6))))
+
+    for (site <- sites) {
+      val want = site.input.map { case (k, s) => k -> site.ref(s) }
+      val got = SparkEntry.queries(site.query)(spark, sf).collect()
+        .map(r => r.getAs[String](site.key) ->
+          site.cols.map(c => r.getAs[Double](c))).toMap
+      assert(got.keySet == want.keySet, s"${site.query}: group sets differ")
+      got.foreach { case (k, vs) =>
+        assert(vs == want(k), s"${site.query} group $k: $vs != ${want(k)}")
       }
     }
   }

@@ -180,10 +180,8 @@ class CurationSpec extends SparkSpec {
       (900002L, Seq("", "alpha beta gamma delta epsilon")),
       (900003L, Seq("x y z w v"))).toDF("doc_id", "sh")
     val docs = real.unionByName(weird)
-    for ((bits, k) <- Seq((1 << 20, 5), (64, 5))) {
-      val bf = graft.text.Bloom.build(
-        docs.filter(F.col("doc_id") % 7 === 0), "sh", bits, k)
-      val both = docs.crossJoin(F.broadcast(bf)).select(
+    def probe(withBf: org.apache.spark.sql.DataFrame, bits: Int, k: Int) =
+      withBf.select(
         F.col("doc_id"),
         graft.plans.BloomExpressions.bloomCountHits(
           F.col("sh"), F.col("bf"), bits.toLong, k).as("kern"),
@@ -191,8 +189,21 @@ class CurationSpec extends SparkSpec {
             transform(sh, s -> xxhash64(s)), h ->
             ${graft.text.Bloom.mightContainHashExpr("bf", "h", bits, k)}))
           as bigint)""").as("hof"))
+    for ((bits, k) <- Seq((1 << 20, 5), (64, 5))) {
+      val bf = graft.text.Bloom.build(
+        docs.filter(F.col("doc_id") % 7 === 0), "sh", bits, k)
+      val both = probe(docs.crossJoin(F.broadcast(bf)), bits, k)
       assert(both.filter(F.col("kern") =!= F.col("hof")).count() === 0,
         s"kernel/HOF divergence at bits=$bits")
+    }
+    // a NULL filter is the one stated divergence: the kernel yields
+    // NULL, while the HOF form drops every probe and counts 0
+    val nullBf = probe(weird.withColumn("bf",
+      F.lit(null).cast("array<bigint>")), 64, 5).collect()
+    assert(nullBf.length === 3)
+    nullBf.foreach { r =>
+      assert(r.isNullAt(1), s"kernel on a NULL filter: $r")
+      assert(r.getLong(2) === 0L, s"HOF on a NULL filter: $r")
     }
     // the HOF form casts positions to int; a wider filter is refused
     // up front instead of probing wrapped positions

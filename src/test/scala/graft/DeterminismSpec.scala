@@ -18,8 +18,10 @@ class DeterminismSpec extends SparkSpec {
     "q294_pq",            // Lloyd rounds over 4 subspaces
     "q302_em_mixture",    // EM rounds, 8-dp state
     "q332_markov_stationary", // 8 power iterations, 1e-8-unit sums
-    "q339_grouped_quantile",  // in-plan histogram refinement loop
-    "q344_grouped_double_quantile") // float refinement + in-plan endgame
+    // not iterative: percentile merges per-task value maps in shuffle
+    // arrival order, and its sorted-rank result must not depend on it
+    "q339_grouped_quantile",  // long cents
+    "q344_grouped_double_quantile") // double revenue
 
   private def canon(df: org.apache.spark.sql.DataFrame): Seq[String] = {
     // Bit-exact canonical form: every cell via toString (doubles print

@@ -289,70 +289,4 @@ class PropertySpec extends AnyFunSuite {
       assert(packed.toLongArray().toSeq === expected)
     }
   }
-  test("property: warm-started grouped quantiles equal native percentile") {
-    // round-11 GK warm-start: groups are drawn both under and over
-    // WarmMinN so the SAME sample exercises the warm (sentinel-bin
-    // verified) and classic paths; value shapes cover dup-heavy
-    // (collapsed brackets), wide domains and negatives; quantiles
-    // include the 0/1 extremes
-    val shapeGen = Gen.zip(
-      Gen.listOfN(2, Gen.oneOf(40, 2500, 3100)),
-      Gen.oneOf(1, 2, 3),
-      Gen.listOfN(2, Gen.oneOf(0.0, 0.1, 0.25, 0.5, 0.9, 0.97, 1.0)))
-    forAll(shapeGen, n = 4) { case (sizes, kind, qsRaw) =>
-      val qs = qsRaw.distinct.zipWithIndex.map { case (q, i) => q -> s"o$i" }
-      val rows = sizes.zipWithIndex.flatMap { case (sz, g) =>
-        (0 until sz).map { i =>
-          val v = kind match {
-            case 1 => (i % 7).toLong - 3                  // dup-heavy
-            case 2 => (i.toLong * 1234567L) % 1000000007L // wide
-            case _ => -(i.toLong * 31 % 977)              // negative
-          }
-          (g.toLong, v)
-        }
-      }
-      val df = rows.toDF("g", "v")
-      val native = df.groupBy("g").agg(
-          qs.map { case (q, o) => F.expr(s"percentile(v, $q)").as(o) }.head,
-          qs.drop(1).map { case (q, o) =>
-            F.expr(s"percentile(v, $q)").as(o) }: _*)
-        .collect().map(r => r.getLong(0) ->
-          qs.indices.map(i => r.getDouble(i + 1))).toMap
-      def check(got: Array[org.apache.spark.sql.Row], path: String): Unit = {
-        val m = got.map(r => r.getLong(0) ->
-          qs.indices.map(i => r.getDouble(i + 1))).toMap
-        assert(m.keySet == native.keySet, s"$path group sets differ")
-        m.foreach { case (g, vs) =>
-          vs.zip(native(g)).foreach { case (x, want) =>
-            assert(math.abs(x - want) <=
-              1e-9 * math.max(1.0, math.abs(want)),
-              s"$path g=$g: $x != $want (qs=$qs kind=$kind sizes=$sizes)")
-          }
-        }
-      }
-      check(graft.ops.Quantiles
-        .groupedExactLongMulti(df, Seq("g"), "v", qs).collect(), "long")
-      val ddf = df.select(F.col("g"),
-        (F.col("v") + (F.col("v") % 5) / 8.0).as("v"))
-      val nativeD = ddf.groupBy("g").agg(
-          qs.map { case (q, o) => F.expr(s"percentile(v, $q)").as(o) }.head,
-          qs.drop(1).map { case (q, o) =>
-            F.expr(s"percentile(v, $q)").as(o) }: _*)
-        .collect().map(r => r.getLong(0) ->
-          qs.indices.map(i => r.getDouble(i + 1))).toMap
-      val gotD = graft.ops.Quantiles
-        .groupedExactDoubleMulti(ddf, Seq("g"), "v", qs).collect()
-      val mD = gotD.map(r => r.getLong(0) ->
-        qs.indices.map(i => r.getDouble(i + 1))).toMap
-      assert(mD.keySet == nativeD.keySet, "double group sets differ")
-      mD.foreach { case (g, vs) =>
-        vs.zip(nativeD(g)).foreach { case (x, want) =>
-          assert(math.abs(x - want) <=
-            1e-9 * math.max(1.0, math.abs(want)),
-            s"double g=$g: $x != $want (qs=$qs kind=$kind)")
-        }
-      }
-    }
-  }
-
 }
