@@ -35,23 +35,30 @@ object Session {
   * column-pruned + filter-pushed by Catalyst.
   */
 object T {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Older driver-generated events.parquet carried TIMESTAMP(NANOS),
-    // which the vectorized reader rejects; with nanosAsLong those files
-    // surface ts as LongType and we rebuild a microsecond timestamp
-    // (the data has no sub-microsecond component, so lossless). Newer
-    // generations write TIMESTAMP(MICROS) directly — detect by the
-    // loaded type so both layouts read identically.
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    read(spark, name)(spark.read.parquet(s"$dir/$name.parquet"))
+
+  /** Runs `open` (a batch or stream reader over table `name`) with the
+    * parquet conf every table is read under, and owns the events `ts`
+    * layout for both readers. Older driver-generated events.parquet
+    * carried TIMESTAMP(NANOS), which the vectorized reader rejects;
+    * with nanosAsLong (set before `open` runs) those files surface ts
+    * as LongType and we rebuild a microsecond timestamp (the data has
+    * no sub-microsecond component, so lossless). Newer generations
+    * write TIMESTAMP(MICROS), read as NTZ and cast to the LTZ type
+    * every query was written against (session tz is pinned UTC, so the
+    * same instant) — detect by the loaded type so both layouts read
+    * identically. */
+  private[graft] def read(spark: SparkSession, name: String)(
+      open: => DataFrame): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = open
     if (name != "events") df
     else df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", org.apache.spark.sql.functions
           .expr("timestamp_micros(ts div 1000)"))
       case org.apache.spark.sql.types.TimestampNTZType =>
-        // session tz is pinned UTC, so NTZ -> LTZ is the same instant;
-        // keeps the column type every query was written against
         df.withColumn("ts",
           org.apache.spark.sql.functions.col("ts").cast("timestamp"))
       case _ => df

@@ -1,6 +1,7 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, GraftReleaseBridge,
+  functions => F}
 import org.apache.spark.sql.expressions.Window
 
 /** Deduplication operators for training-data pipelines: exact,
@@ -361,95 +362,6 @@ object Dedup {
       .select("inner_id", "outer_id", "cont")
   }
 
-  // ---- Connected components (pair graph → dup clusters) --------------
-
-  /** Connected components over an undirected pair graph — dedup ships
-    * CLUSTERS (keep one doc per component), not raw pairs. Iterative
-    * min-label propagation: each node adopts the smallest label among
-    * itself and its neighbors until fixpoint — O(diameter) rounds, each
-    * one join + one aggregate; dup-graph diameters are tiny (cliques
-    * and short chains), so this converges in 2-3 rounds. The classic
-    * large-graph refinement (large-star/small-star) drops in behind the
-    * same signature if components ever get deep.
-    *
-    * Input: pairs (id1, id2). Output: (id, component) where component =
-    * min id reachable. Deterministic.
-    */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-      endgameMaxEdges: Long = CcEndgameMaxEdges): DataFrame = {
-    // localCheckpoint (eager), not persist: the pair graph usually sits
-    // on an expensive upstream (LSH + verify); a lazy persist lets the
-    // loop's parallel branches race the first materialization and
-    // re-execute that upstream several times (measured 34s vs 9s at
-    // sf0.1). Checkpointing runs it exactly once and truncates lineage.
-    // Superseded rounds are RELEASED as the loop advances — otherwise a
-    // long-lived session pins every round's blocks for its lifetime
-    // (measured: a 98-query benchmark JVM degraded ~2× from the
-    // accumulation). The final labels stay checkpointed for the caller.
-    val spark = pairs.sparkSession
-    val (edges, edgeIds) = checkpointTracked(
-      pairs.select(F.col("id1").as("a"), F.col("id2").as("b"))
-        .union(pairs.select(F.col("id2").as("a"), F.col("id1").as("b")))
-        .distinct())
-    // driver endgame (see [[CcEndgameMaxEdges]]): a pair graph inside
-    // the bounded-collect budget is labeled by union-find in one job
-    // instead of O(diameter) propagation rounds; the distributed loop
-    // below is the path for everything larger. Only INTEGRAL id types
-    // take it — the endgame casts ids to long, which would truncate
-    // doubles/decimals (merging distinct components) and null out
-    // strings (round-12 ADVICE); everything else falls through to the
-    // cast-free distributed loop.
-    if (integralIds(pairs) && edges.count() <= endgameMaxEdges) {
-      val idType = pairs.schema("id1").dataType
-      val es = edges.select(F.col("a").cast("long"), F.col("b").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val comp = unionFind(es)
-      val rows = Seq.newBuilder[(Long, Long)]
-      val iter = comp.entrySet().iterator()
-      while (iter.hasNext) {
-        val kv = iter.next()
-        rows += ((kv.getKey, kv.getValue))
-      }
-      release(spark, edgeIds)
-      import spark.implicits._
-      return rows.result().toDF("id", "comp")
-        .select(F.col("id").cast(idType).as("id"),
-          F.col("comp").cast(idType).as("comp"))
-    }
-    var labels = edges.select(F.col("a").as("id"))
-      .distinct()
-      .withColumn("comp", F.col("id"))
-    var prevIds = Set.empty[Int]
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIter) {
-      // neighbor labels: for node a, labels of its neighbors b
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("id", "b"), "b")
-        .groupBy(F.col("a").as("id"))
-        .agg(F.min("comp").as("ncomp"))
-      // localCheckpoint TRUNCATES the lineage: without it the iterative
-      // plan nests one join deeper per round and analysis/execution
-      // blow up exponentially (measured OOM at ~8 rounds). Lazy mark:
-      // the changed count scans every partition, materializing the
-      // checkpoint in the same job (one job/round, not two).
-      val (updated, ids) = checkpointTracked(
-        labels.join(neighborMin, Seq("id"), "left_outer")
-          .select(F.col("id"),
-            F.least(F.col("comp"),
-              F.coalesce(F.col("ncomp"), F.col("comp"))).as("comp"),
-            F.col("comp").as("old")),
-        eager = false)
-      changed = updated.filter(F.col("comp") =!= F.col("old")).count()
-      release(spark, prevIds) // previous round: superseded, now unreferenced
-      prevIds = ids
-      labels = updated.drop("old")
-      it += 1
-    }
-    release(spark, edgeIds)
-    labels
-  }
-
   /** Cross-group contamination matrix: Jaccard overlap of the distinct
     * shingle sets of each pair of groups (sources, datasets, splits) —
     * the corpus-level dedup report run before mixing datasets, where
@@ -484,26 +396,9 @@ object Dedup {
           * 1e6 + 0.5) / 1e6).as("jac"))
   }
 
-  /** localCheckpoint plus the block-manager RDD ids it pinned, so
-    * iterative ops can release superseded rounds. `eager = false`
-    * marks the checkpoint lazily — the RDD registers as persistent at
-    * mark time (so the ids are still captured here) but materializes
-    * on the first job that scans it, letting a convergence count fuse
-    * the checkpoint job away (round 12). */
-  private def checkpointTracked(df: DataFrame,
-      eager: Boolean = true): (DataFrame, Set[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val ck = df.localCheckpoint(eager)
-    (ck, sc.getPersistentRDDs.keySet.toSet -- before)
-  }
+  // ---- Connected components (pair graph → dup clusters) --------------
 
-  private def release(spark: SparkSession, ids: Set[Int]): Unit = {
-    val m = spark.sparkContext.getPersistentRDDs
-    ids.foreach(id => m.get(id).foreach(_.unpersist(blocking = false)))
-  }
-
-  /** Driver-endgame bound for the connected-components loops: once the
+  /** Driver-endgame bound for [[connectedComponents]]: once the
     * (contracted) edge set is at most this many rows, finish with one
     * BOUNDED collect + union-find instead of more distributed rounds.
     * Every distributed CC round costs 3-5 shuffle stages of pure fixed
@@ -517,12 +412,132 @@ object Dedup {
     * unchanged above the bound. */
   val CcEndgameMaxEdges = 65536L
 
-  /** Gate for the union-find endgames: they cast ids to long for the
+  /** Connected components over an undirected pair graph — dedup ships
+    * CLUSTERS (keep one doc per component), not raw pairs.
+    *
+    * Input: pairs (id1, id2). Output: (id, comp) for every id in
+    * `pairs`, where comp = min id reachable. Deterministic.
+    *
+    *  1. One pass normalizes the pairs to distinct (lo, hi) edges.
+    *     Self-pairs are kept, so a self-paired id is labeled too. The
+    *     edge set is checkpointed LAZILY and the endgame gate's count
+    *     materializes it: the upstream (LSH + verify, usually the
+    *     expensive part) runs exactly once, in that job, and the
+    *     lineage is cut.
+    *  2. An integral-id graph within `endgameMaxEdges` is labeled by
+    *     one driver-side [[unionFind]].
+    *  3. Anything larger runs alternating LARGE-STAR / SMALL-STAR
+    *     (Kiveris et al., "Connected Components in MapReduce and
+    *     Beyond", SoCC'14), which contracts the graph in O(log² n)
+    *     rounds regardless of diameter, and hands over to the same
+    *     union-find once the contracted edge set fits the bound.
+    *  4. A loop that runs out of `maxIter` rounds above the bound fails
+    *     loudly: a mid-run edge set can hold two labels for one node,
+    *     so it is never returned.
+    *
+    * Superseded rounds are released as the loop advances — otherwise a
+    * long-lived session pins every round's blocks for its lifetime
+    * (measured: a 98-query benchmark JVM degraded ~2× from the
+    * accumulation).
+    */
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 30,
+      endgameMaxEdges: Long = CcEndgameMaxEdges): DataFrame = {
+    val spark = pairs.sparkSession
+    val idType = pairs.schema("id1").dataType
+    // non-integral ids can't take the long-cast endgame (see
+    // [[integralIds]]) — they iterate to full convergence instead
+    val canEndgame = integralIds(pairs)
+    val graph = pairs
+      .select(F.least(F.col("id1"), F.col("id2")).as("lo"),
+        F.greatest(F.col("id1"), F.col("id2")).as("hi"))
+      .distinct()
+      .localCheckpoint(false)
+    var nEdges = graph.count() // materializes the checkpoint
+    var ck = graph // the checkpoint `edges` reads; released once superseded
+    var edges = graph
+    var nodes: DataFrame = null // every id; pinned only when the loop runs
+    var changed = -1L // unknown until a round has tallied
+    var it = 0
+    while (changed != 0 && !(canEndgame && nEdges <= endgameMaxEdges)) {
+      require(it < maxIter,
+        s"connectedComponents did not converge in $maxIter rounds")
+      if (nodes == null) nodes = graph.select(F.col("lo").as("id"))
+        .union(graph.select(F.col("hi").as("id")))
+        .distinct().localCheckpoint()
+      // self-pairs only label themselves (through `nodes`)
+      val e = edges.filter(F.col("lo") =!= F.col("hi"))
+      // large-star over the symmetric direction set: link every
+      // strictly-larger neighbor v of u to m = min(Γ(u) ∪ u)
+      val dir = e.select(F.col("lo").as("u"), F.col("hi").as("v"))
+        .union(e.select(F.col("hi").as("u"), F.col("lo").as("v")))
+      val mins = dir.groupBy("u").agg(F.min("v").as("mv"))
+        .withColumn("m", F.least(F.col("u"), F.col("mv")))
+      // no distinct here: |ls| <= |edges| with or without duplicates
+      // (one row per v>u direction), small-star's groupBy and the
+      // tally's groupBy absorb them — one shuffle per round saved
+      val ls = dir.join(mins, "u")
+        .filter(F.col("v") > F.col("u"))
+        .select(F.col("m").as("lo"), F.col("v").as("hi")) // m <= u < v
+        .filter(F.col("lo") =!= F.col("hi"))
+      // small-star on the hi→lo orientation: link every smaller
+      // neighbor v of u (and u itself) to m = min(Γ(u) ∪ u)
+      val dir2 = ls.select(F.col("hi").as("u"), F.col("lo").as("v"))
+      val mins2 = dir2.groupBy("u").agg(F.min("v").as("m"))
+      val ss = dir2.join(mins2, "u")
+        .select(F.col("m").as("lo"), F.col("v").as("hi")) // v >= m
+        .union(mins2.select(F.col("m").as("lo"), F.col("u").as("hi")))
+        .filter(F.col("lo") =!= F.col("hi"))
+      // ONE (lo, hi) aggregation yields BOTH the deduped new edge set
+      // and the convergence test: tag small-star rows and previous
+      // edges, group on the edge key, and compare presence flags. The
+      // tally is checkpointed LAZILY and the one job below, which also
+      // counts the surviving edges for the endgame gate, materializes
+      // it.
+      val tally = ss.select(F.col("lo"), F.col("hi"),
+          F.lit(1).as("s"), F.lit(0).as("e"))
+        .union(e.select(F.col("lo"), F.col("hi"),
+          F.lit(0).as("s"), F.lit(1).as("e")))
+        .groupBy("lo", "hi")
+        .agg(F.max("s").as("inSs"), F.max("e").as("inE"))
+        .localCheckpoint(false)
+      val row = tally.agg(
+        F.sum(F.when(F.col("inSs") =!= F.col("inE"), 1L).otherwise(0L))
+          .as("chg"),
+        F.sum(F.when(F.col("inSs") === 1, 1L).otherwise(0L)).as("ne"))
+        .first()
+      changed = row.getLong(0)
+      nEdges = row.getLong(1)
+      GraftReleaseBridge.release(ck)
+      ck = tally
+      edges = tally.filter(F.col("inSs") === 1).select("lo", "hi")
+      it += 1
+    }
+    val labels =
+      if (changed == 0) // converged: a star forest, members hi → root lo
+        edges.select(F.col("hi").as("id"), F.col("lo").as("comp"))
+      else {
+        // root of every union-find tree is its component's min, the
+        // same contract as the star forest
+        val es = edges
+          .select(F.col("lo").cast("long"), F.col("hi").cast("long"))
+          .collect().map(r => (r.getLong(0), r.getLong(1)))
+        GraftReleaseBridge.release(ck)
+        import spark.implicits._
+        unionFind(es).toSeq.toDF("id", "comp")
+          .select(F.col("id").cast(idType).as("id"),
+            F.col("comp").cast(idType).as("comp"))
+      }
+    if (nodes == null) labels // the union-find saw every edge
+    else nodes.join(labels, Seq("id"), "left_outer")
+      .select(F.col("id"), F.coalesce(F.col("comp"), F.col("id")).as("comp"))
+  }
+
+  /** Gate for the union-find endgame: it casts ids to long for the
     * driver-side forest, which is only lossless for integral types.
     * Doubles/decimals would truncate (1.2 and 1.7 both become 1,
     * merging distinct components); strings cast to null and crash the
     * Row.getLong read (round-12 ADVICE). Non-integral ids stay on the
-    * distributed loops, which never cast. */
+    * distributed loop, which never casts. */
   private def integralIds(pairs: DataFrame): Boolean = {
     import org.apache.spark.sql.types._
     Seq("id1", "id2").forall(c => pairs.schema(c).dataType match {
@@ -533,10 +548,9 @@ object Dedup {
 
   /** Union-find with union-by-min + path compression over a bounded
     * edge array: root of every component IS its minimum id (unions
-    * always point the larger root at the smaller), matching the
-    * min-label / star-forest contract exactly. Returns (id → comp) for
-    * every id incident to an edge. */
-  private def unionFind(es: Array[(Long, Long)]): java.util.HashMap[Long, Long] = {
+    * always point the larger root at the smaller). Returns (id, comp)
+    * for every id incident to an edge, self-pairs included. */
+  private def unionFind(es: Array[(Long, Long)]): Array[(Long, Long)] = {
     val parent = new java.util.HashMap[Long, Long](es.length * 2)
     def find(x0: Long): Long = {
       var x = x0
@@ -555,142 +569,7 @@ object Dedup {
       if (ra < rb) parent.put(rb, ra)
       else if (rb < ra) parent.put(ra, rb)
     }
-    val out = new java.util.HashMap[Long, Long](es.length * 2)
-    es.foreach { case (a, b) =>
-      out.put(a, find(a))
-      out.put(b, find(b))
-    }
-    out
-  }
-
-  /** Connected components via alternating LARGE-STAR / SMALL-STAR
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the scale path for HIGH-DIAMETER graphs, where
-    * [[connectedComponents]]' min-label propagation needs O(diameter)
-    * rounds. Star operations contract the graph in O(log²ⁿ) rounds
-    * regardless of diameter:
-    *
-    *  - large-star (per node u over BOTH edge directions): link every
-    *    strictly-larger neighbor v to m = min(Γ(u) ∪ u)
-    *  - small-star (per node u over edges oriented hi→lo): link every
-    *    smaller-or-equal neighbor (and u itself) to m = min(Γ(u) ∪ u)
-    *
-    * Both steps are groupBy-min + join-back — hash shuffles on node
-    * ids, NO per-node neighbor list is ever materialized (the classic
-    * collect_list formulation puts a component's whole membership in
-    * one row at the root; the join form streams it). Converges when the
-    * edge set is a star forest rooted at component minima, so labels
-    * read off directly. Output matches [[connectedComponents]] exactly:
-    * (id, comp = min reachable id) for every id in `pairs`.
-    */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 30,
-      endgameMaxEdges: Long = CcEndgameMaxEdges): DataFrame = {
-    val spark = pairs.sparkSession
-    // Materialize the pair graph ONCE before deriving nodes and edges:
-    // both need it, and the upstream is usually the expensive part
-    // (LSH + verify — measured ~2.5 s at sf0.1, previously paid twice).
-    val (p, pIds) = checkpointTracked(pairs)
-    val nodes = p.select(F.col("id1").as("id"))
-      .union(p.select(F.col("id2").as("id")))
-      .distinct().localCheckpoint()
-    val e0 = checkpointTracked(p
-      .select(F.least(F.col("id1"), F.col("id2")).as("lo"),
-        F.greatest(F.col("id1"), F.col("id2")).as("hi"))
-      .filter(F.col("lo") =!= F.col("hi"))
-      .distinct())
-    release(spark, pIds) // nodes + e0 are checkpointed; p is superseded
-    var edges = e0._1
-    var edgeIds = e0._2
-    var nEdges = edges.count() // in-memory scan of the fresh checkpoint
-    var it = 0
-    var changed = -1L // unknown until a round has tallied
-    // non-integral ids can't take the long-cast endgame (see
-    // [[integralIds]]) — they iterate to full convergence instead
-    val canEndgame = integralIds(pairs)
-    while (changed != 0 && (!canEndgame || nEdges > endgameMaxEdges)
-        && it < maxIter) {
-      // large-star over the symmetric direction set
-      val dir = edges.select(F.col("lo").as("u"), F.col("hi").as("v"))
-        .union(edges.select(F.col("hi").as("u"), F.col("lo").as("v")))
-      val mins = dir.groupBy("u").agg(F.min("v").as("mv"))
-        .withColumn("m", F.least(F.col("u"), F.col("mv")))
-      // no distinct here: |ls| <= |edges| with or without duplicates
-      // (one row per v>u direction), small-star's groupBy and the
-      // final tally's groupBy absorb them — dropping the mid-round
-      // dedup saves one shuffle per round without unbounding anything
-      val ls = dir.join(mins, "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("m").as("lo"), F.col("v").as("hi")) // m <= u < v
-        .filter(F.col("lo") =!= F.col("hi"))
-      // small-star on hi→lo orientation (every neighbor v < u)
-      val dir2 = ls.select(F.col("hi").as("u"), F.col("lo").as("v"))
-      val mins2 = dir2.groupBy("u").agg(F.min("v").as("m"))
-      val ss = dir2.join(mins2, "u")
-        .select(F.col("m").as("lo"), F.col("v").as("hi")) // v >= m
-        .union(mins2.select(F.col("m").as("lo"), F.col("u").as("hi")))
-        .filter(F.col("lo") =!= F.col("hi"))
-      // ONE (lo, hi) aggregation yields BOTH the deduped new edge set
-      // and the convergence test: tag small-star rows and previous
-      // edges, group on the edge key, and compare presence flags —
-      // this replaces ss.distinct() PLUS a separate symmetric-diff
-      // aggregation (one exchange per round, not two, over the same
-      // rows). The tally checkpoint is marked LAZY so the changed
-      // count materializes it in the same job.
-      val (tally, ids) = checkpointTracked(
-        ss.select(F.col("lo"), F.col("hi"),
-            F.lit(1).as("s"), F.lit(0).as("e"))
-          .union(edges.select(F.col("lo"), F.col("hi"),
-            F.lit(0).as("s"), F.lit(1).as("e")))
-          .groupBy("lo", "hi")
-          .agg(F.max("s").as("inSs"), F.max("e").as("inE")),
-        eager = false)
-      // the same fused job also tallies the surviving edge count, so
-      // the endgame gate costs no extra pass
-      val row = tally.agg(
-        F.sum(F.when(F.col("inSs") =!= F.col("inE"), 1L).otherwise(0L))
-          .as("chg"),
-        F.sum(F.when(F.col("inSs") === 1, 1L).otherwise(0L)).as("ne"))
-        .first()
-      changed = row.getLong(0)
-      nEdges = row.getLong(1)
-      release(spark, edgeIds)
-      edges = tally.filter(F.col("inSs") === 1).select("lo", "hi")
-      edgeIds = ids
-      it += 1
-    }
-    val forest = if (changed == 0) edges // converged: already a star forest
-    else {
-      // driver endgame: the (contracted) edge set fits the bounded
-      // collect — finish with union-find (root = component min, same
-      // contract as the star forest) instead of more O(stages)-cost
-      // rounds. Fail LOUDLY if maxIter ran out above the bound (or on
-      // non-integral ids, which never take the endgame): a mid-run
-      // edge set can hold two labels for one hi node, and the
-      // read-off join would silently fan out duplicate (id, comp) rows.
-      require(canEndgame && nEdges <= endgameMaxEdges,
-        s"connectedComponentsStar did not converge in $maxIter rounds")
-      val idType = pairs.schema("id1").dataType
-      val es = edges
-        .select(F.col("lo").cast("long"), F.col("hi").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val comp = unionFind(es)
-      val memberRows = comp.entrySet().iterator()
-      val members = Seq.newBuilder[(Long, Long)]
-      while (memberRows.hasNext) {
-        val kv = memberRows.next()
-        if (kv.getKey != kv.getValue) members += ((kv.getKey, kv.getValue))
-      }
-      release(spark, edgeIds)
-      import spark.implicits._
-      members.result().toDF("hi", "lo")
-        .select(F.col("lo").cast(idType).as("lo"),
-          F.col("hi").cast(idType).as("hi"))
-    }
-    // star forest: members are hi→lo; roots (and isolated nodes from
-    // self-pairs) label themselves
-    nodes.join(forest.select(F.col("hi").as("id"), F.col("lo").as("comp")),
-        Seq("id"), "left_outer")
-      .select(F.col("id"), F.coalesce(F.col("comp"), F.col("id")).as("comp"))
+    es.flatMap { case (a, b) => Array(a, b) }.distinct.map(x => (x, find(x)))
   }
 
   // ---- SimHash --------------------------------------------------------

@@ -5,8 +5,8 @@ import org.apache.spark.sql.GraftReleaseBridge
 
 /** Distributed graph algorithms over edge-list DataFrames.
   *
-  * Complements [[graft.dedup.Dedup.connectedComponents]] /
-  * `connectedComponentsStar` (the dedup-cluster path) with the
+  * Complements [[graft.dedup.Dedup.connectedComponents]] (the
+  * dedup-cluster path) with the
   * damped-PageRank iteration — the generic "importance by linkage"
   * score a curation pipeline uses to weight interlinked corpora
   * (hosts↔documents, buyers↔producers).

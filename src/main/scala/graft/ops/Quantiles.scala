@@ -50,19 +50,6 @@ object Quantiles {
   val DefaultCollectLimit = 65536L
   private val MaxRounds = 64 // safety valve; ~2 rounds in practice
 
-  /** GK warm-start knobs. A warm start probes each target quantile
-    * ± `WarmMargin` with one `percentile_approx` sketch —
-    * Greenwald-Khanna, deterministic rank error ≤ n/accuracy. The two
-    * probe VALUES bracket the target's true floor/ceil ranks whenever
-    * 3·(n/accuracy) covers the probe-vs-rank slack, i.e. n ≳ accuracy;
-    * below [[WarmMinN]] the bracket is not attempted. The bracket is a
-    * PERFORMANCE hint only: round 1 count-verifies it with sentinel
-    * bins, so a wrong bracket costs one extra round, never a wrong
-    * answer. */
-  val WarmAccuracy = 1000
-  val WarmMargin: Double = 4.0 / WarmAccuracy
-  val WarmMinN = 2000L
-
   /** Exact interpolated quantiles of one numeric column. */
   def exact(df: DataFrame, col: String, qs: Seq[Double]): Seq[Double] =
     exactMulti(df, Seq(col), qs)(col)
@@ -76,8 +63,7 @@ object Quantiles {
       col: String, q: Double, pos: Double,
       offset: Long, count: Long,
       lo: Double, hi: Double, chain: Column,
-      vLo: Option[Double], vHi: Option[Double],
-      warm: Boolean = false) {
+      vLo: Option[Double], vHi: Option[Double]) {
     def rankLo: Long = math.floor(pos).toLong
     def rankHi: Long = math.ceil(pos).toLong
     def resolved: Boolean = vLo.isDefined && vHi.isDefined
@@ -90,28 +76,13 @@ object Quantiles {
   /** Exact interpolated quantiles of several numeric columns; all
     * columns and quantiles share each refinement pass. `stats` can
     * supply precomputed (min, max, non-null count) per column to skip
-    * the first pass (describe already has them). `warm` optionally
-    * supplies GK bracket probe VALUES per column — `2·qs.size` doubles,
-    * `(value at q₁−margin, value at q₁+margin, value at q₂−margin, …)`
-    * in `qs` order, from `percentile_approx(col, …, WarmAccuracy)` —
-    * piggybacked on the caller's own stats aggregate (describe does
-    * this). When `stats` is not supplied, the internal stats pass
-    * computes the sketch itself at no extra pass. Warm targets run
-    * round 1 over their bracket with SENTINEL bins (−1 / k for values
-    * outside it), so rank arithmetic stays global and a wrong bracket
-    * costs one extra round, never a wrong answer. Because a GK
-    * bracket holds ~8·n/accuracy rows, round-1 bins over it are
-    * near-singleton and most ranks resolve IN the histogram pass,
-    * eliminating the final collect pass (3 full scans → 2). */
+    * the first pass (describe already has them). */
   def exactMulti(df: DataFrame, cols: Seq[String], qs: Seq[Double],
                  stats: Map[String, (Double, Double, Long)] = Map.empty,
                  k: Int = DefaultK,
-                 collectLimit: Long = DefaultCollectLimit,
-                 warm: Map[String, Seq[Double]] = Map.empty)
+                 collectLimit: Long = DefaultCollectLimit)
       : Map[String, Seq[Double]] = {
     require(cols.nonEmpty && qs.nonEmpty)
-    require(warm.values.forall(_.size == 2 * qs.size),
-      s"warm probes must carry 2 values per quantile")
     val st: Map[String, (Double, Double, Long)] =
       if (cols.forall(stats.contains)) stats
       else {
@@ -125,35 +96,6 @@ object Quantiles {
           c -> ((row.getAs[Double](s"${c}__min"),
             row.getAs[Double](s"${c}__max"), row.getAs[Long](s"${c}__n")))
         }.toMap
-      }
-    // Auto-sketch gate (round 12): a GK bracket pays for itself only
-    // when the COLD engine needs ≥2 refinement rounds, i.e. n >
-    // k·collectLimit (~5×10⁸ at the defaults) — below that, one
-    // histogram round already narrows every rank under the collect
-    // budget and the sketch is pure added cost (measured: q21 0.66 →
-    // 1.51 s with an unconditional sketch). Past the gate, one sketch
-    // pass replaces ≥1 full-data refine round AND its near-singleton
-    // bracket bins usually resolve ranks without the final collect.
-    val sketchCols = cols.filter { c =>
-      !warm.contains(c) && st(c)._3 > k.toLong * collectLimit &&
-        st(c)._1 != st(c)._2 && st(c)._1 > Double.NegativeInfinity &&
-        st(c)._2 < Double.PositiveInfinity
-    }
-    val warmAll: Map[String, Seq[Double]] =
-      if (sketchCols.isEmpty) warm
-      else {
-        val probeQs = qs.flatMap(q => Seq(
-          math.max(0.0, q - WarmMargin), math.min(1.0, q + WarmMargin)))
-        val aggs = sketchCols.map { c =>
-          F.percentile_approx(F.col(c).cast("double"),
-            F.array(probeQs.map(F.lit): _*), F.lit(WarmAccuracy))
-            .as(s"${c}__wb")
-        }
-        val row = df.agg(aggs.head, aggs.tail: _*).first()
-        warm ++ sketchCols.map { c =>
-          val wb = row.getAs[scala.collection.Seq[Double]](s"${c}__wb")
-          c -> (if (wb == null) Seq.empty[Double] else wb.toSeq)
-        }.filter(_._2.size == 2 * qs.size).toMap
       }
     cols.foreach { c =>
       require(st(c)._3 > 0, s"no non-null values in $c")
@@ -189,9 +131,8 @@ object Quantiles {
       }
 
     var states: Seq[TState] = for {
-      (c, qi) <- cols.flatMap(c => qs.indices.map(c -> _))
+      (c, q) <- cols.flatMap(c => qs.map(c -> _))
     } yield {
-      val q = qs(qi)
       val (mn, mx, n) = st(c)
       if (!infSt.contains(c)) {
         val full = F.col(c).isNotNull &&
@@ -199,12 +140,6 @@ object Quantiles {
         val s = TState(c, q, q * (n - 1), 0L, n, mn, mx, full, None, None)
         // a constant column (or n == 1) is resolved for free
         if (mn == mx) s.copy(vLo = Some(mn), vHi = Some(mn))
-        // warm bracket: interval = the GK probes, chain/offset/count
-        // stay GLOBAL — round 1's sentinel bins count-verify it
-        else if (n >= WarmMinN && n > collectLimit &&
-          warmAll.get(c).exists(_.nonEmpty))
-          s.copy(lo = warmAll(c)(2 * qi), hi = warmAll(c)(2 * qi + 1),
-            warm = true)
         else s
       } else {
         val (ni, pi, fmn, fmx) = infSt(c)
@@ -245,33 +180,25 @@ object Quantiles {
     if (active.isEmpty) return states
     val groups = active
       .groupBy(s =>
-        (s.col, s.lo, s.hi, s.offset, s.count, s.chain.toString, s.warm))
+        (s.col, s.lo, s.hi, s.offset, s.count, s.chain.toString))
       .toSeq
     val entries = groups.zipWithIndex.map {
-      case (((col, lo, hi, _, _, _, warm), ss), tid) =>
+      case (((col, lo, hi, _, _, _), ss), tid) =>
         val v = F.col(col).cast("double")
         // half-space + division-first: (hi - lo) and (v - lo) * K can
         // overflow to Inf on a span near the full double range; the
         // half-space difference is always finite and the ratio <= 1
         // before the * K.
         val wHalf = (hi / 2 - lo / 2) / K
-        val grid = F.least(F.lit(K - 1), F.greatest(F.lit(0),
+        val bucket = F.least(F.lit(K - 1), F.greatest(F.lit(0),
           F.floor((v / 2 - F.lit(lo / 2)) / F.lit(hi / 2 - lo / 2)
             * F.lit(K)))).cast("int")
-        // warm (unverified-bracket) targets keep EVERY row: values
-        // outside [lo, hi] land in sentinel bins −1 / K so cum counts
-        // are GLOBAL ranks; a collapsed bracket (lo == hi) maps its
-        // in-range rows to bin 0 before the 0/0 grid division
-        val bucket = if (!warm) grid
-          else F.when(v < F.lit(lo), F.lit(-1))
-            .when(v > F.lit(hi), F.lit(K))
-            .otherwise(if (lo == hi) F.lit(0) else grid).cast("int")
-        (tid, ss, lo, hi, wHalf,
+        (tid, ss, lo, hi, wHalf, bucket,
           F.when(ss.head.chain, F.struct(F.lit(tid).as("tid"),
             bucket.as("bucket"), v.as("v"))))
     }
     val exploded = df
-      .select(F.explode(F.array(entries.map(_._6): _*)).as("e"))
+      .select(F.explode(F.array(entries.map(_._7): _*)).as("e"))
       .filter(F.col("e").isNotNull)
       .groupBy(F.col("e.tid").as("tid"), F.col("e.bucket").as("bucket"))
       .agg(F.count(F.lit(1)).as("cnt"), F.min("e.v").as("mn"),
@@ -284,7 +211,7 @@ object Quantiles {
       .map { case (tid, rows) =>
         tid -> rows.map(t => (t._2, t._3, t._4, t._5)).sortBy(_._1)
       }
-    val refined = entries.flatMap { case (tid, ss, lo, hi, wHalf, _) =>
+    val refined = entries.flatMap { case (tid, ss, lo, hi, wHalf, bucket, _) =>
       val bins = hist(tid)
       val cum = bins.scanLeft(0L)(_ + _._2) // rows before bins(i)
       ss.map { s =>
@@ -321,43 +248,21 @@ object Quantiles {
           val newOffset = s.offset + cum(iLo)
           val newCount =
             bins.slice(iLo, iHi + 1).map(_._2).sum
-          val gridOf = {
-            val v = F.col(s.col).cast("double")
-            F.least(F.lit(K - 1), F.greatest(F.lit(0),
-              F.floor((v / 2 - F.lit(lo / 2)) / F.lit(hi / 2 - lo / 2)
-                * F.lit(K)))).cast("int")
-          }
-          // membership predicate = EXACTLY the bucket expression this
-          // round's histogram used (sentinel form for warm targets)
-          val bucketOf = if (!s.warm) gridOf
-            else {
-              val v = F.col(s.col).cast("double")
-              F.when(v < F.lit(lo), F.lit(-1))
-                .when(v > F.lit(hi), F.lit(K))
-                .otherwise(if (lo == hi) F.lit(0) else gridOf).cast("int")
-            }
-          // Interval for the next round's grid. Non-warm: grid
-          // arithmetic with a one-bin margin on each side keeps the
-          // range a superset of the chain-selected values under float
-          // rounding (membership itself is exactly the bucket
-          // predicate); computed in half-space and doubled so nothing
-          // overflows for finite lo/hi — an overflow at the very edge
-          // lands on ±Inf and the clamps pull it back to the old
-          // bound. Warm: sentinel bins (−1 / K) have no grid
-          // coordinates, so use the selected bins' OBSERVED value
-          // bounds — exact data values, trivially a superset of the
-          // selected rows.
-          val (newLo, newHi) = if (s.warm)
-            (bins(iLo)._3, bins(iHi)._4)
-          else
-            (math.max(lo, 2 * (lo / 2 + (bLo - 1) * wHalf)),
-              math.min(hi, 2 * (lo / 2 + (bHi + 2) * wHalf)))
+          // Interval for the next round's grid: grid arithmetic with a
+          // one-bin margin on each side keeps the range a superset of
+          // the chain-selected values under float rounding (membership
+          // itself is exactly the bucket predicate); computed in
+          // half-space and doubled so nothing overflows for finite
+          // lo/hi — an overflow at the very edge lands on ±Inf and the
+          // clamps pull it back to the old bound.
+          val newLo = math.max(lo, 2 * (lo / 2 + (bLo - 1) * wHalf))
+          val newHi = math.min(hi, 2 * (lo / 2 + (bHi + 2) * wHalf))
           s.copy(
             offset = newOffset, count = newCount,
             lo = newLo, hi = newHi,
-            chain = s.chain && bucketOf.between(bLo, bHi),
-            vLo = rLo, vHi = rHi,
-            warm = false)
+            // membership = EXACTLY this round's histogram bucket
+            chain = s.chain && bucket.between(bLo, bHi),
+            vLo = rLo, vHi = rHi)
         }
       }
     }

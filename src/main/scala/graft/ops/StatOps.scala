@@ -67,10 +67,7 @@ object StatOps {
       // percentile_approx sketches made q21 0.66 → 1.51 s, costing
       // ~2× the one full scan the bracket saves, because at n ≪
       // k·collectLimit the cold engine already resolves in ONE
-      // histogram round. exactMulti auto-sketches itself past that
-      // threshold (the inline n > k·collectLimit gate in exactMulti's
-      // sketchCols filter), where a bracket round
-      // replaces ≥1 full-data refine round and the trade inverts.
+      // histogram round.
       val aggs = cols.flatMap { c =>
         Seq(
           F.min(F.col(c).cast("double")).as(s"${c}__min"),

@@ -346,11 +346,10 @@ object MlQueries extends QueryRegistry {
             F.col("e1.query_id") < F.col("e1.neighbor_id"))
         .select(F.col("e1.query_id").as("id1"),
           F.col("e1.neighbor_id").as("id2"))
-      // star CC, not min-label: a mutual-kNN graph is chain-shaped
-      // (diameter ~ cluster length), and label propagation pays one
-      // round PER HOP of diameter — measured 15-30 s of round overhead
-      // at sf0.1 vs log²-bounded star contraction
-      val comp = Dedup.connectedComponentsStar(edges)
+      // a mutual-kNN graph is chain-shaped (diameter ~ cluster
+      // length); connectedComponents labels it with one union-find
+      // within CcEndgameMaxEdges and log²-bounded star rounds above
+      val comp = Dedup.connectedComponents(edges)
       emb.select(F.col("vec_id"))
         .join(comp.withColumnRenamed("id", "vec_id"), Seq("vec_id"),
           "left_outer")

@@ -47,8 +47,7 @@ object PipelineQueries extends QueryRegistry {
   private[queries] val NearDupJ = 0.85
 
   /** Recursive-CTE connected components over the exact Jaccard >=
-    * [[NearDupJ]] pair graph — shared ground truth for q79 (min-label
-    * propagation) and q102 (large-star/small-star). */
+    * [[NearDupJ]] pair graph — shared ground truth for q79 and q102. */
   private[queries] lazy val duckCcClusters =
     s"""WITH RECURSIVE
         toks AS (SELECT doc_id, lang, $duckToks AS t FROM documents),
@@ -479,7 +478,7 @@ object PipelineQueries extends QueryRegistry {
     // Leakage-free train/val/test split: near-dup CLUSTERS (not docs)
     // are the assignment unit, so a document can never share a near
     // duplicate across the split boundary — the subtle eval-leak bug
-    // this op exists to kill. Cluster ids from min-label CC; singleton
+    // this op exists to kill. Cluster ids = min id per CC; singleton
     // docs are their own cluster; the 8/1/1 bucket comes from the
     // portable Knuth-hash arithmetic (oracle ranks identically).
     "q122_leakfree_split" -> { (s, dir) =>
@@ -498,8 +497,8 @@ object PipelineQueries extends QueryRegistry {
             .otherwise("test").as("split"))
     },
 
-    // Pair graph → dup clusters via iterative min-label propagation
-    // (connected components); oracle = recursive-CTE reachability.
+    // Pair graph → dup clusters (connected components, min id per
+    // component); oracle = recursive-CTE reachability.
     "q79_dedup_clusters" -> { (s, dir) =>
       val docs = T.load(s, dir, "documents")
         .withColumn("toks", TextExpressions.wordTokens(F.col("text")))
@@ -508,15 +507,14 @@ object PipelineQueries extends QueryRegistry {
       Dedup.connectedComponents(pairs.select("id1", "id2"))
     },
 
-    // Same dup-cluster labels via alternating large-star/small-star —
-    // the O(log n)-round scale path for high-diameter graphs; shares
-    // q79's recursive-CTE oracle, so both CC algorithms are
-    // hash-checked against the same ground truth.
+    // Same dup clusters as q79 through the same CC operator (a
+    // shingle-only pipeline: no token column); shares q79's
+    // recursive-CTE oracle.
     "q102_cc_star" -> { (s, dir) =>
       val docs = T.load(s, dir, "documents")
         .withColumn("sh", TextExpressions.wordShingles(F.col("text"), 3))
       val pairs = Dedup.minhashNearDups(docs, "doc_id", "sh", NearDupJ)
-      Dedup.connectedComponentsStar(pairs.select("id1", "id2"))
+      Dedup.connectedComponents(pairs.select("id1", "id2"))
     },
 
     // Semantic (embedding-cosine) dedup via signed-random-projection

@@ -36,33 +36,22 @@ object StreamQueries extends QueryRegistry {
   private val streamJoinWatermark =
     sys.env.getOrElse("GRAFT_STREAM_WATERMARK", "60 days")
 
-  /** Streaming source over the events parquet with the nanos→micros
-    * timestamp rebuild of T.load. */
-  private def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    // file-stream sources take a DIRECTORY; glob-filter to the events
-    // file inside the sf dir. NO maxFilesPerTrigger here: AvailableNow
-    // processes everything in one micro-batch — per-batch fixed costs
-    // (state-store commit fan-out, complete-mode re-emission) scale with
-    // batch COUNT, so the verify/bench path wants exactly one. The
-    // micro-batch-per-file parity path (reference minibatch iterator)
-    // is DataStream.openStream, exercised in tests.
-    val raw = s.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    // same dual-layout handling as T.load: legacy nanos-long ts is
-    // rebuilt, new TIMESTAMP(MICROS) (read as NTZ) is cast to the LTZ
-    // type every query was written against (session tz = UTC)
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", F.col("ts").cast("timestamp"))
-      case _ => raw
+  /** Streaming source over the events parquet, with T.load's events
+    * `ts` layout ([[T.read]]). */
+  private def eventsStream(s: SparkSession, dir: String): DataFrame =
+    T.read(s, "events") {
+      // file-stream sources take a DIRECTORY; glob-filter to the events
+      // file inside the sf dir. NO maxFilesPerTrigger here: AvailableNow
+      // processes everything in one micro-batch — per-batch fixed costs
+      // (state-store commit fan-out, complete-mode re-emission) scale
+      // with batch COUNT, so the verify/bench path wants exactly one.
+      // The micro-batch-per-file parity path (reference minibatch
+      // iterator) is DataStream.openStream, exercised in tests.
+      s.readStream
+        .schema(s.read.parquet(s"$dir/events.parquet").schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(dir)
     }
-  }
 
   /** Run a streaming aggregate to completion with a bounded state-store
     * footprint: state partitions = min(8, session shuffle partitions) —
@@ -84,7 +73,12 @@ object StreamQueries extends QueryRegistry {
       q.awaitTermination(600000L)
       q.stop()
     } finally s.conf.set(key, prev)
-    s.table(name)
+    // the memory sink registered a temp view named after the query;
+    // drop it so the session does not keep every run's rows (the
+    // frame's analyzed plan still holds the sink)
+    val out = s.table(name)
+    s.catalog.dropTempView(name)
+    out
   }
 
   /** q341's web-scale fallback, BUILT (round-12 verdict task 4; it was

@@ -6,8 +6,9 @@ import org.apache.spark.sql.types.StructType
 
 /** Structured-Streaming parity for the reference's DataStream
   * (src/datastream.jl): a pull-based micro-batch iterator over a CSV/
-  * parquet source with running per-column aggregates (sum/prod/mean,
-  * src/datastream.jl:87-247).
+  * parquet source. The running per-column aggregates (sum/prod/mean,
+  * src/datastream.jl:87-247) are complete-mode aggregates over these
+  * sources (q60 through `StreamQueries.runStateful`).
   *
   * The reference has no watermarks/event-time windows (SURVEY §2.10) —
   * micro-batch ingest + complete-mode running aggregates are exact
@@ -51,38 +52,6 @@ object DataStream {
       .select(F.from_csv(F.col("value"),
         schema, Map("sep" -> sep)).as("r"))
       .select(F.col("r.*"))
-
-  /** Running column aggregates over the stream: sum/prod/mean per
-    * numeric column (reference streaming sum/prod/mean,
-    * src/datastream.jl:87-247). prod via exp∘Σlog (positive inputs),
-    * matching the reference's float product semantics. Complete mode =
-    * the reference's running accumulator state.
-    *
-    * Runs the stream to completion against the files currently in the
-    * dir and returns the final running values (what the reference's
-    * fold over the whole stream returns).
-    */
-  def runningAggregates(spark: SparkSession, dir: String,
-                        schema: StructType, cols: Seq[String],
-                        queryName: String): DataFrame = {
-    val src = openStream(spark, dir, schema)
-    val aggs = cols.flatMap { c =>
-      Seq(
-        F.sum(F.col(c)).as(s"${c}_sum"),
-        F.exp(F.sum(F.log(F.col(c)))).as(s"${c}_prod"),
-        F.avg(F.col(c)).as(s"${c}_mean"),
-        F.count(F.col(c)).as(s"${c}_n"))
-    }
-    val agg = src.agg(aggs.head, aggs.tail: _*)
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
 
   /** Event-time tumbling-window aggregate — the Spark superset the
     * reference lacks (SURVEY §2.10: "no watermarks, no event-time
@@ -243,19 +212,5 @@ object DataStream {
     q.awaitTermination()
     found.getOrElse(sys.error(s"Did not find requested row $n " +
       s"(stream has ${seen} rows)")) // reference's error, with context
-  }
-
-  /** Drive a streaming DataFrame to completion into a memory sink and
-    * return the result table (micro-batch pull loop, reference
-    * src/datastream.jl:62-79). */
-  def runToCompletion(stream: DataFrame, queryName: String): DataFrame = {
-    val q = stream.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    stream.sparkSession.table(queryName)
   }
 }

@@ -525,39 +525,42 @@ class PipelineSpec extends SparkSpec {
     assert(cc2.forall(_.getLong(1) == 1L))
   }
 
-  test("large-star/small-star CC equals propagation CC (incl. deep chain)") {
+  test("CC union-find endgame equals the forced star loop (incl. deep chain)") {
     import spark.implicits._
     // high-diameter chain (64 nodes), a clique, a pair, a self-loop
     // singleton — the chain is where star-contraction earns its keep
-    // (propagation needs O(diameter) rounds, star O(log^2))
+    // (O(log^2) rounds, not O(diameter))
     val chain = (100L to 163L).sliding(2).map(s => (s(0), s(1))).toSeq
     val clique = for (i <- 1L to 5L; j <- (i + 1) to 5L) yield (i, j)
     val pairs = (chain ++ clique ++ Seq((70L, 71L), (90L, 90L)))
       .toDF("id1", "id2")
-    // all four paths must agree: the bounded union-find ENDGAME both
-    // variants take below CcEndgameMaxEdges, and the distributed loops
-    // forced by endgameMaxEdges = 0 (round 12 — the endgame must be a
-    // pure shortcut, never a different answer)
-    val star = Dedup.connectedComponentsStar(pairs)
-    val starLoop = Dedup.connectedComponentsStar(pairs,
-      endgameMaxEdges = 0)
-    val prop = Dedup.connectedComponents(pairs, maxIter = 100)
-    val propLoop = Dedup.connectedComponents(pairs, maxIter = 100,
-      endgameMaxEdges = 0)
-    for (other <- Seq(starLoop, prop, propLoop)) {
-      assert(star.exceptAll(other).isEmpty && other.exceptAll(star).isEmpty)
-    }
+    // the bounded union-find ENDGAME taken below CcEndgameMaxEdges and
+    // the distributed loop forced by endgameMaxEdges = 0 must agree
+    // (round 12 — the endgame is a pure shortcut, never a different
+    // answer)
+    val endgame = Dedup.connectedComponents(pairs)
+    val loop = Dedup.connectedComponents(pairs, endgameMaxEdges = 0)
+    assert(endgame.exceptAll(loop).isEmpty && loop.exceptAll(endgame).isEmpty)
+    assert(endgame.count() == 64 + 5 + 2 + 1)
     // and on the real LSH dup graph of the corpus
     val lsh = Dedup.minhashNearDups(docs, "doc_id", "sh", 0.8)
       .select(F.col("id1"), F.col("id2"))
-    val starR = Dedup.connectedComponentsStar(lsh)
-    val starLoopR = Dedup.connectedComponentsStar(lsh,
-      endgameMaxEdges = 0)
-    val propR = Dedup.connectedComponents(lsh)
-    for (other <- Seq(starLoopR, propR)) {
-      assert(starR.exceptAll(other).isEmpty
-        && other.exceptAll(starR).isEmpty)
+    val endgameR = Dedup.connectedComponents(lsh)
+    val loopR = Dedup.connectedComponents(lsh, endgameMaxEdges = 0)
+    assert(endgameR.exceptAll(loopR).isEmpty
+      && loopR.exceptAll(endgameR).isEmpty)
+  }
+
+  test("CC fails loudly when maxIter runs out above the endgame bound") {
+    import spark.implicits._
+    // a 64-node chain needs more than one star round; with the endgame
+    // disabled the loop must refuse to return its unconverged labels
+    val chain = (100L to 163L).sliding(2).map(s => (s(0), s(1))).toSeq
+      .toDF("id1", "id2")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(chain, maxIter = 1, endgameMaxEdges = 0)
     }
+    assert(e.getMessage.contains("did not converge in 1 rounds"))
   }
 
   test("CC star loop -> endgame HANDOFF: rounds contract, then union-find") {
@@ -576,11 +579,9 @@ class PipelineSpec extends SparkSpec {
     val pairs = chains.toDF("id1", "id2")
     // bound 5,000 < 21,999 edges: rounds run, contract below the
     // bound, then the endgame finishes — must equal both pure paths
-    val hybrid = Dedup.connectedComponentsStar(pairs,
-      endgameMaxEdges = 5000)
-    val pureLoop = Dedup.connectedComponentsStar(pairs,
-      endgameMaxEdges = 0)
-    val pureEndgame = Dedup.connectedComponentsStar(pairs,
+    val hybrid = Dedup.connectedComponents(pairs, endgameMaxEdges = 5000)
+    val pureLoop = Dedup.connectedComponents(pairs, endgameMaxEdges = 0)
+    val pureEndgame = Dedup.connectedComponents(pairs,
       endgameMaxEdges = 1000000)
     assert(hybrid.exceptAll(pureLoop).isEmpty
       && pureLoop.exceptAll(hybrid).isEmpty, "hybrid != pure loop")
@@ -600,28 +601,22 @@ class PipelineSpec extends SparkSpec {
     // round-12 ADVICE: the union-find endgame casts ids to long, so
     // double ids 1.2 and 1.7 would BOTH truncate to 1 and merge two
     // distinct components; string ids would cast to null and crash.
-    // Non-integral ids must route to the cast-free distributed loops.
+    // Non-integral ids must route to the cast-free distributed loop.
     val dbl = Seq((1.2, 2.5), (1.7, 3.5)).toDF("id1", "id2")
-    for (cc <- Seq(Dedup.connectedComponents(dbl),
-        Dedup.connectedComponentsStar(dbl))) {
-      val got = cc.collect().map(r => r.getDouble(0) -> r.getDouble(1))
-        .toMap
-      assert(got == Map(1.2 -> 1.2, 2.5 -> 1.2, 1.7 -> 1.7, 3.5 -> 1.7),
-        s"double ids merged/mangled: $got")
-    }
+    val gotDbl = Dedup.connectedComponents(dbl).collect()
+      .map(r => r.getDouble(0) -> r.getDouble(1)).toMap
+    assert(gotDbl == Map(1.2 -> 1.2, 2.5 -> 1.2, 1.7 -> 1.7, 3.5 -> 1.7),
+      s"double ids merged/mangled: $gotDbl")
     val str = Seq(("a", "b"), ("b", "c"), ("x", "y")).toDF("id1", "id2")
-    for (cc <- Seq(Dedup.connectedComponents(str),
-        Dedup.connectedComponentsStar(str))) {
-      val got = cc.collect().map(r => r.getString(0) -> r.getString(1))
-        .toMap
-      assert(got == Map("a" -> "a", "b" -> "a", "c" -> "a",
-        "x" -> "x", "y" -> "x"), s"string ids mislabeled: $got")
-    }
+    val gotStr = Dedup.connectedComponents(str).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(gotStr == Map("a" -> "a", "b" -> "a", "c" -> "a",
+      "x" -> "x", "y" -> "x"), s"string ids mislabeled: $gotStr")
     // integral ids still take the endgame path and agree with a
     // forced distributed run (the gate must not change answers)
     val ints = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id1", "id2")
-    val a = Dedup.connectedComponentsStar(ints)
-    val b = Dedup.connectedComponentsStar(ints, endgameMaxEdges = 0)
+    val a = Dedup.connectedComponents(ints)
+    val b = Dedup.connectedComponents(ints, endgameMaxEdges = 0)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 

@@ -119,59 +119,16 @@ class PropertySpec extends AnyFunSuite {
     forAll(gen, n = 10) { case (xs: List[Double], q: Double) =>
       val df = xs.toDF("x")
       val got = graft.ops.Quantiles.exact(df, "x", Seq(q)).head
+      // a tiny collect limit forces the histogram refinement rounds
+      val refined = graft.ops.Quantiles.exactMulti(df, Seq("x"), Seq(q),
+        k = 64, collectLimit = 2)("x").head
       val sorted = xs.sorted
       val pos = q * (sorted.length - 1)
       val (lo, hi) = (sorted(pos.floor.toInt), sorted(pos.ceil.toInt))
       val want = lo + (pos - pos.floor) * (hi - lo)
-      assert(math.abs(got - want) <= 1e-9 * math.max(1.0, math.abs(want)),
-        s"q=$q got=$got want=$want n=${xs.length}")
-    }
-  }
-
-  test("property: ungrouped warm brackets are count-verified — exact for ANY probes") {
-    // round-12 ungrouped GK warm-start: the bracket is a performance
-    // HINT only — sentinel bins keep rank arithmetic global, so the
-    // engine must return the exact sorted-rank answer for GOOD probes,
-    // COLLAPSED probes, probes around the WRONG quantile, and even an
-    // INVERTED (lo > hi) bracket. collectLimit is forced low so the
-    // refinement loop (where warm lives) actually runs at test size.
-    val gen = Gen.zip(
-      Gen.oneOf(1, 2, 3),
-      Gen.listOfN(2, Gen.oneOf(0.0, 0.25, 0.5, 0.9, 1.0)),
-      Gen.oneOf(0, 1, 2, 3))
-    forAll(gen, n = 6) { case (kind, qsRaw, probeKind) =>
-      val qs = qsRaw.distinct
-      val n = 3000 // ≥ WarmMinN so the warm path engages
-      val xs = (0 until n).map { i =>
-        kind match {
-          case 1 => ((i % 7) - 3).toDouble            // dup-heavy
-          case 2 => ((i * 1234567L) % 1000007L).toDouble // wide
-          case _ => -((i * 31 % 977)).toDouble        // negative
-        }
-      }
-      val df = xs.toDF("x")
-      val sorted = xs.sorted.toIndexedSeq
-      def atQ(q: Double): Double = {
-        val pos = q * (n - 1)
-        val (lo, hi) = (sorted(pos.floor.toInt), sorted(pos.ceil.toInt))
-        lo + (pos - pos.floor) * (hi - lo)
-      }
-      def v(q: Double): Double =
-        sorted(math.max(0, math.min(n - 1, (q * (n - 1)).round.toInt)))
-      val probes: Seq[Double] = probeKind match {
-        case 0 => qs.flatMap(q => Seq(v(q - 0.02), v(q + 0.02))) // good
-        case 1 => qs.flatMap(_ => Seq(v(0.1), v(0.1)))  // collapsed, wrong
-        case 2 => qs.flatMap(q => Seq(v(1.0 - q - 0.05), v(1.0 - q + 0.05)))
-          .map(x => x) // mirrored — usually the wrong quantile entirely
-        case _ => qs.flatMap(q => Seq(v(q + 0.1), v(q - 0.1))) // inverted
-      }
-      val got = graft.ops.Quantiles.exactMulti(df, Seq("x"), qs,
-        k = 64, collectLimit = 50, warm = Map("x" -> probes))("x")
-      qs.zip(got).foreach { case (q, x) =>
-        val want = atQ(q)
+      for (x <- Seq(got, refined))
         assert(math.abs(x - want) <= 1e-9 * math.max(1.0, math.abs(want)),
-          s"q=$q got=$x want=$want kind=$kind probeKind=$probeKind")
-      }
+          s"q=$q got=$x want=$want n=${xs.length}")
     }
   }
 

@@ -126,7 +126,7 @@ object ScaleProbe {
     //  - 40,000 chains → 1.96M edges, forest 1.96M > bound: the
     //    endgame is disabled-BY-SIZE for the entire run, so a
     //    converged, fully-correct result here is the distributed
-    //    loop's own (the require inside connectedComponentsStar fails
+    //    loop's own (the require inside connectedComponents fails
     //    loudly if 30 rounds ever stop sufficing).
     import spark.implicits._
     def chains(n: Int) = spark.range(0L, n.toLong * 49L).select(
@@ -135,7 +135,7 @@ object ScaleProbe {
       ((F.col("id") / 49).cast("long") * 64L
         + F.col("id") % 49 + 1L).as("id2"))
     def assertCc(n: Int, tag: String): Long = {
-      val cc = graft.dedup.Dedup.connectedComponentsStar(chains(n))
+      val cc = graft.dedup.Dedup.connectedComponents(chains(n))
       val bad = cc.filter(
         F.col("comp") =!= F.expr("(id div 64) * 64")).count()
       require(bad == 0L, s"cc-crossover $tag: $bad mislabeled nodes")
