@@ -181,7 +181,8 @@ object MiscQueries extends QueryRegistry {
     // oracle computes the same aggregate from the parquet source —
     // equal because shortest-repr double writing round-trips exactly.
     "q29_csv_ingest" -> { (s, dir) =>
-      val out = s"${sys.props.getOrElse("user.dir", ".")}/target/q29_csv_ingest"
+      val out = java.nio.file.Paths.get("target", "q29_csv_ingest")
+        .toAbsolutePath.toString
       graft.sources.ReadTable.writetable(
         T.load(s, dir, "customer")
           .select("c_custkey", "c_mktsegment", "c_acctbal"), out)

@@ -15,43 +15,43 @@ object StreamQueries extends QueryRegistry {
 
   private def uniq(prefix: String) = s"${prefix}_${System.nanoTime()}"
 
-  /** Stream-stream join watermark (q104). The watermark bounds join
-    * state to watermark+bound of event time, so this IS the state
-    * budget. The 60-day default is CORPUS-DRIVEN: the verify corpus
-    * ingests months of unordered history in one batch, so event-time
-    * regressions span the whole range. A production deployment with
-    * near-ordered ingest should set GRAFT_STREAM_WATERMARK to
-    * minutes-to-hours — state then stays proportional to actual
-    * disorder, not history length.
+  /** Stream-stream join watermark (q104/q282) and the event-time
+    * watermark of q340/q343. The watermark bounds join state to
+    * watermark+bound of event time, so this IS the state budget. The
+    * 60 days are CORPUS-DRIVEN: the verify corpus ingests months of
+    * unordered history in one batch, so event-time regressions span
+    * the whole range.
     *
     * LATE-DATA DROP (round-10 ADVICE): attaching this watermark to the
     * stateful pipelines (q340/q343 flatMapGroupsWithState, the
     * stream-stream joins) means events more than this far behind the
     * max seen event time are dropped BEFORE the stateful operator in
-    * multi-batch runs — GRAFT_STREAM_WATERMARK bounds input
-    * COMPLETENESS, not just state size. The single-batch verify run
-    * never advances the watermark mid-data so nothing drops there;
-    * operators sizing the TTL horizon must size the lateness budget
-    * with it. */
-  private val streamJoinWatermark =
-    sys.env.getOrElse("GRAFT_STREAM_WATERMARK", "60 days")
+    * multi-batch runs — the watermark bounds input COMPLETENESS, not
+    * just state size, which is why it is a constant and not a
+    * setting. The single-batch verify run never advances the
+    * watermark mid-data so nothing drops there. */
+  private val streamJoinWatermark = "60 days"
 
-  /** Streaming source over the events parquet, with T.load's events
-    * `ts` layout ([[T.read]]). */
-  private def eventsStream(s: SparkSession, dir: String): DataFrame =
-    T.read(s, "events") {
-      // file-stream sources take a DIRECTORY; glob-filter to the events
-      // file inside the sf dir. NO maxFilesPerTrigger here: AvailableNow
-      // processes everything in one micro-batch — per-batch fixed costs
-      // (state-store commit fan-out, complete-mode re-emission) scale
-      // with batch COUNT, so the verify/bench path wants exactly one.
-      // The micro-batch-per-file parity path (reference minibatch
-      // iterator) is DataStream.openStream, exercised in tests.
+  /** Streaming source over the `name` parquet of an sf dir, with
+    * T.load's column layout ([[T.read]]). File-stream sources take a
+    * DIRECTORY; glob-filter to the one file inside the sf dir. NO
+    * maxFilesPerTrigger here: AvailableNow processes everything in one
+    * micro-batch — per-batch fixed costs (state-store commit fan-out,
+    * complete-mode re-emission) scale with batch COUNT, so the
+    * verify/bench path wants exactly one. The micro-batch-per-file
+    * parity path (reference minibatch iterator) is
+    * DataStream.openStream, exercised in tests. */
+  private def tableStream(s: SparkSession, dir: String,
+                          name: String): DataFrame =
+    T.read(s, name) {
       s.readStream
-        .schema(s.read.parquet(s"$dir/events.parquet").schema)
-        .option("pathGlobFilter", "events.parquet")
+        .schema(s.read.parquet(s"$dir/$name.parquet").schema)
+        .option("pathGlobFilter", s"$name.parquet")
         .parquet(dir)
     }
+
+  private def eventsStream(s: SparkSession, dir: String): DataFrame =
+    tableStream(s, dir, "events")
 
   /** Run a streaming aggregate to completion with a bounded state-store
     * footprint: state partitions = min(8, session shuffle partitions) —
@@ -63,21 +63,23 @@ object StreamQueries extends QueryRegistry {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
     s.conf.set(key, math.min(8, prev.toInt).toString)
-    try {
+    val finished = try {
       val q = df.writeStream.outputMode(mode)
         .format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       // AvailableNow terminates on its own; the bound is insurance so a
       // wedged stream cannot stall the driver's whole verify run.
-      q.awaitTermination(600000L)
-      q.stop()
+      try q.awaitTermination(600000L) finally q.stop()
     } finally s.conf.set(key, prev)
     // the memory sink registered a temp view named after the query;
     // drop it so the session does not keep every run's rows (the
     // frame's analyzed plan still holds the sink)
     val out = s.table(name)
     s.catalog.dropTempView(name)
+    // a stream stopped before it finished left partial sink rows (in
+    // append mode: without the final watermark flush) — not a result
+    require(finished, s"stream $name did not terminate within 600 s")
     out
   }
 
@@ -112,10 +114,7 @@ object StreamQueries extends QueryRegistry {
       width: Int = 8192, depth: Int = 4, slack: Int = 20): DataFrame = {
     import graft.sketch.CountMin
     import graft.functions.CounterArrayAgg
-    val schema = s.read.parquet(s"$dir/lineitem.parquet").schema
-    val cells = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(dir)
+    val cells = tableStream(s, dir, "lineitem")
       .select(F.explode(F.expr(CountMin.cellsOfHashExpr(
         "xxhash64(l_partkey)", width, depth))).as("__i"))
       .agg(CounterArrayAgg.counters(F.col("__i"), width * depth).as("cm"))
@@ -150,68 +149,30 @@ object StreamQueries extends QueryRegistry {
     * store overhead ≈ 170 bytes. The budget below divides by this. */
   private[graft] val StreamTopKBytesPerKey = 170L
 
-  /** Exact-path state budget for q341: the exact top-k keeps ONE
+  /** Exact-path key budget for q341: the exact top-k keeps ONE
     * state row per distinct key, so the key-universe cardinality is
-    * the state size. The budget is a configurable cluster-wide state
-    * allowance — GRAFT_STREAM_TOPK_STATE_BUDGET as a size string
-    * ("17g", "512m", "64k", or raw bytes; system property wins over
-    * env so tests can drive it) — divided by [[StreamTopKBytesPerKey]].
-    * Default "17g" ≈ 10⁸ keys (the documented outage line is ~10⁹ /
-    * 170 GB); past the budget the CountMin fallback's one-row state
-    * is the only shape that survives. The gate reads the key
-    * DIMENSION's row count — q341's key is an FK into the part
-    * catalog, and a parquet count(*) is footer metadata, not a scan —
-    * the same cheap-observable pattern as `Quantiles.exactMulti`'s
-    * n > k·collectLimit auto-sketch gate. Read per call (a def, not a
-    * cached val) so an operator redeploy with a new allowance takes
-    * effect without a JVM bounce. */
-  private[graft] def streamTopKMaxExactKeys: Long = {
-    val raw = sys.props.get("graft.stream.topk.state.budget")
-      .orElse(sys.env.get("GRAFT_STREAM_TOPK_STATE_BUDGET"))
-      .getOrElse("17g")
-    math.max(1L, parseSizeBytes(raw) / StreamTopKBytesPerKey)
-  }
-
-  /** Anchored size parse — "17g" / "512m" / "64k" / "123456" (bytes).
-    * Rejects anything else (same fail-loud contract as
-    * [[parseIntervalMs]]: a mis-typed budget must not silently
-    * become a different budget). Overflow rejects too (round-14
-    * advice): an unchecked multiply turns "9999999999g" into a
-    * negative Long, which the key-budget clamp would silently read
-    * as the tiniest possible budget — the opposite of fail-loud. */
-  private[graft] def parseSizeBytes(s: String): Long = {
-    val m = """^(\d+)\s*([kmg]?)b?$""".r
-      .findFirstMatchIn(s.trim.toLowerCase)
-      .getOrElse(throw new IllegalArgumentException(s"bad size: $s"))
-    val unit = m.group(2) match {
-      case "k" => 1024L
-      case "m" => 1024L * 1024
-      case "g" => 1024L * 1024 * 1024
-      case _ => 1L
-    }
-    try Math.multiplyExact(m.group(1).toLong, unit)
-    catch {
-      case _: ArithmeticException | _: NumberFormatException =>
-        throw new IllegalArgumentException(s"size overflows Long: $s")
-    }
-  }
+    * the state size. A 17 GiB state allowance divided by
+    * [[StreamTopKBytesPerKey]] ≈ 10⁸ keys (the documented outage line
+    * is ~10⁹ / 170 GB); past it the CountMin fallback's one-row state
+    * is the only shape that survives. */
+  private[graft] val StreamTopKMaxExactKeys: Long =
+    (17L << 30) / StreamTopKBytesPerKey
 
   /** q341's registered path with the round-13 AUTO-GATE: exact
     * per-key streaming state while the key universe fits the budget,
-    * the [[streamTopKSketch]] CountMin fallback past it (or when
-    * GRAFT_STREAM_TOPK_SKETCH=1 forces it). Both paths return the
-    * same top-10 contract — StreamSpec pins the flip. */
+    * the [[streamTopKSketch]] CountMin fallback past it. The gate
+    * reads the key DIMENSION's row count — q341's key is an FK into
+    * the part catalog, and a parquet count(*) is footer metadata, not
+    * a scan — the same cheap-observable pattern as
+    * `Quantiles.exactMulti`'s n > k·collectLimit auto-sketch gate.
+    * Both paths return the same top-10 contract — StreamSpec pins the
+    * flip through `maxExactKeys`. */
   private[graft] def streamTopKAuto(s: SparkSession, dir: String,
-      maxExactKeys: Long = streamTopKMaxExactKeys): DataFrame = {
-    val forced = sys.env.get("GRAFT_STREAM_TOPK_SKETCH").contains("1")
-    if (forced ||
-        s.read.parquet(s"$dir/part.parquet").count() > maxExactKeys)
+      maxExactKeys: Long = StreamTopKMaxExactKeys): DataFrame = {
+    if (s.read.parquet(s"$dir/part.parquet").count() > maxExactKeys)
       streamTopKSketch(s, dir)
     else {
-      val schema = s.read.parquet(s"$dir/lineitem.parquet").schema
-      val cnt = s.readStream.schema(schema)
-        .option("pathGlobFilter", "lineitem.parquet")
-        .parquet(dir)
+      val cnt = tableStream(s, dir, "lineitem")
         .groupBy("l_partkey")
         .agg(F.count(F.lit(1)).as("n"),
           F.sum(F.col("l_quantity").cast("long")).as("qty"))
@@ -227,29 +188,9 @@ object StreamQueries extends QueryRegistry {
     * (event-time timeout against the stream watermark), so the state
     * store is bounded by users ACTIVE within the TTL horizon, not by
     * every user ever seen — the round-9 verdict's one monotonically
-    * growing resource, closed. Parsed from GRAFT_STREAM_STATE_TTL
-    * (default "90 days" — generous because the verify corpus ingests
-    * months of history in one batch; production sets it to its
-    * retention policy). */
-  private[graft] lazy val streamStateTtlMs: Long = parseIntervalMs(
-    sys.env.getOrElse("GRAFT_STREAM_STATE_TTL", "90 days"))
-
-  /** Anchored parse: "0.5 days" or "90 dayz" must REJECT, not
-    * silently mis-read as "5 days"/"90 days" (a 10× TTL error with no
-    * signal); lazy val above so a bad env value surfaces at first
-    * streaming use, not as ExceptionInInitializerError on any
-    * StreamQueries access (batch oracle lookups included). */
-  private[graft] def parseIntervalMs(s: String): Long = {
-    val m = """^(\d+)\s*(day|hour|minute|second)s?$""".r
-      .findFirstMatchIn(s.trim.toLowerCase)
-      .getOrElse(throw new IllegalArgumentException(s"bad interval: $s"))
-    m.group(1).toLong * (m.group(2) match {
-      case "day" => 86400000L
-      case "hour" => 3600000L
-      case "minute" => 60000L
-      case _ => 1000L
-    })
-  }
+    * growing resource, closed. 90 days — generous because the verify
+    * corpus ingests months of history in one batch. */
+  private val streamStateTtlMs: Long = 90L * 86400000L
 
   /** q340's stateful core, factored so StreamSpec can drive it with a
     * crafted multi-batch MemoryStream: per-user exact integer moments
@@ -391,8 +332,9 @@ object StreamQueries extends QueryRegistry {
     // State is bounded by open windows × keys regardless of stream
     // length.
     "q125_stream_append_window" -> { (s, dir) =>
-      val win = DataStream.windowedAggLate(
-        eventsStream(s, dir), "ts", "event_type", "1 hour", "1 hour")
+      val win = DataStream.windowedAgg(
+        eventsStream(s, dir).withWatermark("ts", "1 hour"),
+        "ts", "event_type", "1 hour")
       runStateful(s, win, uniq("stream_append"), mode = "append")
     },
 
@@ -421,20 +363,20 @@ object StreamQueries extends QueryRegistry {
     },
 
     // Gap-based sessionization, batch path (30-minute gap); the
-    // stateful-streaming twin (flatMapGroupsWithState) is exercised in
-    // StreamSpec.
+    // streaming twin is q165's session_window, which StreamSpec also
+    // checks against this plan.
     "q71_sessionize" -> { (s, dir) =>
       graft.streaming.Sessionize.sessionizeBatch(
         graft.T.load(s, dir, "events"), 1800L)
     },
 
-    // Native Catalyst session windows — the THIRD implementation of
-    // gap-sessionization (q71 = declarative lag/window batch plan,
-    // StreamSpec = flatMapGroupsWithState), all against one oracle
-    // family. Timestamps are second-truncated first (q71's gap compares
-    // floor(epoch)); session_window merges INCLUSIVELY at the boundary
-    // (an event at exactly windowEnd extends the session — verified on
-    // a 1801-second-gap pair), so gap = 1800 s on whole-second stamps
+    // Native Catalyst session windows — the batch form of q165's
+    // streaming sessions; q71 is the declarative lag/window plan, and
+    // all three answer to one oracle family. Timestamps are
+    // second-truncated first (q71's gap compares floor(epoch));
+    // session_window merges INCLUSIVELY at the boundary (an event at
+    // exactly windowEnd extends the session — verified on a
+    // 1801-second-gap pair), so gap = 1800 s on whole-second stamps
     // reproduces "diff <= 1800 → same session" exactly. Session end =
     // window end - gap = the last event's second.
     "q113_session_window" -> { (s, dir) =>
@@ -544,13 +486,9 @@ object StreamQueries extends QueryRegistry {
     // what makes kept-docs-per-lang deterministic at every scale.
     // Bounded-state watermark variant in StreamSpec.
     "q96_stream_dedup" -> { (s, dir) =>
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream
-        .schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
+      val kept = tableStream(s, dir, "documents")
         .withColumn("__key", F.xxhash64(F.col("text")))
-      val kept = DataStream.dedupStream(src, Seq("lang", "__key"))
+        .dropDuplicates("lang", "__key")
         .select("doc_id", "lang")
       runStateful(s, kept, uniq("stream_dedup"), mode = "append")
         .groupBy("lang")
@@ -639,11 +577,7 @@ object StreamQueries extends QueryRegistry {
     // sink table (an unwindowed agg downstream of a stream-stream
     // join has no append-mode emission point — q104's note).
     "q282_stream_decontam" -> { (s, dir) =>
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val src = s.readStream
-        .schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
+      val src = tableStream(s, dir, "documents")
         // +1: an event time of EXACTLY epoch 0 equals the join's
         // initial watermark and is discarded as late (measured: doc 0
         // and its 14 matches silently vanished); the offset keeps the

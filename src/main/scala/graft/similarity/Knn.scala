@@ -13,20 +13,6 @@ import graft.plans.VectorExpressions.cosineF
   */
 object Knn {
 
-  /** Cosine similarity as a pure SQL higher-order-function expression.
-    * Kept as documentation/reference: HOFs are CodegenFallback (boxed
-    * per-element eval), so the hot paths below use the native codegen'd
-    * [[graft.plans.VectorExpressions.cosineF]] instead — identical
-    * results (same left-to-right double summation), ~10× cheaper.
-    */
-  def cosineExpr(a: String, b: String): String =
-    s"""aggregate(zip_with($a, $b, (x, y) -> cast(x as double) * cast(y as double)),
-                  cast(0.0 as double), (acc, v) -> acc + v)
-        / (sqrt(aggregate($a, cast(0.0 as double),
-                 (acc, v) -> acc + cast(v as double) * cast(v as double)))
-         * sqrt(aggregate($b, cast(0.0 as double),
-                 (acc, v) -> acc + cast(v as double) * cast(v as double))))"""
-
   /** Exact brute-force top-k cosine neighbors for each query vector.
     * Output: (query_id, neighbor_id, sim, rank) with deterministic
     * (sim desc, id asc) ranking.

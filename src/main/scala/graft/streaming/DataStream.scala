@@ -55,11 +55,11 @@ object DataStream {
 
   /** Event-time tumbling-window aggregate — the Spark superset the
     * reference lacks (SURVEY §2.10: "no watermarks, no event-time
-    * windows"). Epoch-aligned windows, complete output mode: no
-    * watermark here, because a watermark is IGNORED in complete mode
-    * (all windows are re-emitted each batch) and merely forces useless
-    * event-time tracking. Late-data eviction lives in
-    * [[windowedAggLate]].
+    * windows"). Epoch-aligned windows. Complete mode (q61) passes an
+    * unwatermarked stream: a watermark is IGNORED there (all windows
+    * are re-emitted each batch). Append mode (q125) passes a stream
+    * watermarked on `tsCol`: windows close, and their state is
+    * evicted, once the watermark passes window end.
     */
   def windowedAgg(events: DataFrame, tsCol: String, keyCol: String,
                   window: String): DataFrame =
@@ -70,42 +70,6 @@ object DataStream {
       .select(
         F.unix_timestamp(F.col("window.start")).as("window_start"),
         F.col(keyCol), F.col("n"), F.col("total"))
-
-  /** Watermarked variant for append-mode emission: windows close (and
-    * state is evicted) once the watermark passes window end — the
-    * unbounded-stream path where complete mode would hold every window
-    * forever. */
-  def windowedAggLate(events: DataFrame, tsCol: String, keyCol: String,
-                      window: String, watermark: String): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(F.window(F.col(tsCol), window), F.col(keyCol))
-      .agg(F.count(F.lit(1)).as("n"),
-           F.round(F.sum("value"), 2).as("total"))
-      .select(
-        F.unix_timestamp(F.col("window.start")).as("window_start"),
-        F.col(keyCol), F.col("n"), F.col("total"))
-
-  /** Streaming exact dedup: emit only the FIRST row seen per key —
-    * the streaming twin of `Dedup.exactDups` for continuous ingest
-    * pipelines (dedup-at-the-door before anything lands). Pre-hash
-    * text keys to xxhash64 so the dedup state holds 8-byte keys, never
-    * documents. Unbounded state: exact over the whole stream — the
-    * verify/bench path, and correct whenever the key space fits state.
-    */
-  def dedupStream(stream: DataFrame, keyCols: Seq[String]): DataFrame =
-    stream.dropDuplicates(keyCols)
-
-  /** Bounded-state streaming dedup — the unbounded-stream production
-    * path: duplicates are only tracked within the event-time watermark,
-    * and state older than it is evicted. Exact iff a duplicate never
-    * arrives later than `delay` after its first occurrence (the usual
-    * contract for crawl/ingest re-delivery). */
-  def dedupStreamBounded(stream: DataFrame, tsCol: String,
-                         delay: String, keyCols: Seq[String]): DataFrame =
-    stream
-      .withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark(keyCols)
 
   /** Per-key-window throttle (rate limit at the door): of all events a
     * (key, event-time window) receives, keep only the `n` EARLIEST by

@@ -1,25 +1,16 @@
 package graft.streaming
 
-import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-final case class SessEvent(user_id: Long, ts: Timestamp, value: Double)
-final case class SessState(start: Long, last: Long, n: Long, total: Double)
-final case class Session(user_id: Long, session_start: Long,
-                         session_end: Long, n_events: Long, total: Double)
 
 /** Sessionization — gap-based event grouping per user.
   *
-  * Two implementations with identical semantics:
-  *  - [[sessionizeBatch]]: declarative window plan (lag → gap flag →
-  *    running session id → aggregate). One shuffle on user_id; this is
-  *    the backfill/batch path at any scale.
-  *  - [[sessionizeStream]]: `flatMapGroupsWithState` with event-time
-  *    timeout — the reference has no stateful streaming (SURVEY §2.10);
-  *    this is the Spark-superset path for live sessionization. State
-  *    per in-flight session only.
+  * [[sessionizeBatch]] is the declarative window plan (lag → gap flag →
+  * running session id → aggregate): one shuffle on user_id, the
+  * backfill/batch path at any scale (q71). Live sessionization is
+  * Catalyst's native `session_window` on a watermarked stream (q165,
+  * StreamQueries) — the reference has no stateful streaming (SURVEY
+  * §2.10); StreamSpec checks that path against this plan.
   */
 object Sessionize {
 
@@ -41,46 +32,5 @@ object Sessionize {
         F.unix_timestamp(F.max("ts")).as("session_end"),
         F.count(F.lit(1)).as("n_events"),
         F.round(F.sum("value"), 2).as("total"))
-  }
-
-  /** Streaming: event-time sessionization with per-user state and
-    * watermark-driven session close. */
-  def sessionizeStream(events: Dataset[SessEvent],
-                       gapSec: Long): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessState, Session](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, it: Iterator[SessEvent], state: GroupState[SessState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(Session(uid, s.start, s.last, s.n, s.total))
-          } else {
-            val sorted = it.toSeq.sortBy(_.ts.getTime)
-            var cur = state.getOption
-            val closed = Seq.newBuilder[Session]
-            sorted.foreach { e =>
-              val t = e.ts.getTime / 1000
-              cur match {
-                case Some(s) if t - s.last <= gapSec =>
-                  cur = Some(SessState(s.start, t, s.n + 1,
-                    s.total + e.value))
-                case Some(s) =>
-                  closed += Session(uid, s.start, s.last, s.n, s.total)
-                  cur = Some(SessState(t, t, 1, e.value))
-                case None =>
-                  cur = Some(SessState(t, t, 1, e.value))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.last * 1000 + gapSec * 1000)
-            }
-            closed.result().iterator
-          }
-      }
   }
 }

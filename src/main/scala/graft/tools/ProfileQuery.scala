@@ -8,9 +8,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   *            eager jobs the query runs while being built
   *            (checkpoints, adaptive counts, iterative loops);
   *   exec   — the noop-sink action itself;
-  * and prints every Spark job's wall time. Run 2 reuses warmed
-  * codegen/JIT, so (run1 − run2) ≈ the first-execution overhead
-  * (janino compile + interpreted warmup) the REPS=1 driver bench pays.
+  * and prints the wall time of every Spark job of 20 ms or more.
+  * Run 2 reuses warmed codegen/JIT, so (run1 − run2) ≈ the
+  * first-execution overhead (janino compile + interpreted warmup) the
+  * REPS=1 driver bench pays.
   *
   *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.ProfileQuery q231"
   */
@@ -38,7 +39,6 @@ object ProfileQuery {
           done.add((je.jobId, (je.time - st._1) / 1e3, st._2))
       }
     })
-    val verbose = sys.env.contains("GRAFT_PROFILE_JOBS")
     targets.foreach { case (name, fn) =>
       (1 to reps).foreach { rep =>
         done.clear()
@@ -59,7 +59,7 @@ object ProfileQuery {
         println(f"[profile] $name rep=$rep build=${(t1 - t0) / 1e9}%.3f " +
           f"exec=${(t2 - t1) / 1e9}%.3f unpersist=${(t3 - t2) / 1e9}%.3f " +
           f"total=${(t3 - t0) / 1e9}%.3f jobs=${js.size} jobwall=$sum%.3f")
-        if (verbose) js.foreach { case (id, w, d) =>
+        js.foreach { case (id, w, d) =>
           if (w >= 0.02)
             println(f"[profile]   job $id%3d $w%7.3f  ${d.take(80)}")
         }

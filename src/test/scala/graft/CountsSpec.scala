@@ -174,6 +174,35 @@ class CountsSpec extends AnyFunSuite {
     assert(v2.exists(_.contains("declared 341, actual 343")))
   }
 
+  test("src/main reads no settings beyond the harness deployment ones") {
+    // Every environment variable or system property the library reads
+    // is a setting someone can change under the oracle gate. The only
+    // ones allowed are the harness deployment settings (input dir,
+    // threads, query filter, reps, and the AQE switch whose two values
+    // the AQE-invariance gate runs); a read whose name is not a string
+    // literal cannot be checked and is reported as "<computed>".
+    val allowed = Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS",
+      "SPARK_GRAFT_ONLY", "SPARK_GRAFT_REPS", "SPARK_GRAFT_AQE")
+    val access = """sys\.env|sys\.props|System\.getenv|System\.getProperty"""
+    val named = ("(" + access + """)(?:\.\w+)?\(\s*"([^"]*)"""").r
+    def sources(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) sources(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val reads = sources(new java.io.File("src/main")).flatMap { f =>
+      readFile(f).split("\n").zipWithIndex.flatMap { case (line, i) =>
+        val names = named.findAllMatchIn(line).map(_.group(2)).toSeq
+        val unnamed = access.r.findAllMatchIn(line).size - names.size
+        (names ++ Seq.fill(unnamed)("<computed>"))
+          .map(n => (s"${f.getPath}:${i + 1}", n))
+      }
+    }
+    assert(reads.nonEmpty, "scan found no reads at all (wrong directory?)")
+    val extra = reads.filterNot(r => allowed(r._2))
+    assert(extra.isEmpty, "settings read outside the harness set:\n" +
+      extra.map { case (at, n) => s"$at: $n" }.mkString("\n"))
+  }
+
   test("suite discovery sees every spec source file") {
     // Every *Spec.scala in the test tree must contribute at least one
     // discovered class — a spec written with an unrecognized parent

@@ -4,12 +4,14 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
-import graft.streaming.{SessEvent, Sessionize}
+import graft.streaming.Sessionize
 
-/** Stateful streaming sessionization vs the batch plan. */
+final case class SessEvent(user_id: Long, ts: Timestamp, value: Double)
+
+/** Stateful streaming operators vs their batch twins. */
 class StreamSpec extends SparkSpec {
 
-  test("flatMapGroupsWithState sessions match batch sessionization") {
+  test("native streaming session_window matches batch sessionization") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val base = 1700000000L
@@ -22,21 +24,27 @@ class StreamSpec extends SparkSpec {
       ev(2, 100, 10.0), ev(2, 900, 20.0))
     val stream = MemoryStream[SessEvent]
     stream.addData(events)
-    val q = Sessionize.sessionizeStream(stream.toDS(), 1800L)
+    // q165's streaming form: watermarked session_window, append mode
+    val q = stream.toDS().withWatermark("ts", "1 hour")
+      .groupBy(F.col("user_id"),
+        F.session_window(F.col("ts"), "1800 seconds").as("sw"))
+      .agg(F.count(F.lit(1)).as("n_events"),
+        F.round(F.sum("value"), 2).as("total"))
+      .select(F.col("user_id"),
+        F.unix_timestamp(F.col("sw.start")).as("session_start"),
+        (F.unix_timestamp(F.col("sw.end")) - 1800).as("session_end"),
+        F.col("n_events"), F.col("total"))
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("sess_test").start()
     q.processAllAvailable()
-    // advance watermark far past all sessions so they time out and emit
+    // advance watermark far past all sessions so they close and emit
     stream.addData(ev(99, 100000, 0.0))
     q.processAllAvailable()
-    // one more batch so timed-out state flushes
+    // one more batch so closed sessions flush
     stream.addData(ev(99, 100001, 0.0))
     q.processAllAvailable()
     q.stop()
     val got = spark.table("sess_test").filter(F.col("user_id") < 10)
-      .select(F.col("user_id"), F.col("session_start"),
-        F.col("session_end"), F.col("n_events"),
-        F.round(F.col("total"), 2).as("total"))
     val batch = Sessionize.sessionizeBatch(
       events.toDF().withColumn("event_id",
         F.monotonically_increasing_id()),
@@ -89,8 +97,8 @@ class StreamSpec extends SparkSpec {
     stream.addData(Seq(
       ev(1, 0, 1.0), ev(1, 60, 2.0), ev(2, 0, 3.0),
       ev(2, 120, 4.0), ev(3, 30, 5.0)))
-    val dedup = graft.streaming.DataStream.dedupStreamBounded(
-      stream.toDS().toDF(), "ts", "1 hour", Seq("user_id"))
+    val dedup = stream.toDS().toDF().withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("user_id")
     val q = dedup.writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("dedup_test").start()
     q.processAllAvailable()
@@ -115,8 +123,7 @@ class StreamSpec extends SparkSpec {
       val ms = MemoryStream[(String, String)]
       val src = ms.toDS().toDF("lang", "text")
         .withColumn("__key", F.xxhash64(F.col("text")))
-      val kept = graft.streaming.DataStream
-        .dedupStream(src, Seq("lang", "__key"))
+      val kept = src.dropDuplicates("lang", "__key")
       val q = kept.writeStream.outputMode(OutputMode.Append())
         .format("memory").queryName(name).start()
       batches.foreach { b => ms.addData(b); q.processAllAvailable() }
@@ -272,19 +279,6 @@ class StreamSpec extends SparkSpec {
     assert(!rows.exists(r => r.getLong(0) == 1),
       s"evicted user flagged from state that should be gone: " +
         rows.mkString(";"))
-  }
-
-  test("state-TTL interval parse is anchored (malformed input rejects)") {
-    import graft.queries.StreamQueries.parseIntervalMs
-    assert(parseIntervalMs("90 days") == 90L * 86400000L)
-    assert(parseIntervalMs("36 hours") == 36L * 3600000L)
-    assert(parseIntervalMs("1 minute") == 60000L)
-    assert(parseIntervalMs("45 seconds") == 45000L)
-    // unanchored parsing read "0.5 days" as "5 days" — a silent 10×
-    // TTL error; malformed units must reject too
-    intercept[IllegalArgumentException] { parseIntervalMs("0.5 days") }
-    intercept[IllegalArgumentException] { parseIntervalMs("90 dayz") }
-    intercept[IllegalArgumentException] { parseIntervalMs("days") }
   }
 
   test("q343 RTBF: a forget request wipes state across batches") {
@@ -471,10 +465,10 @@ class StreamSpec extends SparkSpec {
 
   test("q341 auto-gate flips to the sketch path on key cardinality") {
     // round-12 verdict stretch 7: the fallback switches AUTOMATICALLY
-    // on the key dimension's cardinality (streamTopKAuto), not only
-    // via the env override. Crossing the threshold must flip the
-    // PATH (observable in the streaming state rows: O(keys) exact vs
-    // ONE sketch row) while the top-10 output stays identical.
+    // on the key dimension's cardinality (streamTopKAuto). Crossing
+    // the threshold must flip the PATH (observable in the streaming
+    // state rows: O(keys) exact vs ONE sketch row) while the top-10
+    // output stays identical.
     import spark.implicits._
     val stateRows =
       scala.collection.concurrent.TrieMap[String, Long]()
@@ -506,7 +500,7 @@ class StreamSpec extends SparkSpec {
       TestIO.writeSingleParquet(
         (0 until nKeys).map(_.toLong).toDF("p_partkey"),
         dir, "part.parquet")
-      // 300 keys ≤ default budget → exact path (O(keys) state)
+      // 300 keys ≤ StreamTopKMaxExactKeys → exact path (O(keys) state)
       val exact = graft.queries.StreamQueries
         .streamTopKAuto(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -524,85 +518,5 @@ class StreamSpec extends SparkSpec {
       assert(cmRuns.size == 1 && cmRuns.head._2 == 1L,
         s"sketch path state: $stateRows")
     } finally spark.streams.removeListener(listener)
-  }
-
-  test("q341 state-budget override gates the path in both directions") {
-    // round-13 verdict task 2: the exact-keys budget is derived from
-    // a configurable state allowance, not a fixed constant. Drive the
-    // system-property form of GRAFT_STREAM_TOPK_STATE_BUDGET both
-    // ways across the SAME 300-key input: a 1k allowance (6 keys)
-    // must force the sketch; a 17g allowance (~10^8 keys) must force
-    // the exact path. Same observable as the auto-gate test: O(keys)
-    // exact state vs ONE sketch row, identical top-10 either way.
-    import spark.implicits._
-    val stateRows =
-      scala.collection.concurrent.TrieMap[String, Long]()
-    val listener = new org.apache.spark.sql.streaming
-        .StreamingQueryListener {
-      override def onQueryStarted(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        val rows = p.stateOperators.map(_.numRowsTotal).sum
-        if (p.name != null && rows > 0)
-          stateRows.put(p.name, math.max(
-            stateRows.getOrElse(p.name, 0L), rows))
-      }
-    }
-    val BudgetProp = "graft.stream.topk.state.budget"
-    spark.streams.addListener(listener)
-    try {
-      // budget parse is anchored: garbage and fractional sizes reject
-      assert(graft.queries.StreamQueries.parseSizeBytes("17g")
-        == 17L * 1024 * 1024 * 1024)
-      assert(graft.queries.StreamQueries.parseSizeBytes("512MB")
-        == 512L * 1024 * 1024)
-      assert(graft.queries.StreamQueries.parseSizeBytes("4096") == 4096L)
-      intercept[IllegalArgumentException] {
-        graft.queries.StreamQueries.parseSizeBytes("0.5g")
-      }
-      intercept[IllegalArgumentException] {
-        graft.queries.StreamQueries.parseSizeBytes("lots")
-      }
-      val nKeys = 300
-      val dir = "/tmp/q341_budget_override"
-      new java.io.File(dir).mkdirs()
-      val li = (0 until nKeys).flatMap { i =>
-        val reps = 1 + (if (i % 97 == 0) 40 + i / 97 else i % 3)
-        Seq.fill(reps)((i.toLong, (i % 7 + 1).toLong))
-      }.toDF("l_partkey", "l_quantity")
-      TestIO.writeSingleParquet(li, dir, "lineitem.parquet")
-      TestIO.writeSingleParquet(
-        (0 until nKeys).map(_.toLong).toDF("p_partkey"),
-        dir, "part.parquet")
-      // force-sketch below: 1k / 170 B = 6 keys < 300
-      sys.props(BudgetProp) = "1k"
-      assert(graft.queries.StreamQueries.streamTopKMaxExactKeys == 6L)
-      val sketch = graft.queries.StreamQueries
-        .streamTopKAuto(spark, dir)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      // force-exact above: 17g covers ~10^8 keys >= 300
-      sys.props(BudgetProp) = "17g"
-      assert(graft.queries.StreamQueries.streamTopKMaxExactKeys
-        > 100000000L)
-      val exact = graft.queries.StreamQueries
-        .streamTopKAuto(spark, dir)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      assert(exact.toSeq == sketch.toSeq,
-        s"paths disagree: ${exact.toSeq} vs ${sketch.toSeq}")
-      val exactRuns = stateRows.filter(_._1.startsWith("stream_topk"))
-        .filterNot(_._1.startsWith("stream_topk_cm"))
-      val cmRuns = stateRows.filter(_._1.startsWith("stream_topk_cm"))
-      assert(exactRuns.size == 1 && exactRuns.head._2 == nKeys.toLong,
-        s"exact path state: $stateRows")
-      assert(cmRuns.size == 1 && cmRuns.head._2 == 1L,
-        s"sketch path state: $stateRows")
-    } finally {
-      sys.props.remove(BudgetProp)
-      spark.streams.removeListener(listener)
-    }
   }
 }
