@@ -53,25 +53,15 @@ object StreamQueries extends QueryRegistry {
   private def eventsStream(s: SparkSession, dir: String): DataFrame =
     tableStream(s, dir, "events")
 
-  /** Run a streaming aggregate to completion with a bounded state-store
-    * footprint: state partitions = min(8, session shuffle partitions) —
-    * the stateful-shuffle partition count is fixed at first batch, and
-    * 32 near-empty HDFS-backed stores pay 32 commit+maintenance rounds
-    * for a toy stream. Restores the session conf afterwards. */
+  /** Run a streaming aggregate to completion into a memory sink, under
+    * [[DataStream.runAvailableNow]]'s conf scope (state partitions =
+    * min(8, session shuffle partitions), the non-forking checkpoint
+    * file manager, the session's codegen classloader), which restores
+    * the session conf afterwards. */
   private def runStateful(s: SparkSession, df: DataFrame, name: String,
                           mode: String = "complete"): DataFrame = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, math.min(8, prev.toInt).toString)
-    val finished = try {
-      val q = df.writeStream.outputMode(mode)
-        .format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      // AvailableNow terminates on its own; the bound is insurance so a
-      // wedged stream cannot stall the driver's whole verify run.
-      try q.awaitTermination(600000L) finally q.stop()
-    } finally s.conf.set(key, prev)
+    val finished = DataStream.runAvailableNow(s,
+      df.writeStream.outputMode(mode).format("memory").queryName(name))
     // the memory sink registered a temp view named after the query;
     // drop it so the session does not keep every run's rows (the
     // frame's analyzed plan still holds the sink)

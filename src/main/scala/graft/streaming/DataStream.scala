@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession, functions => F}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Structured-Streaming parity for the reference's DataStream
@@ -16,6 +17,63 @@ import org.apache.spark.sql.types.StructType
   * watermarking for late data.
   */
 object DataStream {
+
+  /** Runs `w` to completion (Trigger.AvailableNow, at most 600 s, then
+    * stopped) under the one conf scope every graft
+    * stream starts in; returns whether the stream finished. Each of
+    * the three settings is set before `start()` and restored after the
+    * run — `unset` when the caller had not set it — also when `start()`
+    * or the run throws. This is the only place in the engine that
+    * starts a stream.
+    *
+    *  - `spark.sql.shuffle.partitions` = min(8, current): the stateful
+    *    shuffle's partition count is fixed at the first batch, and 32
+    *    near-empty HDFS-backed stores pay 32 commit+maintenance rounds
+    *    for a toy stream.
+    *  - `spark.sql.streaming.checkpointFileManagerClass` = the
+    *    FileSystem-based manager. Spark's default FileContext manager
+    *    renames through `AbstractFileSystem.renameInternal`, which on
+    *    the local file system without native Hadoop IO forks a
+    *    `readlink` for the source and the destination of every state,
+    *    offset, commit and metadata file. The FileSystem manager
+    *    renames with `FileSystem.rename` (no fork); writes stay atomic
+    *    (temp file, then rename) and the `.crc` and checkpoint checksum
+    *    files are still written. The two managers differ only when the
+    *    destination already exists: FileContext refuses atomically,
+    *    the FileSystem manager checks `exists` and then renames. These
+    *    checkpoints are the memory and foreachBatch sinks' fresh
+    *    `temporary-*` directories (graft never sets
+    *    `checkpointLocation`), so each has exactly one writer and the
+    *    difference cannot arise. Do not run a stream with a durable or
+    *    shared checkpoint through this scope.
+    *  - `spark.sql.artifact.isolation.enabled` = false. A stream runs
+    *    in a clone of the session with a new session id, and with
+    *    isolation on the executor gives each id its own classloader;
+    *    the codegen cache is keyed by (classloader, code), so every
+    *    run recompiled byte-identical classes. The clone reads the
+    *    setting when it is created, at `start()`. Isolation only
+    *    separates artifacts a session adds (`addArtifact`), and graft
+    *    adds none. */
+  def runAvailableNow(s: SparkSession, w: DataStreamWriter[Row]): Boolean = {
+    val partitions = "spark.sql.shuffle.partitions"
+    val scope = Seq(
+      partitions -> math.min(8, s.conf.get(partitions).toInt).toString,
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[FileSystemBasedCheckpointFileManager].getName,
+      "spark.sql.artifact.isolation.enabled" -> "false")
+    val set = s.conf.getAll
+    val prev = scope.map { case (k, _) => k -> set.get(k) }
+    try {
+      scope.foreach { case (k, v) => s.conf.set(k, v) }
+      val q = w.trigger(Trigger.AvailableNow()).start()
+      // AvailableNow terminates on its own; the bound is insurance so a
+      // wedged stream cannot stall the driver's whole verify run.
+      try q.awaitTermination(600000L) finally q.stop()
+    } finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
 
   /** Micro-batch source: schema pinned up front like the reference's
     * first-batch schema reuse (src/datastream.jl:67-77, filldf!
@@ -160,7 +218,8 @@ object DataStream {
     require(n >= 1, s"row index must be >= 1, got $n")
     var seen = 0L
     var found: Option[Row] = None
-    val q = openStream(spark, dir, schema, format).writeStream
+    runAvailableNow(spark, openStream(spark, dir, schema, format)
+      .writeStream
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         if (found.isEmpty) {
           val u = batch.count()
@@ -170,10 +229,7 @@ object DataStream {
             found = Some(batch.collect()((n - seen - 1).toInt))
           } else seen += u
         }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
     found.getOrElse(sys.error(s"Did not find requested row $n " +
       s"(stream has ${seen} rows)")) // reference's error, with context
   }

@@ -50,6 +50,12 @@ class CountsSpec extends AnyFunSuite {
 
   private lazy val liveQueries: Int = SparkEntry.queries.size
 
+  /** Every .scala file under `d`, recursively. */
+  private def sources(d: java.io.File): Seq[java.io.File] =
+    d.listFiles().toSeq.flatMap(f =>
+      if (f.isDirectory) sources(f)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+
   /** Pure checker so the regression test below can demonstrate the
     * round-9 slip would have been caught. Returns violations as
     * "file:line: declared N, actual M (pattern)". */
@@ -185,10 +191,6 @@ class CountsSpec extends AnyFunSuite {
       "SPARK_GRAFT_ONLY", "SPARK_GRAFT_REPS", "SPARK_GRAFT_AQE")
     val access = """sys\.env|sys\.props|System\.getenv|System\.getProperty"""
     val named = ("(" + access + """)(?:\.\w+)?\(\s*"([^"]*)"""").r
-    def sources(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.flatMap(f =>
-        if (f.isDirectory) sources(f)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
     val reads = sources(new java.io.File("src/main")).flatMap { f =>
       readFile(f).split("\n").zipWithIndex.flatMap { case (line, i) =>
         val names = named.findAllMatchIn(line).map(_.group(2)).toSeq
@@ -201,6 +203,69 @@ class CountsSpec extends AnyFunSuite {
     val extra = reads.filterNot(r => allowed(r._2))
     assert(extra.isEmpty, "settings read outside the harness set:\n" +
       extra.map { case (at, n) => s"$at: $n" }.mkString("\n"))
+  }
+
+  /** Every `.start()` on a `writeStream` chain in `text`, as
+    * "file:line". The chain is followed through `.name`, bracketed
+    * arguments (`(...)`, `{...}`, `[...]`, balanced, string literals
+    * skipped), whitespace and whole-line comments. */
+  private[graft] def streamStarts(file: String, text: String): Seq[String] = {
+    val src = text.replaceAll("(?m)^[ \\t]*//.*$", "")
+    val call = """\A\s*\.\s*(\w+)""".r
+    def skipArgs(from: Int): Int = {
+      var i = from
+      var depth = 0
+      var more = true
+      while (more && i < src.length) {
+        src(i) match {
+          case '(' | '{' | '[' => depth += 1; i += 1
+          case ')' | '}' | ']' if depth > 0 =>
+            depth -= 1; i += 1
+            if (depth == 0) more = false
+          case '"' if depth > 0 =>
+            i += 1
+            while (i < src.length && src(i) != '"')
+              i += (if (src(i) == '\\') 2 else 1)
+            i += 1
+          case c if depth > 0 || c.isWhitespace => i += 1
+          case _ => more = false
+        }
+      }
+      i
+    }
+    """\bwriteStream\b""".r.findAllMatchIn(src).toSeq.flatMap { m =>
+      var i = skipArgs(m.end)
+      var starts = Seq.empty[Int]
+      var next = call.findFirstMatchIn(src.substring(i))
+      while (next.isDefined) {
+        if (next.get.group(1) == "start") starts :+= i + next.get.start(1)
+        i = skipArgs(i + next.get.end)
+        next = call.findFirstMatchIn(src.substring(i))
+      }
+      starts.map(at => s"$file:${src.substring(0, at).count(_ == '\n') + 1}")
+    }
+  }
+
+  test("only the stream-scope helper starts a stream in src/main") {
+    // DataStream.runAvailableNow sets the conf every stream starts
+    // under (state partitions, checkpoint file manager, codegen
+    // classloader); a writeStream chain started anywhere else would
+    // run outside it.
+    val helper = "src/main/scala/graft/streaming/DataStream.scala"
+    val others = sources(new java.io.File("src/main"))
+      .filterNot(_.getPath == helper)
+    assert(others.exists(f => readFile(f).contains(".writeStream")),
+      "scan found no writeStream chain at all (wrong directory?)")
+    val stray = others.flatMap(f => streamStarts(f.getPath, readFile(f)))
+    assert(stray.isEmpty, "streams started outside " +
+      "DataStream.runAvailableNow:\n" + stray.mkString("\n"))
+    // the checker follows a chain over lines, comments and arguments
+    val caught = streamStarts("X.scala", "val q = df.writeStream\n" +
+      "  .foreachBatch { (b: DataFrame, _: Long) => b.count() }\n" +
+      "  // a comment\n  .option(\"k\", \"(\")\n  .start()\n")
+    assert(caught == Seq("X.scala:5"), s"$caught")
+    assert(streamStarts("Y.scala",
+      "val w = df.writeStream.format(\"memory\")\nth.start()\n").isEmpty)
   }
 
   test("suite discovery sees every spec source file") {

@@ -429,10 +429,10 @@ class StreamSpec extends SparkSpec {
       }
     }
     spark.streams.addListener(listener)
+    val dirs = Seq("a", "b").map(tag => java.nio.file.Files
+      .createTempDirectory(s"q341_sketch_$tag").toString)
     try {
-      for ((nKeys, tag) <- Seq((300, "a"), (6000, "b"))) {
-        val dir = s"/tmp/q341_sketch_$tag"
-        new java.io.File(dir).mkdirs()
+      for ((nKeys, dir) <- Seq(300, 6000).zip(dirs)) {
         // skewed counts so the top-10 is well-separated: key i gets
         // 1 + (i % 97 == 0 ? 40 + i/97 : i % 3) rows
         val li = (0 until nKeys).flatMap { i =>
@@ -460,7 +460,11 @@ class StreamSpec extends SparkSpec {
       cmRuns.foreach { case (n, rows) =>
         assert(rows == 1L, s"$n state rows $rows != 1")
       }
-    } finally spark.streams.removeListener(listener)
+    } finally {
+      spark.streams.removeListener(listener)
+      dirs.foreach(d => org.apache.commons.io.FileUtils
+        .deleteDirectory(new java.io.File(d)))
+    }
   }
 
   test("q341 auto-gate flips to the sketch path on key cardinality") {
@@ -488,10 +492,10 @@ class StreamSpec extends SparkSpec {
       }
     }
     spark.streams.addListener(listener)
+    val dir = java.nio.file.Files.createTempDirectory("q341_autogate")
+      .toString
     try {
       val nKeys = 300
-      val dir = "/tmp/q341_autogate"
-      new java.io.File(dir).mkdirs()
       val li = (0 until nKeys).flatMap { i =>
         val reps = 1 + (if (i % 97 == 0) 40 + i / 97 else i % 3)
         Seq.fill(reps)((i.toLong, (i % 7 + 1).toLong))
@@ -517,6 +521,85 @@ class StreamSpec extends SparkSpec {
         s"exact path state: $stateRows")
       assert(cmRuns.size == 1 && cmRuns.head._2 == 1L,
         s"sketch path state: $stateRows")
-    } finally spark.streams.removeListener(listener)
+    } finally {
+      spark.streams.removeListener(listener)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  /** The settings [[graft.streaming.DataStream.runAvailableNow]] scopes
+    * a stream start to. */
+  private val managerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  private val isolationKey = "spark.sql.artifact.isolation.enabled"
+
+  /** Runs `body` on a file stream over a one-file parquet of `n` ints
+    * in a fresh temp dir, then deletes the dir. */
+  private def withIntStream(n: Int)(
+      body: org.apache.spark.sql.DataFrame => Unit): Unit = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("stream_scope")
+      .toString
+    try {
+      TestIO.writeSingleParquet((1 to n).toDF("x"), dir, "x.parquet")
+      body(graft.streaming.DataStream.openStream(spark, dir,
+        spark.read.parquet(s"$dir/x.parquet").schema))
+    } finally org.apache.commons.io.FileUtils
+      .deleteDirectory(new java.io.File(dir))
+  }
+
+  test("a stream query's rerun compiles no new classes") {
+    // a stream runs in a clone session with a new id; with artifact
+    // isolation on, each id gets its own classloader and the rerun
+    // recompiles its byte-identical generated code
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val q60 = SparkEntry.queries("q60_stream_agg")
+    val first = q60(spark, sf).collect().toSet
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val again = q60(spark, sf).collect().toSet
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(again == first)
+    assert(compiled == 0, s"the rerun compiled $compiled classes")
+  }
+
+  test("a stream started in the scope runs with the scope's settings") {
+    val partitions = "spark.sql.shuffle.partitions"
+    val seen = scala.collection.concurrent.TrieMap[String, String]()
+    withIntStream(5) { src =>
+      assert(graft.streaming.DataStream.runAvailableNow(spark,
+        src.writeStream.foreachBatch {
+          (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+            val c = batch.sparkSession.conf
+            Seq(managerKey, isolationKey, partitions)
+              .foreach(k => seen.put(k, c.get(k)))
+            ()
+        }))
+    }
+    assert(seen.get(managerKey).contains(classOf[org.apache.spark.sql
+      .execution.streaming.checkpointing
+      .FileSystemBasedCheckpointFileManager].getName), s"$seen")
+    assert(seen.get(isolationKey).contains("false"), s"$seen")
+    assert(seen.get(partitions).contains(
+      math.min(8, spark.conf.get(partitions).toInt).toString), s"$seen")
+  }
+
+  test("the stream scope restores the caller's conf, also on failure") {
+    val q60 = SparkEntry.queries("q60_stream_agg")
+    // the first run settles T.read's parquet setting, which is not
+    // part of the stream scope
+    q60(spark, sf)
+    val before = spark.conf.getAll
+    assert(!before.contains(managerKey) && !before.contains(isolationKey),
+      s"$before")
+    q60(spark, sf)
+    assert(spark.conf.getAll == before)
+    // complete mode without an aggregate: start() throws in the scope
+    withIntStream(3) { src =>
+      intercept[org.apache.spark.sql.AnalysisException] {
+        graft.streaming.DataStream.runAvailableNow(spark, src.writeStream
+          .outputMode("complete").format("memory")
+          .queryName("scope_fails"))
+      }
+    }
+    assert(spark.conf.getAll == before)
   }
 }
