@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftFooterBridge
+import org.apache.spark.sql.types.StructType
 
 /** SparkSession factory tuned for the graft engine.
   *
@@ -31,12 +33,27 @@ object Session {
   *
   * Equivalent of the reference's table ingest (`readtable`,
   * reference src/io.jl:596-655) for the canonical Parquet storage: one
-  * call per table, schema comes from Parquet metadata, scans are
-  * column-pruned + filter-pushed by Catalyst.
+  * call per table, schema read from the parquet footer on the driver
+  * (no Spark job), scans are column-pruned + filter-pushed by Catalyst.
   */
 object T {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    read(spark, name)(spark.read.parquet(s"$dir/$name.parquet"))
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    read(spark, name)(spark.read.schema(schema(spark, path)).parquet(path))
+  }
+
+  /** The schema Spark's parquet inference gives `path` (a file, or a
+    * part-file directory), read from the one footer that inference
+    * reads, on the driver: the same I/O at any scale, without the
+    * one-task job inference schedules. Call it under [[read]], whose
+    * conf (nanosAsLong) the conversion follows. Schema merging would
+    * read every footer, so it must be off; graft never turns it on. */
+  private[graft] def schema(spark: SparkSession, path: String): StructType = {
+    require(!spark.conf.get("spark.sql.parquet.mergeSchema").toBoolean,
+      "T reads one parquet footer per table, but " +
+        s"spark.sql.parquet.mergeSchema is on (opening $path)")
+    GraftFooterBridge.footerSchema(spark, path)
+  }
 
   /** Runs `open` (a batch or stream reader over table `name`) with the
     * parquet conf every table is read under, and owns the events `ts`

@@ -46,22 +46,6 @@ object Funcs {
         arrs.map(a => F.element_at(a, (i % F.size(a)) + 1)): _*))
   }
 
-  /** Median absolute deviation — reference `mad` export (via Stats.jl,
-    * src/operators.jl:52-53). Two exact-percentile passes composed at
-    * the plan level; callers on huge data swap percentile→approx. Usage:
-    * needs the median precomputed (aggregates can't nest), so this
-    * returns the expression for a frame that already holds `medCol`. */
-  def madGiven(col: Column, medCol: Column): Column =
-    F.expr("1.0") * F.abs(col - medCol) // consistency factor 1.0 (raw MAD)
-
-  /** Kleene three-valued ANY across boolean columns (reference
-    * src/operators.jl:251-277): true if any true; null if no true but
-    * some null; else false. Spark's or() is already Kleene. */
-  def kleeneAny(cols: Column*): Column = cols.reduce(_ || _)
-
-  /** Kleene three-valued ALL. */
-  def kleeneAll(cols: Column*): Column = cols.reduce(_ && _)
-
   /** reference `isna` (src/dataframe.jl:1485-1511). */
   def isna(c: Column): Column = c.isNull
 

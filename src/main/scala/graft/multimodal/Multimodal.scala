@@ -159,10 +159,9 @@ object Multimodal {
     }.toDF("doc_id", "phash")
   }
 
-  // Stub-named aliases kept for the registered queries (q48/q85/q86):
-  // the names say loudly that the DEFAULT kernel computes fake features.
-  def decodeStub(media: Dataset[MediaRecord]): Dataset[MediaFeatures] =
-    decode(media)
+  // Stub-named aliases kept for the registered queries (q85 resize,
+  // q86 frame sampling): the names say loudly that the DEFAULT kernel
+  // computes fake features.
   def resizeStub(media: Dataset[MediaRecord],
                  targetBytes: Int): Dataset[MediaRecord] =
     resize(media, targetBytes)

@@ -62,17 +62,6 @@ object RelOps {
     def basedOn(assignments: (String, String)*): DataFrame =
       df.select(assignments.map { case (n, ex) => F.expr(ex).as(n) }: _*)
 
-    /** `complete_cases!`: drop rows containing any NA (reference
-      * src/dataframe.jl:1412-1421).
-      */
-    def completeCases(): DataFrame = df.na.drop("any")
-
-    /** Boolean mask of complete rows, as a column (reference
-      * src/dataframe.jl:1412-1419).
-      */
-    def completeCasesCol: Column =
-      df.columns.map(c => F.col(c).isNotNull).reduce(_ && _)
-
     /** `without` / `delete!`: drop columns (reference
       * src/dataframe.jl:965-997). */
     def without(cols: String*): DataFrame = df.drop(cols: _*)

@@ -33,7 +33,8 @@ object StreamQueries extends QueryRegistry {
   private val streamJoinWatermark = "60 days"
 
   /** Streaming source over the `name` parquet of an sf dir, with
-    * T.load's column layout ([[T.read]]). File-stream sources take a
+    * T.load's schema ([[T.schema]], no Spark job) and column layout
+    * ([[T.read]]). File-stream sources take a
     * DIRECTORY; glob-filter to the one file inside the sf dir. NO
     * maxFilesPerTrigger here: AvailableNow processes everything in one
     * micro-batch — per-batch fixed costs (state-store commit fan-out,
@@ -41,11 +42,11 @@ object StreamQueries extends QueryRegistry {
     * verify/bench path wants exactly one. The micro-batch-per-file
     * parity path (reference minibatch iterator) is
     * DataStream.openStream, exercised in tests. */
-  private def tableStream(s: SparkSession, dir: String,
-                          name: String): DataFrame =
+  private[graft] def tableStream(s: SparkSession, dir: String,
+                                 name: String): DataFrame =
     T.read(s, name) {
       s.readStream
-        .schema(s.read.parquet(s"$dir/$name.parquet").schema)
+        .schema(T.schema(s, s"$dir/$name.parquet"))
         .option("pathGlobFilter", s"$name.parquet")
         .parquet(dir)
     }
@@ -159,7 +160,7 @@ object StreamQueries extends QueryRegistry {
     * flip through `maxExactKeys`. */
   private[graft] def streamTopKAuto(s: SparkSession, dir: String,
       maxExactKeys: Long = StreamTopKMaxExactKeys): DataFrame = {
-    if (s.read.parquet(s"$dir/part.parquet").count() > maxExactKeys)
+    if (T.load(s, dir, "part").count() > maxExactKeys)
       streamTopKSketch(s, dir)
     else {
       val cnt = tableStream(s, dir, "lineitem")

@@ -56,6 +56,10 @@ class CountsSpec extends AnyFunSuite {
       if (f.isDirectory) sources(f)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
 
+  /** The `src/main` sources the code gates below scan. */
+  private lazy val mainSources: Seq[java.io.File] =
+    sources(new java.io.File("src/main"))
+
   /** Pure checker so the regression test below can demonstrate the
     * round-9 slip would have been caught. Returns violations as
     * "file:line: declared N, actual M (pattern)". */
@@ -191,7 +195,7 @@ class CountsSpec extends AnyFunSuite {
       "SPARK_GRAFT_ONLY", "SPARK_GRAFT_REPS", "SPARK_GRAFT_AQE")
     val access = """sys\.env|sys\.props|System\.getenv|System\.getProperty"""
     val named = ("(" + access + """)(?:\.\w+)?\(\s*"([^"]*)"""").r
-    val reads = sources(new java.io.File("src/main")).flatMap { f =>
+    val reads = mainSources.flatMap { f =>
       readFile(f).split("\n").zipWithIndex.flatMap { case (line, i) =>
         val names = named.findAllMatchIn(line).map(_.group(2)).toSeq
         val unnamed = access.r.findAllMatchIn(line).size - names.size
@@ -252,8 +256,7 @@ class CountsSpec extends AnyFunSuite {
     // classloader); a writeStream chain started anywhere else would
     // run outside it.
     val helper = "src/main/scala/graft/streaming/DataStream.scala"
-    val others = sources(new java.io.File("src/main"))
-      .filterNot(_.getPath == helper)
+    val others = mainSources.filterNot(_.getPath == helper)
     assert(others.exists(f => readFile(f).contains(".writeStream")),
       "scan found no writeStream chain at all (wrong directory?)")
     val stray = others.flatMap(f => streamStarts(f.getPath, readFile(f)))
@@ -266,6 +269,31 @@ class CountsSpec extends AnyFunSuite {
     assert(caught == Seq("X.scala:5"), s"$caught")
     assert(streamStarts("Y.scala",
       "val w = df.writeStream.format(\"memory\")\nth.start()\n").isEmpty)
+  }
+
+  /** Every `read.parquet(` call in `text`, as "file:line" of its
+    * `read`; the chain may span lines, and comment lines are skipped. */
+  private[graft] def parquetReads(file: String, text: String): Seq[String] = {
+    val src = text.replaceAll("(?m)^[ \\t]*(//|/?\\*).*$", "")
+    """\bread\s*\.\s*parquet\s*\(""".r.findAllMatchIn(src).toSeq.map(m =>
+      s"$file:${src.substring(0, m.start).count(_ == '\n') + 1}")
+  }
+
+  test("only T opens a parquet table in src/main") {
+    // T.load and T.schema read the schema from the footer on the
+    // driver; a `read.parquet(` anywhere else would run Spark's
+    // inference job again.
+    val owner = "src/main/scala/graft/Session.scala"
+    assert(mainSources.exists(_.getPath == owner),
+      "scan did not find T's source (wrong directory?)")
+    val stray = mainSources.filterNot(_.getPath == owner)
+      .flatMap(f => parquetReads(f.getPath, readFile(f)))
+    assert(stray.isEmpty, "parquet tables opened outside T:\n" +
+      stray.mkString("\n"))
+    // the checker sees a call split over a line, and skips comments
+    assert(parquetReads("X.scala", "val a = s.read\n  .parquet(p)\n" +
+      "  // spark.read.parquet(p)\n  * spark.read.parquet(p)\n" +
+      "s.readStream.schema(t).parquet(d)\n") == Seq("X.scala:1"))
   }
 
   test("suite discovery sees every spec source file") {

@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 import graft.sources.{ReadOptions, ReadTable}
@@ -31,34 +28,6 @@ class CsvSpec extends SparkSpec {
   private def rowsFixture(name: String, header: String, rows: Int)(
       line: Int => String): String =
     fixture(name, (0 until rows).map(line).mkString(header + "\n", "\n", "\n"))
-
-  /** The result of `body` and the number of Spark jobs it submitted,
-    * counted under a job group of its own (other suites may share the
-    * session). Listener events arrive in order, so once a marker job
-    * run afterwards has been seen, so has every job of `body`. */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"csvspec-jobs-${java.util.UUID.randomUUID}"
-    val marker = s"$group-marker"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.contains(marker) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(marker), "listener never saw the marker job")
-      (out, seen.asScala.count(_ == group))
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def typesOf(df: org.apache.spark.sql.DataFrame): Map[String, DataType] =
     df.schema.fields.map(f => f.name -> f.dataType).toMap

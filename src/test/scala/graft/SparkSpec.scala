@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,6 +10,34 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** The result of `body` and the number of Spark jobs it submitted,
+    * counted under a job group of its own (other suites may share the
+    * session). Listener events arrive in order, so once a marker job
+    * run afterwards has been seen, so has every job of `body`. */
+  def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"spec-jobs-${java.util.UUID.randomUUID}"
+    val marker = s"$group-marker"
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(marker), "listener never saw the marker job")
+      (out, seen.asScala.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
