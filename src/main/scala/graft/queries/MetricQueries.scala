@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 
 import graft.T
-import org.apache.spark.sql.GraftReleaseBridge
 
 /** Wave-33+ estimation / modeling operators: the closed-form
   * statistical fits an analytics team runs on top of the relational
@@ -46,9 +45,7 @@ object MetricQueries extends QueryRegistry {
         .select(F.explode(F.expr(graft.text.TextOps.allShinglesExpr(
           graft.text.TextOps.tokensExpr("text"), 3))).as("w"))
         .groupBy("w").agg(F.count(F.lit(1)).as("c"))
-        .localCheckpoint() // feeds counts-of-counts AND the scalars
       val coc = wc.groupBy("c").agg(F.count(F.lit(1)).as("n_r"))
-        .localCheckpoint() // ≤ max-count rows; feeds r, r+1, scalars
       val totals = wc.agg(
         F.count(F.lit(1)).as("vocab"),
         F.sum("c").as("n_tokens"))
@@ -169,6 +166,7 @@ object MetricQueries extends QueryRegistry {
             .as("f2"),
           F.expr("substring(c_name, length(c_name) - 1, 2)")
             .as("f3"))
+        // pin: measured — unpinned 1.83 vs 1.70 s, local[32]
         .localCheckpoint() // feeds 3 u-estimates AND the pair join
       def uW(field: String) = {
         // DECIMAL(38,0) before every product: nv*(nv-1) and N*(N-1)
@@ -298,6 +296,7 @@ object MetricQueries extends QueryRegistry {
         .select(F.expr("split(bg, ' ')[0]").as("w1"),
           F.expr("split(bg, ' ')[1]").as("w2"))
         .groupBy("w1", "w2").agg(F.count(F.lit(1)).as("c"))
+        // pin: measured — unpinned 2.19 vs 1.44 s, local[4]
         .localCheckpoint() // feeds 3 aggregates + the final join
       val left = bg.groupBy("w1").agg(F.sum("c").as("cw1"),
         F.count(F.lit(1)).as("n1fwd"))

@@ -92,7 +92,7 @@ object TrainQueries extends QueryRegistry {
       // so '(' / ')' never occur inside a symbol
       .select(F.regexp_replace(F.col("w"), "(.)", "($1)").as("rep"),
         F.col("c"))
-      .localCheckpoint()
+      .localCheckpoint() // pin: measured — q281 unpinned 6.93 vs 1.26 s, local[32]
     val merges = Seq.newBuilder[(Long, String, String, Long)]
     for (r <- 1 to BpeMerges) {
       val best = bpePairCounts(vocab)
@@ -103,7 +103,7 @@ object TrainQueries extends QueryRegistry {
       val prev = vocab
       vocab = vocab.select(
         F.expr(s"replace(rep, '($pa)($pb)', '($pa$pb)')").as("rep"),
-        F.col("c")).localCheckpoint()
+        F.col("c")).localCheckpoint() // pin: measured — q281 unpinned 6.93 vs 1.26 s, local[32]
       GraftReleaseBridge.release(prev)
     }
     (merges.result(), vocab)
@@ -244,7 +244,7 @@ object TrainQueries extends QueryRegistry {
         .select(F.col("l_discount").as("s"),
           F.when(F.col("l_returnflag") === "R", 1.0d).otherwise(0.0d)
             .as("y"))
-        .localCheckpoint()
+        .localCheckpoint() // pin: measured — unpinned 1.30 vs 1.15 s, local[32]
       def r8(x: Double): Double =
         BigDecimal(x).setScale(8, BigDecimal.RoundingMode.HALF_UP)
           .toDouble
@@ -318,6 +318,7 @@ object TrainQueries extends QueryRegistry {
         .groupBy("a", "b").agg(F.count(F.lit(1)).as("nab"))
         .filter(F.col("nab") >= 2)
         .select("a", "b")
+        // pin: measured — unpinned 6.42 vs 4.46 s, local[32]
         .localCheckpoint() // feeds edges, degrees, and the anti-join
       val e = pairs.select(F.col("a").as("u"), F.col("b").as("w"))
         .unionAll(pairs.select(F.col("b").as("u"), F.col("a").as("w")))
@@ -441,6 +442,7 @@ object TrainQueries extends QueryRegistry {
         .withColumn("rn", F.row_number().over(w1))
         .filter(F.col("rn") === 1)
         .select(F.col("item"), F.col("lbl").as("maj"))
+        // pin: measured — unpinned 3.38 vs 3.08 s, local[32]
         .localCheckpoint() // feeds reliability AND the round-2 vote
       val rel = ann.join(maj, "item")
         .groupBy("ann")
@@ -617,8 +619,8 @@ object TrainQueries extends QueryRegistry {
     // (q279 discipline) so both engines assign against identical
     // doubles; per-row distances are fixed-order folds (no
     // aggregation-order float drift); argmin ties break by code. All
-    // four subspaces train in ONE loop over rounds: the exploded
-    // (vec, subspace) relation is pinned once, each round is a
+    // four subspaces train in ONE loop over rounds: each round reads
+    // the exploded (vec, subspace) relation through a
     // broadcast-centroid projection + one partial-agg'd (s, code,
     // dim) average — the corpus never shuffles.
     "q294_pq" -> { (s, dir) =>
@@ -630,7 +632,6 @@ object TrainQueries extends QueryRegistry {
                 x -> cast(x as double)) as x))""")).as("p"))
         .select(F.col("vec_id"), F.col("p.s").as("s"),
           F.col("p.x").as("x"))
-        .localCheckpoint() // consumed by every round + the final MSE
       val seeds = RelOps.globalRowNumber(
         T.load(s, dir, "embeddings")
           .orderBy(F.expr("((vec_id % 2147483647) * 2654435761) % 4294967296").asc,
@@ -668,7 +669,6 @@ object TrainQueries extends QueryRegistry {
           .agg(F.expr(
             """transform(array_sort(collect_list(struct(i, v))),
                p -> p.v)""").as("c"))
-          .localCheckpoint() // O(nSub·k·dims) state rows per round
       }
       val out = assign(trained)
         .groupBy(F.col("s").cast("long").as("subspace"))
@@ -683,13 +683,11 @@ object TrainQueries extends QueryRegistry {
     // you which languages a fixed vocab shortchanges. Vocab = ONE
     // TakeOrdered (count desc, word tie-break — deterministic rank-
     // 1000 boundary on both engines), broadcast back as a left join;
-    // per-lang rates are exact-int divisions. The exploded token
-    // relation is pinned once (feeds vocab AND the occurrence count).
+    // per-lang rates are exact-int divisions.
     "q295_oov_rate" -> { (s, dir) =>
       val tok = T.load(s, dir, "documents")
         .select(F.col("lang"),
           F.explode(TextExpressions.wordTokens(F.col("text"))).as("w"))
-        .localCheckpoint()
       val top = tok.groupBy("w").agg(F.count(F.lit(1)).as("c"))
         .orderBy(F.col("c").desc, F.col("w").asc)
         .limit(1000) // TakeOrderedAndProject
@@ -947,9 +945,10 @@ object TrainQueries extends QueryRegistry {
         .groupBy("a", "b").agg(F.count(F.lit(1)).as("nab"))
         .filter(F.col("nab") >= 2)
         .select("a", "b")
+        // pin: measured — unpinned 9.66 vs 6.14 s, local[4]
         .localCheckpoint() // feeds LPA + intra-count + degrees
       val comm = graft.ops.Graph.labelPropagation(edges, rounds = 4)
-        .localCheckpoint()
+        .localCheckpoint() // pin: measured — unpinned 9.66 vs 6.14 s, local[4]
       val deg = edges.select(F.col("a").as("node"))
         .unionAll(edges.select(F.col("b").as("node")))
         .groupBy("node").agg(F.count(F.lit(1)).as("deg"))
@@ -1036,7 +1035,6 @@ object TrainQueries extends QueryRegistry {
           .as("c"))
         .select(F.col("c"),
           F.expr("cast(c as double) / 100").as("x"))
-        .localCheckpoint()
       val m0 = d.agg(F.count(F.lit(1)).as("n"), F.sum("c").as("s1"),
         F.sum(F.col("c").cast(DecimalType(38, 0))
           * F.col("c").cast(DecimalType(38, 0))).as("s2"))
@@ -1100,6 +1098,7 @@ object TrainQueries extends QueryRegistry {
           F.expr(graft.text.TextOps.langIdExpr("t")))
         .groupBy("lang", "predicted")
         .agg(F.count(F.lit(1)).as("n"))
+        // pin: measured — unpinned 1.87 vs 1.38 s, local[4]
         .localCheckpoint() // feeds 3 marginals + the accuracy scalar
       val tp = cm.filter(F.col("lang") === F.col("predicted"))
         .select(F.col("lang").as("cls"), F.col("n").as("tp"))
@@ -1192,14 +1191,12 @@ object TrainQueries extends QueryRegistry {
         .select(F.col("doc_id"),
           F.explode(TextExpressions.wordShingles(F.col("text"), 3))
             .as("sh"))
-        .localCheckpoint() // feeds the insert side AND the probe side
       val benchSh = sh.filter(F.col("doc_id") % 97 === 0)
         .select("sh").distinct()
       val bits = benchSh
         // polyHash62 is nonnegative, so % P == pmod here
         .select((TextExpressions.polyHash62(F.col("sh")) % P).as("h0"))
         .select(F.explode(F.expr(posExpr("h0"))).as("p")).distinct()
-        .localCheckpoint() // the "bit array": ≤ m rows
       val nIns = benchSh.agg(F.count(F.lit(1)).as("n_inserted"))
       val nBits = bits.agg(F.count(F.lit(1)).as("bits_set"))
       val probes = sh.filter(F.col("doc_id") % 97 =!= 0)

@@ -50,12 +50,6 @@ object Bloom {
           p -> (element_at($bfCol, cast(p div 64 as int) + 1)
                 & shiftleft(1L, p % 64)) != 0L)"""
 
-  /** Boolean: every probe bit of `shExpr` is set in the bloom array
-    * column `bfCol`. */
-  def mightContainExpr(bfCol: String, shExpr: String, numBits: Int,
-                       numHashes: Int): String =
-    mightContainHashExpr(bfCol, s"xxhash64($shExpr)", numBits, numHashes)
-
   /** Build a 1-row DataFrame holding the bloom array (`bf`) of every
     * distinct shingle in `shCol`. One scan + one partial-agg'd global
     * aggregate; the dedup shuffle carries 8-byte shingle HASHES (never

@@ -104,7 +104,8 @@ object Decontam {
     val bf = Bloom.build(docs.filter(benchPred), shCol, numBits, numHashes)
     // native codegen'd probe kernel (r16): bit-identical to the HOF
     // form `size(filter(transform(sh, s -> xxhash64(s)), h ->
-    // mightContainHashExpr(...)))` — BloomKernelSpec pins the equality;
+    // mightContainHashExpr(...)))` — CurationSpec's "bloom kernel ==
+    // the HOF probe expression, bit for bit" pins the equality;
     // the HOF form stays in [[Bloom]] as the executable spec
     val probed = docs.filter(!benchPred)
       .crossJoin(F.broadcast(bf))

@@ -296,6 +296,41 @@ class CountsSpec extends AnyFunSuite {
       "s.readStream.schema(t).parquet(d)\n") == Seq("X.scala:1"))
   }
 
+  /** Every `localCheckpoint(` call in `text` with no `pin: measured`
+    * or `pin: correctness` tag on its line or the line above, as
+    * "file:line"; comment lines are skipped. */
+  private[graft] def untaggedPins(file: String, text: String): Seq[String] = {
+    val lines = text.split("\n", -1).toSeq
+    val comment = """^[ \t]*(//|/?\*)""".r
+    val tag = """//.*\bpin: (measured|correctness)\b""".r
+    def tagged(i: Int) = i >= 0 && tag.findFirstIn(lines(i)).isDefined
+    lines.indices.filter { i =>
+      lines(i).contains("localCheckpoint(") &&
+        comment.findFirstIn(lines(i)).isEmpty && !tagged(i) && !tagged(i - 1)
+    }.map(i => s"$file:${i + 1}")
+  }
+
+  test("every localCheckpoint in the query files states its reason") {
+    // A pin truncates lineage and fixes a materialization point; in a
+    // query file it stays only with a measured loss without it or a
+    // correctness reason (a non-deterministic input read twice).
+    val dir = "src/main/scala/graft/queries/"
+    val qs = mainSources.filter(_.getPath.startsWith(dir))
+    assert(qs.exists(f => readFile(f).contains("localCheckpoint(")),
+      s"scan found no localCheckpoint under $dir (wrong directory?)")
+    val stray = qs.flatMap(f => untaggedPins(f.getPath, readFile(f)))
+    assert(stray.isEmpty, "localCheckpoint without a `pin: measured` " +
+      "or `pin: correctness` tag:\n" + stray.mkString("\n"))
+    // the checker takes the tag on the line or the line above, and
+    // skips comments
+    assert(untaggedPins("X.scala", "val a = b\n  .localCheckpoint()\n" +
+      "// pin: measured 2.1 vs 3.0 s\nval c = d.localCheckpoint()\n" +
+      "val e = f.localCheckpoint() // pin: correctness rand\n" +
+      "  // g.localCheckpoint()\n  * h.localCheckpoint()\n" +
+      "val i = j.localCheckpoint() // pinned: feeds two\n") ==
+      Seq("X.scala:2", "X.scala:8"))
+  }
+
   test("suite discovery sees every spec source file") {
     // Every *Spec.scala in the test tree must contribute at least one
     // discovered class — a spec written with an unrecognized parent

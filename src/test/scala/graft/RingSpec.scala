@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.{Column, functions => F}
 
 /** Pins the r15 codegen'd ring-successor kernel against the original
   * filter+array_min HOF formulation (the executable spec): identical
@@ -10,12 +10,22 @@ import org.apache.spark.sql.{functions => F}
 class RingSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The original HOF formulation — the executable spec of the
+    * successor semantics: the smallest (position, shard) at or after
+    * `h`, wrapping to the ring's global minimum. */
+  private def ringShardHof(h: Column, r: Seq[(Long, Int)]): Column = {
+    val arr = F.array(r.map { case (p, sh) =>
+      F.struct(F.lit(p).as("p"), F.lit(sh).as("s")) }: _*)
+    F.coalesce(
+      F.array_min(F.filter(arr, x => x.getField("p") >= h)),
+      F.array_min(arr)).getField("s")
+  }
+
   private def check(ring: Seq[(Long, Int)], hs: Seq[Long]): Unit = {
     val df = hs.toDF("h")
       .withColumn("kern", graft.plans.RingExpressions
         .ringSuccessor(F.col("h"), ring))
-      .withColumn("hof", graft.queries.ScoreQueries
-        .ringShardHof(F.col("h"), ring))
+      .withColumn("hof", ringShardHof(F.col("h"), ring))
     val bad = df.filter(F.col("kern") =!= F.col("hof")).collect()
     assert(bad.isEmpty, s"kernel != HOF on: ${bad.mkString(", ")}")
   }
