@@ -83,7 +83,9 @@ object BloomKernels {
 /** `bloomCountHits(shingles, bf)`: per-row count of `shingles`
   * elements whose probe bits are all set in the broadcast `bf` long
   * array. numBits/numHashes are plan-time constants (they size the
-  * filter, same as [[graft.text.Bloom]]'s expression builders). */
+  * filter, same as [[graft.text.Bloom]]'s expression builders).
+  * kernel: measured — plain 2.97 vs 2.55 s, local[4] (q106, only this
+  * kernel swapped) */
 case class BloomCountHits(left: Expression, right: Expression,
                           numBits: Long, numHashes: Int)
     extends BinaryExpression {

@@ -23,6 +23,9 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * `p >= h` wins, wrapping to the ring's global minimum; among equal
   * positions the smallest shard id wins (array_min's lexicographic
   * struct order). Positions are pre-sorted by (p, s) at construction.
+  * One stated divergence (pinned in PropertySpec): a NULL hash gives
+  * NULL, where the HOF form filters out every position and wraps to
+  * the ring minimum's shard.
   */
 object RingKernels {
   /** First index i with pos(i) >= h, or 0 (wrap) when none; among an
@@ -39,6 +42,8 @@ object RingKernels {
   }
 }
 
+// kernel: measured — plain 2.09 vs 0.42 s, local[4] (q269, only this
+// kernel swapped)
 case class RingSuccessor(child: Expression, positions: Array[Long],
                          shards: Array[Int])
     extends UnaryExpression {

@@ -71,7 +71,8 @@ object StringSimilarityKernels {
   }
 }
 
-/** jaro_winkler_similarity(left, right) — double in [0, 1]. */
+/** jaro_winkler_similarity(left, right) — double in [0, 1].
+  * kernel: no built-in form (Spark has no Jaro-Winkler function) */
 case class JaroWinkler(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = DoubleType

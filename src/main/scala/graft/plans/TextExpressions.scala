@@ -8,16 +8,22 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native text kernels. The SQL-expression shingler
-  * ([[graft.text.TextOps.shinglesExpr]]) goes through four
-  * CodegenFallback higher-order functions (filter/transform/slice/
-  * sequence) with per-element boxing — measured as the dominant cost of
-  * every dedup query. These kernels do tokenize+shingle in one tight
-  * pass per document.
+/** Native text kernels: the one word tokenizer, the one distinct
+  * shingler, and the codepoint trigram/hash kernels. Their plain Spark
+  * forms (`filter(split(lower(s), '[^a-z0-9]+'), ...)`, shingles and
+  * codepoint folds through transform/aggregate/slice/sequence) are
+  * CodegenFallback higher-order functions with per-element boxing;
+  * each kernel does its work in one tight pass per document.
   *
-  * Semantics are EXACTLY the SQL form (and the DuckDB oracles):
+  * Semantics are EXACTLY the plain forms (and the DuckDB oracles):
   * lowercase, split on non-[a-z0-9] runs, drop empties, distinct word
-  * n-grams joined by single spaces, first-occurrence order.
+  * n-grams joined by single spaces, first-occurrence order; NULL text
+  * gives NULL. PropertySpec compares each kernel with its plain form
+  * on NULL, empty and non-ASCII text (dotted İ, surrogate pairs), and
+  * pins the one divergence: `packedTrigrams` lowercases with
+  * `String.toLowerCase(Locale.ROOT)`, which maps a word-final capital
+  * sigma to final sigma (U+03C2) where Spark's `lower()` gives U+03C3.
+  * The word kernels keep only [a-z0-9], so sigma never reaches a token.
   */
 object TextKernels {
 
@@ -160,7 +166,8 @@ object TextKernels {
   }
 }
 
-/** Distinct word n-gram shingles of a lowercase-tokenized text column. */
+/** Distinct word n-gram shingles of a lowercase-tokenized text column.
+  * kernel: measured — plain 3.57 vs 1.05 s, local[4] (q224) */
 case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullSafeEval(v: Any): Any =
@@ -171,7 +178,8 @@ case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
     copy(child = c)
 }
 
-/** Lowercase word tokens of a text column. */
+/** Lowercase word tokens of a text column.
+  * kernel: measured — plain 2.23 vs 0.82 s, local[4] (q100) */
 case class WordTokens(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullSafeEval(v: Any): Any =
@@ -182,7 +190,8 @@ case class WordTokens(child: Expression) extends UnaryExpression {
     copy(child = c)
 }
 
-/** Packed char-trigram longs of a text column (lowercased in-kernel). */
+/** Packed char-trigram longs of a text column (lowercased in-kernel).
+  * kernel: measured — plain 3.88 vs 2.55 s, local[4] (q114) */
 case class PackedTrigrams(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullSafeEval(v: Any): Any =
@@ -193,7 +202,9 @@ case class PackedTrigrams(child: Expression) extends UnaryExpression {
     copy(child = c)
 }
 
-/** Oracle-reproducible 62-bit polynomial hash of a string column. */
+/** Oracle-reproducible 62-bit polynomial hash of a string column.
+  * kernel: measured — plain 2.36 vs 1.07 s, local[4] (q42, only this
+  * kernel swapped) */
 case class PolyHash62(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def nullSafeEval(v: Any): Any =
@@ -204,7 +215,8 @@ case class PolyHash62(child: Expression) extends UnaryExpression {
     copy(child = c)
 }
 
-/** Rolling Rabin-Karp hashes of all length-n codepoint windows. */
+/** Rolling Rabin-Karp hashes of all length-n codepoint windows.
+  * kernel: measured — plain 6.33 vs 2.07 s, local[4] (q206) */
 case class RollingHashes(child: Expression, n: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullSafeEval(v: Any): Any =

@@ -16,6 +16,15 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * interpreted mode and via `doGenCode`, keeping similarity joins inside
   * whole-stage codegen — SURVEY.md §7.3 preference order (b): custom
   * `Expression` before any UDF.
+  *
+  * Against the plain forms (`aggregate(zip_with(a, b, ...))`, same
+  * left-to-right double summation over the shorter array), PropertySpec
+  * pins two stated divergences: a NULL element reads as 0.0, so beside
+  * a ±Inf or NaN partner it gives NaN where the plain form skips it;
+  * srpBitsF returns NULL for a NULL vector where the per-plane `when`
+  * tree sets no bit and returns 0; and a NaN projection sets no bit
+  * here (IEEE `NaN > 0` is false) but every bit in the tree (Spark SQL
+  * orders NaN above every number).
   */
 object VectorKernels {
   /** Shared primitive kernels (called from generated code too). */
@@ -57,7 +66,9 @@ object VectorKernels {
   }
 }
 
-/** dot(a, b) over two array<float> columns, computed in double. */
+/** dot(a, b) over two array<float> columns, computed in double.
+  * kernel: measured — plain 26.66 vs 6.49 s, local[4] (q207, only this
+  * kernel swapped) */
 case class DotProductF(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = DoubleType
@@ -72,7 +83,8 @@ case class DotProductF(left: Expression, right: Expression)
 }
 
 /** cosine(a, b) over two array<float> columns, in double; 0.0 for zero
-  * vectors (instead of NaN) so thresholds behave. */
+  * vectors (instead of NaN) so thresholds behave.
+  * kernel: measured — plain 5.37 vs 0.40 s, local[4] (q44) */
 case class CosineSimF(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = DoubleType
@@ -86,7 +98,8 @@ case class CosineSimF(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** L2 norm of an array<float> column. */
+/** L2 norm of an array<float> column.
+  * kernel: measured — plain 0.12 vs 0.08 s, local[32] (q83) */
 case class NormF(child: Expression)
     extends UnaryExpression {
   override def dataType: DataType = DoubleType
@@ -106,7 +119,9 @@ case class NormF(child: Expression)
   * `> 0` sign rule), but ONE expression and one kernel call per row —
   * smaller generated code (the 64-plane tree dominated q101's
   * first-execution janino cost) and no per-plane ArrayData re-walk.
-  * SrpBitsSpec pins bit-equality against the expression-tree form. */
+  * SrpBitsSpec pins bit-equality against the expression-tree form.
+  * kernel: measured — plain 4.70 vs 1.69 s, local[4] (q101, only this
+  * kernel swapped) */
 case class SrpBitsF(child: Expression, planes: Array[Array[Float]])
     extends UnaryExpression {
   override def dataType: DataType = org.apache.spark.sql.types.LongType

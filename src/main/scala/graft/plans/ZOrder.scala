@@ -36,7 +36,8 @@ object ZOrderKernels {
 }
 
 /** z = interleave(bits of a, bits of b); inputs LongType (caller casts),
-  * low 32 bits of each are used. */
+  * low 32 bits of each are used.
+  * kernel: measured — plain 0.29 vs 0.25 s, local[32] (q115) */
 case class ZValue2(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = LongType

@@ -555,7 +555,7 @@ object CurationQueries extends QueryRegistry {
     "q128_gopher_rules" -> { (s, dir) =>
       val stop = TextOps.markers.toMap.apply("en")
       T.load(s, dir, "documents")
-        .withColumn("t", TextOps.tokens("text"))
+        .withColumn("t", TextExpressions.wordTokens(F.col("text")))
         .withColumn("n_words", F.expr("size(t)"))
         .withColumn("mean_word_len", F.expr(
           "floor((aggregate(t, 0L, (a, x) -> a + length(x)) " +
@@ -726,7 +726,8 @@ object CurationQueries extends QueryRegistry {
         (F.floor((F.avg("n_chars")) * 1e2 + 0.5) / 1e2).as("mean_chars"),
         F.countDistinct(F.md5(F.col("text"))).as("__uniq"))
       val toks = docs
-        .select(F.size(TextOps.tokens("text")).cast("long").as("nt"))
+        .select(F.size(TextExpressions.wordTokens(F.col("text")))
+          .cast("long").as("nt"))
         .agg(F.sum("nt").as("total_tokens"))
       base.crossJoin(F.broadcast(toks))
         .select(F.col("n_docs"), F.col("n_sources"), F.col("n_langs"),
@@ -784,24 +785,23 @@ object CurationQueries extends QueryRegistry {
     // Collocation extraction: corpus-level bigram PMI
     // ln(p_xy / (p_x·p_y)) — the lexical-association score that
     // separates multiword expressions from chance adjacency (tokenizer
-    // merge-rule mining, stop-phrase lists). Bigram pairs bind the
-    // token array ONCE (the shinglesExpr lambda trick — projection
-    // collapse would otherwise re-run the tokenizer per element);
+    // merge-rule mining, stop-phrase lists). The token array is bound
+    // ONCE as a column that the bigram lambda reads by name;
     // unigram/bigram totals are in-plan broadcast 1-row aggregates;
     // count tables are vocabulary-bounded, corpus-size-independent
     // after their partial-agg'd groupBys.
     "q162_bigram_pmi" -> { (s, dir) =>
       val bigramsExpr =
-        s"""element_at(transform(array(${TextOps.tokensExpr("text")}),
-              t -> transform(sequence(0, size(t) - 2),
-                i -> struct(element_at(t, i + 1) AS x,
-                            element_at(t, i + 2) AS y))), 1)"""
+        """transform(sequence(0, size(t) - 2),
+              i -> struct(element_at(t, i + 1) AS x,
+                          element_at(t, i + 2) AS y))"""
       val docs = T.load(s, dir, "documents")
-      val uni = docs.select(F.explode(TextOps.tokens("text")).as("x"))
+        .select(TextExpressions.wordTokens(F.col("text")).as("t"))
+      val uni = docs.select(F.explode(F.col("t")).as("x"))
         .groupBy("x").agg(F.count(F.lit(1)).as("cx"))
       val n1 = uni.agg(F.sum("cx").cast("double").as("n1"))
       val big = docs
-        .filter(F.size(TextOps.tokens("text")) >= 2)
+        .filter(F.size(F.col("t")) >= 2)
         .select(F.explode(F.expr(bigramsExpr)).as("p"))
         .select(F.col("p.x").as("x"), F.col("p.y").as("y"))
         .groupBy("x", "y").agg(F.count(F.lit(1)).as("cxy"))
@@ -859,11 +859,9 @@ object CurationQueries extends QueryRegistry {
     // shingle) — the df table is corpus-frequency-bounded, never
     // per-doc.
     "q156_boilerplate" -> { (s, dir) =>
-      import graft.text.TextOps
       val docs = T.load(s, dir, "documents")
       val sh = docs.select(F.col("doc_id"), F.col("source"),
-        F.explode(F.expr(
-          TextOps.shinglesExpr(TextOps.tokensExpr("text"), 5)))
+        F.explode(TextExpressions.wordShingles(F.col("text"), 5))
           .as("sh"))
       val nd = docs.groupBy("source")
         .agg(F.count(F.lit(1)).as("n_docs"))

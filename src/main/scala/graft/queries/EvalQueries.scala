@@ -420,7 +420,8 @@ object EvalQueries extends QueryRegistry {
     // q80/q114 discipline). Per-doc score = Σ n·ln S / Σ n.
     "q235_stupid_backoff" -> { (s, dir) =>
       val toks = T.load(s, dir, "documents")
-        .select(F.col("doc_id"), TextOps.tokens("text").as("t"))
+        .select(F.col("doc_id"),
+          TextExpressions.wordTokens(F.col("text")).as("t"))
       val train = toks.filter(F.col("doc_id") % 5 =!= 0)
       val held = toks.filter(F.col("doc_id") % 5 === 0)
       def grams(df: DataFrame, n: Int): DataFrame =

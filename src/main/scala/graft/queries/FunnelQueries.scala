@@ -127,7 +127,8 @@ object FunnelQueries extends QueryRegistry {
       val docs = T.load(s, dir, "documents")
       val stop = TextOps.markers.toMap.apply("en")
       // stage 1: Gopher rules (the q128 expressions, verbatim)
-      val g = docs.withColumn("t", TextOps.tokens("text"))
+      val g = docs.withColumn("t",
+          TextExpressions.wordTokens(F.col("text")))
         .withColumn("n_words", F.expr("size(t)"))
         .withColumn("mean_word_len", F.expr(
           "floor((aggregate(t, 0L, (a, x) -> a + length(x)) " +

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 
 import graft.T
+import graft.plans.TextExpressions.wordTokens
 
 /** Wave-33+ estimation / modeling operators: the closed-form
   * statistical fits an analytics team runs on top of the relational
@@ -42,8 +43,9 @@ object MetricQueries extends QueryRegistry {
     // ≤ max-count rows; everything downstream is O(1).
     "q307_good_turing" -> { (s, dir) =>
       val wc = T.load(s, dir, "documents")
+        .select(wordTokens(F.col("text")).as("t"))
         .select(F.explode(F.expr(graft.text.TextOps.allShinglesExpr(
-          graft.text.TextOps.tokensExpr("text"), 3))).as("w"))
+          "t", 3))).as("w"))
         .groupBy("w").agg(F.count(F.lit(1)).as("c"))
       val coc = wc.groupBy("c").agg(F.count(F.lit(1)).as("n_r"))
       val totals = wc.agg(
@@ -92,12 +94,11 @@ object MetricQueries extends QueryRegistry {
     // b2Σx2y (no second pass). At 100 TB this is STILL one scan + a
     // 1-row reduce: the moment vector is the only shuffled state.
     "q308_ols2" -> { (s, dir) =>
-      val toks = graft.text.TextOps.tokensExpr("text")
       val m = T.load(s, dir, "documents")
-        .select(F.expr(s"""element_at(transform(array($toks), t ->
-            struct(cast(size(t) as decimal(38,0)) as x1,
+        .select(wordTokens(F.col("text")).as("t"), F.col("text"))
+        .select(F.expr("""struct(cast(size(t) as decimal(38,0)) as x1,
                    cast(size(filter(t, x -> length(x) >= 6))
-                     as decimal(38,0)) as x2)), 1)""").as("f"),
+                     as decimal(38,0)) as x2)""").as("f"),
           F.expr("cast(length(text) as decimal(38,0))").as("y"))
         .select(F.col("f.x1").as("x1"), F.col("f.x2").as("x2"),
           F.col("y"))
@@ -291,8 +292,9 @@ object MetricQueries extends QueryRegistry {
     // Output: top-20 bigrams by count with MLE vs KN probability.
     "q312_kneser_ney" -> { (s, dir) =>
       val bg = T.load(s, dir, "documents")
+        .select(wordTokens(F.col("text")).as("t"))
         .select(F.explode(F.expr(graft.text.TextOps.allShinglesExpr(
-          graft.text.TextOps.tokensExpr("text"), 2))).as("bg"))
+          "t", 2))).as("bg"))
         .select(F.expr("split(bg, ' ')[0]").as("w1"),
           F.expr("split(bg, ' ')[1]").as("w2"))
         .groupBy("w1", "w2").agg(F.count(F.lit(1)).as("c"))

@@ -5,7 +5,7 @@ import graft.T
 import graft.formula.Formula
 import graft.functions.ProductAgg
 import graft.ops.RelOps._
-import graft.plans.{MathFunctions, SpecialMath}
+import graft.functions.SpecialMath
 
 /** Wave-4c: model matrix (RFormula), special math expressions,
   * membership predicates, set operations, string describe, product
@@ -122,12 +122,12 @@ object MiscQueries extends QueryRegistry {
       val li = T.load(s, dir, "lineitem")
       li.select(
         F.col("l_orderkey"), F.col("l_linenumber"),
-        F.round(MathFunctions.erf(F.col("l_discount") * 10 - 0.5), 6)
+        F.round(SpecialMath.erf(F.col("l_discount") * 10 - 0.5), 6)
           .as("erf_d"),
-        F.round(MathFunctions.erfc(F.col("l_tax") * 10), 6).as("erfc_t"),
-        F.round(MathFunctions.digamma(F.col("l_quantity")), 6)
+        F.round(SpecialMath.erfc(F.col("l_tax") * 10), 6).as("erfc_t"),
+        F.round(SpecialMath.digamma(F.col("l_quantity")), 6)
           .as("digamma_q"),
-        F.round(MathFunctions.lgammaC(F.col("l_quantity")), 6)
+        F.round(SpecialMath.lgamma(F.col("l_quantity")), 6)
           .as("lgamma_q"))
     },
 

@@ -654,7 +654,7 @@ object PipelineQueries extends QueryRegistry {
     "q51_quality" -> { (s, dir) =>
       val exprs = TextOps.qualityExprs("text", "t")
       T.load(s, dir, "documents")
-        .withColumn("t", TextOps.tokens("text"))
+        .withColumn("t", TextExpressions.wordTokens(F.col("text")))
         .basedOn(("doc_id" -> "doc_id") +: exprs: _*)
     },
 

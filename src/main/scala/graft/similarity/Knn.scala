@@ -139,65 +139,6 @@ object Knn {
       .select("query_id", "neighbor_id", "sim", "rank")
   }
 
-  /** Deterministic k-means (Lloyd) coarse-quantizer training — IVF
-    * without a label column. Seeds are the k corpus vectors with the
-    * smallest xxhash64(id) (a deterministic uniform sample, no RNG
-    * state); each iteration assigns by max cosine against the broadcast
-    * centroid table and recomputes centroids with posexplode+avg. Every
-    * step is a partial-agg'd DataFrame op: the corpus never shuffles —
-    * per iteration it is scanned once, and the shuffle carries
-    * (cell, dim, partial-sum) rows, independent of corpus size.
-    * Output: (cell, centroid: array<double>); cells that lose all
-    * members drop out (k is an upper bound, standard Lloyd behavior).
-    */
-  def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-                      k: Int, iters: Int = 5): DataFrame = {
-    val seeds = corpus
-      .select(F.col(idCol), F.col(vecCol))
-      .withColumn("__hk", F.xxhash64(F.col(idCol)))
-      .orderBy("__hk").limit(k) // k rows — TakeOrderedAndProject
-      .select(F.expr("transform(" + vecCol + ", x -> cast(x as double))")
-        .as("centroid"))
-      .withColumn("cell",
-        F.row_number().over(Window.orderBy(F.col("centroid"))) - 1)
-      .select("cell", "centroid")
-    (1 to iters).foldLeft(seeds) { (cents, _) =>
-      // Lloyd update = the per-label centroid build over the current
-      // assignment (ONE implementation, see [[centroids]]).
-      centroids(assignCells(corpus, cents, idCol, vecCol), "cell", vecCol)
-        // localCheckpoint: k×dim rows — truncates the per-iteration
-        // lineage so the final plan doesn't nest `iters` scans deep
-        .localCheckpoint()
-    }
-  }
-
-  /** Nearest-centroid cell assignment (broadcast centroids, argmax
-    * cosine with a deterministic lowest-cell tiebreak). */
-  def assignCells(corpus: DataFrame, cents: DataFrame, idCol: String,
-                  vecCol: String): DataFrame = {
-    val cf = cents.withColumn("cf",
-      F.expr("transform(centroid, x -> cast(x as float))"))
-    corpus.crossJoin(F.broadcast(cf))
-      .withColumn("__sim", cosineF(F.col(vecCol), F.col("cf")))
-      .groupBy(F.col(idCol))
-      .agg(
-        F.min(F.struct((-F.col("__sim")).as("ns"), F.col("cell"))).as("m"),
-        F.first(F.col(vecCol)).as(vecCol))
-      .select(F.col(idCol), F.col(vecCol), F.col("m.cell").as("cell"))
-  }
-
-  /** Label-free IVF: train a k-means coarse quantizer, assign cells,
-    * then route queries with [[ivfKnn]]'s machinery over the learned
-    * cells. At scale the assigned corpus is written bucketed by `cell`
-    * so a probe reads only its cells' buckets. */
-  def ivfKnnAuto(corpus: DataFrame, queries: DataFrame, idCol: String,
-                 vecCol: String, k: Int, nprobe: Int, ncells: Int,
-                 iters: Int = 5): DataFrame = {
-    val cents = kmeansCentroids(corpus, idCol, vecCol, ncells, iters)
-    val assigned = assignCells(corpus, cents, idCol, vecCol)
-    ivfKnn(assigned, queries, idCol, vecCol, "cell", k, nprobe)
-  }
-
   /** EXACT top-k cosine kNN with branch-and-bound cell pruning — the
     * scale replacement for [[bruteForceKnn]] when the query set is the
     * whole corpus (self-kNN: mutual-kNN graphs, LOF, dedup).

@@ -139,9 +139,9 @@ object Decontam {
 
   /** Fixed-k token chunks of a token-array column, joined by single
     * spaces — the deterministic "paragraph" unit for [[passageDedup]].
-    * Same single-element-transform binding trick as
-    * [[TextOps.shinglesExpr]] (prevents projection collapse from
-    * re-tokenizing per chunk).
+    * `tokExpr` is bound ONCE as a lambda variable (a single-element
+    * transform): without it, projection collapse would inline the
+    * tokenizer into every chunk's slice and re-tokenize per chunk.
     */
   def passagesExpr(tokExpr: String, k: Int): String =
     s"""element_at(transform(array($tokExpr), t ->

@@ -1,42 +1,23 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 
 /** Text-analysis operators for large-scale training-data pipelines:
-  * tokenization, n-gram shingling, language-ID, quality scoring, token
-  * counting, fingerprinting. All pure Column expressions (codegen'd,
+  * n-gram counting, language-ID, quality scoring, token counting,
+  * fingerprinting, over the word tokens and shingles of
+  * [[graft.plans.TextExpressions]] (the one tokenizer and the one
+  * distinct shingler). All pure Column expressions (codegen'd,
   * partition-local, no shuffle) — each scales linearly with the scan.
   */
 object TextOps {
 
-  /** Lowercase word tokens: split on non-alphanumeric runs, drop empties.
-    * Expressed identically in the DuckDB oracles
-    * (regexp_split_to_array + list_filter).
+  /** NON-distinct word n-grams of a token-array expression —
+    * repetition measurement needs the duplicates that the distinct
+    * shingles of [[graft.plans.TextExpressions.wordShingles]] erase.
+    * `tokExpr` is bound ONCE as a lambda variable (a single-element
+    * transform): without it, projection collapse would inline a
+    * tokenizer expression into every slice() and re-run it per n-gram.
     */
-  def tokensExpr(col: String): String =
-    s"filter(split(lower($col), '[^a-z0-9]+'), x -> x != '')"
-
-  def tokens(col: String): Column = F.expr(tokensExpr(col))
-
-  /** Distinct word n-gram shingles over a token-array column.
-    *
-    * IMPORTANT: `tokExpr` is bound ONCE as a lambda variable (via a
-    * single-element transform) before the per-shingle lambda references
-    * it. Without this, Catalyst's projection collapse inlines the
-    * tokenizer expression into every slice() call and the regex split
-    * re-executes per shingle — O(shingles × tokenize) per document
-    * (measured 5× wall-clock on the shingling stage).
-    */
-  def shinglesExpr(tokExpr: String, n: Int): String =
-    s"""element_at(transform(array($tokExpr), t ->
-          CASE WHEN size(t) >= $n THEN
-            array_distinct(transform(sequence(0, size(t) - $n),
-              i -> concat_ws(' ', slice(t, i + 1, $n))))
-          ELSE cast(array() as array<string>) END), 1)"""
-
-  /** NON-distinct word n-grams (same binding trick as [[shinglesExpr]])
-    * — repetition measurement needs the duplicates that dedup'd
-    * shingles erase. */
   def allShinglesExpr(tokExpr: String, n: Int): String =
     s"""element_at(transform(array($tokExpr), t ->
           CASE WHEN size(t) >= $n THEN

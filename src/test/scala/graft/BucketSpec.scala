@@ -69,11 +69,12 @@ class BucketSpec extends SparkSpec {
   }
 
   test("IVF probe over a cell-partitioned corpus prunes to nprobe cells") {
-    import graft.similarity.Knn
     val s = spark
     val emb = T.load(s, sf, "embeddings")
-    val cents = Knn.kmeansCentroids(emb, "vec_id", "embedding", 8, 2)
-    val assigned = Knn.assignCells(emb, cents, "vec_id", "embedding")
+    // deterministic cells: the partition-pruning claim needs a cell
+    // column, not a trained one
+    val assigned = emb.select(F.col("vec_id"), F.col("embedding"),
+      F.pmod(F.col("vec_id"), F.lit(8L)).cast("int").as("cell"))
     val dir = java.nio.file.Files
       .createTempDirectory("ivf_cells").toString
     try {

@@ -5,6 +5,7 @@ import graft.dedup.Dedup
 import graft.multimodal.{MediaRecord, Multimodal}
 import graft.ops.RelOps._
 import graft.similarity.Knn
+import graft.plans.TextExpressions
 import graft.text.TextOps
 
 /** Wave-3 pipeline operator suites: dedup/similarity/text/multimodal.
@@ -13,8 +14,8 @@ import graft.text.TextOps
 class PipelineSpec extends SparkSpec {
 
   private def docs = T.load(spark, sf, "documents")
-    .withColumn("toks", TextOps.tokens("text"))
-    .withColumn("sh", F.expr(TextOps.shinglesExpr("toks", 3)))
+    .withColumn("toks", TextExpressions.wordTokens(F.col("text")))
+    .withColumn("sh", TextExpressions.wordShingles(F.col("text"), 3))
 
   private def emb = T.load(spark, sf, "embeddings")
 
@@ -50,7 +51,8 @@ class PipelineSpec extends SparkSpec {
     val sig = Dedup.minhashSignatures(dup, "doc_id", "sh")
     // same doc_id appears twice with identical signature → distinct = 5
     assert(sig.distinct().count() == 5)
-    val sh = Dedup.simhash64(dup.withColumn("toks", TextOps.tokens("text")),
+    val sh = Dedup.simhash64(dup.withColumn("toks",
+      TextExpressions.wordTokens(F.col("text"))),
       "doc_id", "toks")
     assert(sh.distinct().count() == 5)
   }
@@ -362,23 +364,6 @@ class PipelineSpec extends SparkSpec {
     assert(tight.exceptAll(banded16).isEmpty)
   }
 
-  test("label-free kmeans IVF recovers planted clusters (recall >= 0.95)") {
-    val planted = plantedClusters().drop("label") // no label: must train
-    val q = planted.filter(F.col("vec_id") % 40 === 0)
-    val exact = Knn.bruteForceKnn(planted, q, "vec_id", "embedding", 10)
-    val ivf = Knn.ivfKnnAuto(planted, q, "vec_id", "embedding",
-      k = 10, nprobe = 3, ncells = 10, iters = 5)
-    val recall = ivf.select("query_id", "neighbor_id")
-      .intersect(exact.select("query_id", "neighbor_id")).count()
-      .toDouble / exact.count()
-    info(f"kmeans IVF nprobe=3 recall@10 = $recall%.3f")
-    assert(recall >= 0.95)
-    // training is deterministic: same seeds, same centroids
-    val c1 = Knn.kmeansCentroids(planted, "vec_id", "embedding", 10, 3)
-    val c2 = Knn.kmeansCentroids(planted, "vec_id", "embedding", 10, 3)
-    assert(c1.exceptAll(c2).isEmpty && c2.exceptAll(c1).isEmpty)
-  }
-
   test("SRP cosine LSH equals exact all-pairs on planted near-dups") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
@@ -635,8 +620,8 @@ class PipelineSpec extends SparkSpec {
   test("native text kernels equal the SQL-expression forms") {
     val d = T.load(spark, sf, "documents")
     val viaSql = d
-      .withColumn("toks", TextOps.tokens("text"))
-      .withColumn("sh", F.expr(TextOps.shinglesExpr("toks", 3)))
+      .withColumn("toks", PlainForms.tokens(F.col("text")))
+      .withColumn("sh", PlainForms.shingles(F.col("text"), 3))
       .select("doc_id", "toks", "sh")
     val viaNative = d
       .withColumn("toks",
@@ -703,7 +688,7 @@ class PipelineSpec extends SparkSpec {
 
   test("langid scoring is deterministic and total") {
     val out = T.load(spark, sf, "documents")
-      .withColumn("t", TextOps.tokens("text"))
+      .withColumn("t", TextExpressions.wordTokens(F.col("text")))
       .withColumn("p", F.expr(TextOps.langIdExpr("t")))
     assert(out.filter(F.col("p").isNull).count() == 0)
     val langs = TextOps.markers.map(_._1).toSet + "und"

@@ -11,13 +11,6 @@ import graft.plans.VectorExpressions.{dotF, srpBitsF}
 class SrpBitsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def treeOr(v: org.apache.spark.sql.Column,
-                     planes: Seq[Array[Float]]): org.apache.spark.sql.Column =
-    planes.zipWithIndex.map { case (h, i) =>
-      F.when(dotF(v, F.typedlit(h)) > 0d, F.lit(1L << i))
-        .otherwise(F.lit(0L))
-    }.reduce(_.bitwiseOR(_))
-
   private def treeSum(v: org.apache.spark.sql.Column,
                       planes: Seq[Array[Float]]): org.apache.spark.sql.Column =
     planes.zipWithIndex.map { case (h, i) =>
@@ -37,7 +30,7 @@ class SrpBitsSpec extends SparkSpec {
     val df = vecs.toDF("id", "v")
     val out = df.select(
         srpBitsF(F.col("v"), planes).as("kern"),
-        treeOr(F.col("v"), planes).as("or"),
+        PlainForms.srpBits(F.col("v"), planes).as("or"),
         treeSum(F.col("v"), planes).as("sum"))
       .filter(F.col("kern") =!= F.col("or") || F.col("kern") =!= F.col("sum"))
       .collect()

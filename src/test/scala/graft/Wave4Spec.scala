@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{functions => F}
 import graft.functions.ProductAgg
-import graft.plans.{MathFunctions, SpecialMath}
+import graft.functions.SpecialMath
 import graft.streaming.DataStream
 
 /** Wave-4 suites: streaming parity, special math, product aggregate,
@@ -62,32 +62,47 @@ class Wave4Spec extends SparkSpec {
     assert(err.getMessage.contains("Did not find requested row"))
   }
 
+  /** A special-math Column evaluated at `x`. */
+  private def at(f: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
+                 x: Double): Double = {
+    import spark.implicits._
+    Seq(x).toDF("x").select(f(F.col("x"))).first().getDouble(0)
+  }
+
   test("erf against known values") {
     // erf(0)=0, erf(1)≈0.8427007929, erf(-1)=-erf(1), erf(∞)→1
-    assert(math.abs(SpecialMath.erf(0.0)) < 1.5e-7) // A&S 7.1.26 |ε| bound
-    assert(math.abs(SpecialMath.erf(1.0) - 0.8427007929) < 1e-6)
-    assert(math.abs(SpecialMath.erf(-1.0) + SpecialMath.erf(1.0)) < 1e-12)
-    assert(math.abs(SpecialMath.erf(4.0) - 1.0) < 1e-6)
-    assert(math.abs(SpecialMath.erfc(0.5) - (1 - SpecialMath.erf(0.5))) < 1e-12)
+    val erf = (x: Double) => at(SpecialMath.erf, x)
+    assert(math.abs(erf(0.0)) < 1.5e-7) // A&S 7.1.26 |ε| bound
+    assert(math.abs(erf(1.0) - 0.8427007929) < 1e-6)
+    assert(math.abs(erf(-1.0) + erf(1.0)) < 1e-12)
+    assert(math.abs(erf(4.0) - 1.0) < 1e-6)
+    assert(math.abs(at(SpecialMath.erfc, 0.5) - (1 - erf(0.5))) < 1e-12)
   }
 
   test("digamma and lgamma against known values") {
     val gamma = 0.5772156649015329 // Euler–Mascheroni
-    assert(math.abs(SpecialMath.digamma(1.0) + gamma) < 1e-9)
+    assert(math.abs(at(SpecialMath.digamma, 1.0) + gamma) < 1e-9)
     // ψ(2) = 1 - γ
-    assert(math.abs(SpecialMath.digamma(2.0) - (1 - gamma)) < 1e-9)
+    assert(math.abs(at(SpecialMath.digamma, 2.0) - (1 - gamma)) < 1e-9)
     // lgamma(5) = ln(24)
-    assert(math.abs(SpecialMath.lgamma(5.0) - math.log(24.0)) < 1e-9)
-    assert(math.abs(SpecialMath.lgamma(0.5) - 0.5 * math.log(math.Pi)) < 1e-9)
+    assert(math.abs(at(SpecialMath.lgamma, 5.0) - math.log(24.0)) < 1e-9)
+    assert(math.abs(at(SpecialMath.lgamma, 0.5) - 0.5 * math.log(math.Pi))
+      < 1e-9)
+    // off x > 0 both are NULL (a shift step would divide by zero)
+    import spark.implicits._
+    val off = Seq(0.0, -2.0).toDF("x").select(
+      SpecialMath.digamma(F.col("x")), SpecialMath.lgamma(F.col("x")))
+      .collect()
+    assert(off.forall(r => r.isNullAt(0) && r.isNullAt(1)))
   }
 
   test("math expressions evaluate in a plan (codegen path)") {
     import spark.implicits._
     val df = Seq(0.0, 0.5, 1.0, 2.0).toDF("x")
     val r = df.select(
-      MathFunctions.erf($"x").as("e"),
-      MathFunctions.digamma($"x" + 1.0).as("d"),
-      MathFunctions.lgammaC($"x" + 1.0).as("g")).collect()
+      SpecialMath.erf($"x").as("e"),
+      SpecialMath.digamma($"x" + 1.0).as("d"),
+      SpecialMath.lgamma($"x" + 1.0).as("g")).collect()
     assert(math.abs(r(2).getDouble(0) - 0.8427007929) < 1e-6)
     assert(!r.exists(row => row.getDouble(2).isNaN))
   }

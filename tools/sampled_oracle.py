@@ -170,9 +170,11 @@ def compare(query, tag, g_rows, g_cols, e_rows, e_cols):
     return gc, gr
 
 
-def pairs_restricted(query, sf_dir, out_dir, mod, walls=None):
+def pairs_restricted(query, sf_dir, out_dir, mod, walls=None,
+                     record=True):
     """Restricted-dump: full dump filtered to carve-internal pairs vs
-    the quadratic oracle over the carved view. Returns (cols, rows)."""
+    the quadratic oracle over the carved view. Returns (cols, rows);
+    writes the manifest only when `record`."""
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM "
@@ -194,15 +196,18 @@ def pairs_restricted(query, sf_dir, out_dir, mod, walls=None):
     print(f"PASS {query}_restricted: {len(rows)} carve-internal pairs "
           f"bit-match the quadratic oracle (mod {mod}, "
           f"oracle {t_oracle:.0f}s)")
-    w = dict(walls or {})
-    w["oracle"] = round(t_oracle, 1)
-    write_manifest(query, "restricted-dump", sf_dir, mod,
-                   len(rows), cols, canon_hash(cols, rows), w)
+    if record:
+        w = dict(walls or {})
+        w["oracle"] = round(t_oracle, 1)
+        write_manifest(query, "restricted-dump", sf_dir, mod,
+                       len(rows), cols, canon_hash(cols, rows), w)
     return cols, rows
 
 
-def carve_rerun(query, sf_dir, mod, carve_dir=None, out_dir=None):
-    """Carve-rerun: engine AND oracle both on the carved input."""
+def carve_rerun(query, sf_dir, mod, carve_dir=None, out_dir=None,
+                record=True):
+    """Carve-rerun: engine AND oracle both on the carved input; writes
+    the manifest only when `record`."""
     carve_dir = carve_dir or f"/tmp/graft_carve_mod{mod}"
     out_dir = out_dir or f"/tmp/graft_carve_out_{query}"
     need = [t for t, _ in TABLES
@@ -224,16 +229,19 @@ def carve_rerun(query, sf_dir, mod, carve_dir=None, out_dir=None):
     print(f"PASS {query}_carve: {len(rows)} rows bit-match the oracle "
           f"on the mod-{mod} carve (engine {t_engine:.0f}s, "
           f"oracle {t_oracle:.0f}s)")
-    write_manifest(query, "carve-rerun", sf_dir, mod, len(rows), cols,
-                   canon_hash(cols, rows),
-                   {"engine": round(t_engine, 1),
-                    "oracle": round(t_oracle, 1)})
+    if record:
+        write_manifest(query, "carve-rerun", sf_dir, mod, len(rows), cols,
+                       canon_hash(cols, rows),
+                       {"engine": round(t_engine, 1),
+                        "oracle": round(t_oracle, 1)})
     return cols, rows
 
 
 def replay(target, sf_dir):
     """Re-derive a closure from its committed manifest; fail on any
-    schema/row/hash drift. `all` replays every manifest."""
+    schema/row/hash drift. `all` replays every manifest. A replay only
+    compares and reports: it never rewrites a manifest, so a drift
+    stays a failure on every later replay too."""
     names = (sorted(f[:-5] for f in os.listdir(MANIFEST_DIR)
                     if f.endswith(".json"))
              if target == "all" else [target])
@@ -246,12 +254,11 @@ def replay(target, sf_dir):
         prior_hash, prior_rows = m["canon_sha256"], m["rows"]
         if m["mode"] == "restricted-dump":
             out_dir = f"/tmp/graft_replay_{name}"
-            t_engine = run_verify(sf_dir, out_dir, name)
-            cols, rows = pairs_restricted(
-                name, sf_dir, out_dir, mod,
-                walls={"engine_full": round(t_engine, 1)})
+            run_verify(sf_dir, out_dir, name)
+            cols, rows = pairs_restricted(name, sf_dir, out_dir, mod,
+                                          record=False)
         else:
-            cols, rows = carve_rerun(name, sf_dir, mod)
+            cols, rows = carve_rerun(name, sf_dir, mod, record=False)
         h = canon_hash(cols, rows)
         if h != prior_hash or len(rows) != prior_rows:
             print(f"DRIFT {name}: manifest {prior_rows} rows "
