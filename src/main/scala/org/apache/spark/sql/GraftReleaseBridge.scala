@@ -21,13 +21,15 @@ object GraftReleaseBridge {
     * i.e. the checkpointed frame itself, not a derived view. The
     * tempting generalization (collect every `LogicalRDD` leaf of the
     * analyzed plan and unpersist each) is WRONG: a derived frame can
-    * reference checkpoints it does not own. Concretely, PPR's round-1
-    * `prev` is `base.select(...)` — a projection over the `base`
-    * checkpoint that every later iteration joins against; releasing
-    * leaves there drops `base`'s blocks and the next round dies with
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (reproduced by DeterminismSpec
-    * q246 when this was tried). "Release exactly the relation you
-    * were handed, and only if you were handed the checkpoint itself"
+    * reference checkpoints it does not own. Concretely, in
+    * `TrainQueries.bpeTrain` each round's `bpePairCounts(vocab)` is an
+    * aggregate over the `vocab` checkpoint that the same round's merge
+    * projection reads again; releasing leaves there would drop
+    * `vocab`'s blocks and the merge job would die with
+    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (DeterminismSpec reproduced
+    * that failure when leaf release was tried). "Release exactly the
+    * relation you were handed, and only if you were handed the
+    * checkpoint itself"
     * is the only ownership rule a call site can reason about; passing
     * a derived frame degrades to the CacheManager no-op, which is the
     * SAFE direction. Call sites that want a real release must pass

@@ -99,6 +99,12 @@ class PipelineSpec extends SparkSpec {
         && brute.exceptAll(join).isEmpty,
         s"join path (bits=$bits) vs brute force diverge")
     }
+    // fewer cells than nprobe (1 bit: two cells plus the zero-norm
+    // sentinel): phase A probes every cell and phase B is empty
+    val tiny = Knn.exactKnnBnB(emb, qs, "vec_id", "embedding", 5,
+      cellBits = 1, nprobe = 4)
+    assert(tiny.exceptAll(brute).isEmpty && brute.exceptAll(tiny).isEmpty,
+      "1-bit grid vs brute force diverge")
   }
 
   test("IVF knn with nprobe = all cells equals brute force") {
