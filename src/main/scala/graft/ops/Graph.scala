@@ -19,10 +19,11 @@ import org.apache.spark.sql.GraftReleaseBridge
   * short fixed-round loops) without changing a single output value:
   *
   *  - '''fixed-round loops''' (PageRank, PPR, label propagation) keep
-  *    intermediate rounds LAZY and checkpoint only the final state
-  *    (plus every [[CkptRounds]]th round so a deep loop's lineage
-  *    stays bounded at scale): one job runs the whole chain, vs one
-  *    job + one O(|V|) cache write per round;
+  *    intermediate rounds LAZY and checkpoint every [[CkptRounds]]th
+  *    round so a deep loop's lineage stays bounded at scale; PPR and
+  *    label propagation also checkpoint the final state (one job runs
+  *    the whole chain, vs one job + one O(|V|) cache write per round),
+  *    while PageRank returns it lazy (its pins measured no faster);
   *  - '''convergence loops''' (BFS, k-core, CC)
   *    mark the round's state with a LAZY `localCheckpoint(false)` and
   *    let the convergence count materialize it — Spark persists local
@@ -58,31 +59,34 @@ object Graph {
     * inflow-fold loop has no iteration-0 state to return — callers
     * wanting the uniform base vector compute 1/n directly).
     *
-    * Scale shape: the degree-weighted edge relation and the node set
-    * are eagerly localCheckpointed ONCE, so each iteration is exactly
-    * one join + one keyed groupBy over O(|E|) rows with O(|V|) rank
-    * state. Iterations stay lazy between [[CkptRounds]] boundaries —
-    * the returned frame is eagerly checkpointed, so the whole loop is
-    * ONE job and callers can fan out over the result for free. The raw
-    * `edges` input is evaluated ~4× while building the two pinned
-    * relations — hand in a cheap lineage (a checkpointed/persisted
-    * upstream), as q150 does with its distinct pair set. On a cluster
-    * the checkpointed edges would be a bucketed table on `src`, making
+    * Scale shape: each iteration is one join + one keyed groupBy over
+    * O(|E|) rows with O(|V|) rank state. Nothing is pinned below
+    * [[CkptRounds]] iterations: the edge relation, the node set and
+    * the result stay lazy (pinning them measured no faster cold at
+    * sf0.1, SCALE.md §library pins), so the returned frame re-runs the
+    * loop each time it is evaluated — a caller that reads it more than
+    * once pins it itself. The raw `edges` input is read by the node
+    * count and by every iteration — hand in a cheap lineage (a
+    * checkpointed upstream), as q150 does with its distinct pair set.
+    * On a cluster the edges would be a bucketed table on `src`, making
     * the per-iteration join co-located.
+    *
+    * Ownership: at `iters >= CkptRounds` the returned frame reads the
+    * last `CkptRounds` checkpoint, so pageRank does not release it;
+    * the harness's per-query sweep (Bench, Verify) frees it with the
+    * other pins the query leaves.
     */
   def pageRank(edges: DataFrame, iters: Int = 3,
       damping: Double = 0.85): DataFrame = {
     val e = edges.select(F.col("src").cast("long").as("src"),
       F.col("dst").cast("long").as("dst"))
     val deg = e.groupBy("src").agg(F.count(F.lit(1)).as("deg"))
-    val wedges = e.join(deg, "src").localCheckpoint()
+    val wedges = e.join(deg, "src")
     val nodes = e.select(F.col("src").as("node"))
       .unionAll(e.select(F.col("dst").as("node")))
       .distinct()
-      .localCheckpoint(false)
     // N is one driver-side scalar — the same bounded-state exception
-    // as CC's convergence count. The count job also materializes the
-    // lazily-marked nodes checkpoint (ckpt+count fused to one job).
+    // as CC's convergence count.
     val n = nodes.count().toDouble
     require(iters >= 1, "pageRank needs at least one iteration")
     // The loop iterates on the INFLOW relation, not the rank relation:
@@ -107,23 +111,19 @@ object Graph {
         .select(F.col("cn2").as("cn"), F.col("w"))
         .groupBy("cn").agg(F.sum("w").as("inflow"))
       if (i % CkptRounds == 0) {
+        // pin: measured — lazy 16.13 vs 13.26 s at 16 iters, local[4] (3 pairs)
         contrib = contrib.localCheckpoint() // lineage bound, deep loops
         if (lastCk != null) GraftReleaseBridge.release(lastCk)
         lastCk = contrib
       }
     }
-    val pr = nodes
+    // lazy: the result reads lastCk, which the caller's sweep releases
+    nodes
       .join(contrib, F.col("node") === F.col("cn"), "left_outer")
       .select(F.col("node"),
         ((F.lit(1.0) - damping) / F.lit(n)
           + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0)))
           .as("pr"))
-      .localCheckpoint() // one job runs every lazy round above
-    // the result is checkpointed — the loop inputs are superseded
-    GraftReleaseBridge.release(wedges)
-    GraftReleaseBridge.release(nodes)
-    if (lastCk != null) GraftReleaseBridge.release(lastCk)
-    pr
   }
 
   /** k-core decomposition by simultaneous peeling: repeatedly delete
@@ -140,41 +140,47 @@ object Graph {
     * the co-purchase graphs here. Each round is ONE fused job: the
     * drop-set count materializes that round's lazily-marked edge and
     * drop checkpoints together (O(1) driver rows), and the superseded
-    * edge set releases only after the fused job has pinned its
-    * successor. The INPUT edge relation is checkpointed EAGERLY, like
-    * every sibling loop's: round 12 marked it lazy and q186 regressed
-    * +15% driver-to-driver — folding the expensive upstream (q186's
-    * ΣC(k,2) co-purchase pair build) into the first fused count job
-    * costs more than the one job the mark saves. Round-13 min-of-5
+    * edge and drop sets release only after the fused job has pinned
+    * the edge set that reads them. The INPUT edge relation is
+    * checkpointed EAGERLY, like every sibling loop's: round 12 marked
+    * it lazy and q186 regressed +15% driver-to-driver — folding the
+    * expensive upstream (q186's ΣC(k,2) co-purchase pair build) into
+    * the first fused count job costs more than the one job the mark
+    * saves. Round-13 min-of-5
     * A/B at sf0.1: lazy input {2.43, 2.20} s, eager input + lazy
     * rounds {1.98, 2.00} s (control q232 steady) — see SCALE.md.
     */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 32): DataFrame = {
     var e = edges.select(F.col("a").cast("long").as("a"),
       F.col("b").cast("long").as("b"))
+      // pin: measured — lazy 7.58 vs 4.91 s, local[4]
       .localCheckpoint() // EAGER: keep the upstream out of round 1
     var round = 0
     var done = false
     var lastDeg: DataFrame = null
-    var pendingRelease: DataFrame = null
+    // round r's edge set and drop set: the edge set of round r+1 reads
+    // both until round r+1's count has materialized it
+    var pendingRelease: Seq[DataFrame] = Nil
     while (!done && round < maxRounds) {
       val deg = e.select(F.col("a").as("n"))
         .unionAll(e.select(F.col("b").as("n")))
         .groupBy("n").agg(F.count(F.lit(1)).as("deg"))
       lastDeg = deg
       val drop = deg.filter(F.col("deg") < k).select("n")
+        // pin: measured — all round pins lazy 26.4 vs 4.91 s, local[4] (1-run smoke)
         .localCheckpoint(false)
       val nDrop = drop.count()
-      if (pendingRelease != null) {
-        GraftReleaseBridge.release(pendingRelease)
-        pendingRelease = null
-      }
-      if (nDrop == 0) done = true
-      else {
-        pendingRelease = e
+      pendingRelease.foreach(GraftReleaseBridge.release)
+      pendingRelease = Nil
+      if (nDrop == 0) {
+        done = true
+        GraftReleaseBridge.release(drop) // empty; nothing reads it
+      } else {
+        pendingRelease = Seq(e, drop)
         e = e.join(drop.toDF("a"), Seq("a"), "left_anti")
           .join(drop.toDF("b"), Seq("b"), "left_anti")
           .select("a", "b")
+          // pin: measured — all round pins lazy 26.4 vs 4.91 s, local[4] (1-run smoke)
           .localCheckpoint(false) // next round's count materializes it
         round += 1
       }
@@ -191,12 +197,10 @@ object Graph {
         val d = e.select(F.col("a").as("n"))
           .unionAll(e.select(F.col("b").as("n")))
           .groupBy("n").agg(F.count(F.lit(1)).as("deg"))
+          // pin: correctness — the returned degrees must not read `e`, released below
           .localCheckpoint(false)
         d.count() // one job: materializes d AND the final edge ckpt
-        if (pendingRelease != null) {
-          GraftReleaseBridge.release(pendingRelease)
-          pendingRelease = null
-        }
+        pendingRelease.foreach(GraftReleaseBridge.release)
         GraftReleaseBridge.release(e) // d is pinned; e is superseded
         d
       }
@@ -207,11 +211,12 @@ object Graph {
   /** Personalized PageRank with a fixed iteration count: the restart
     * mass teleports to the SEED set (uniform over seeds present in the
     * graph) instead of all nodes — "importance relative to these
-    * seeds", the recommendation/influence primitive. Same shape,
-    * lineage discipline, and dangling-mass simplification as
-    * [[pageRank]]: iterations stay lazy, the final state checkpoints
-    * eagerly (one job for the whole loop), and the pinned loop inputs
-    * release once it lands.
+    * seeds", the recommendation/influence primitive. Same shape and
+    * dangling-mass simplification as [[pageRank]], but pinned where
+    * pageRank is not (the pins measured faster cold, SCALE.md §library
+    * pins): the loop inputs are checkpointed, iterations stay lazy,
+    * the final state checkpoints eagerly (one job for the whole loop),
+    * and the pinned loop inputs release once it lands.
     *
     * Input: directed `(src, dst)` edges, `(node)` seeds.
     * Output: `(node, ppr)` for every node incident to an edge.
@@ -221,15 +226,18 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       iters: Int = 3, damping: Double = 0.85): DataFrame = {
     val e = edges.select(F.col("src").cast("long").as("src"),
+      // pin: measured — PPR's pins lazy 9.24 vs 6.08 s, local[4]
       F.col("dst").cast("long").as("dst")).localCheckpoint()
     val deg = e.groupBy("src").agg(F.count(F.lit(1)).as("deg"))
     val nodes = e.select(F.col("src").as("node"))
       .unionAll(e.select(F.col("dst").as("node")))
       .distinct()
+      // pin: measured — PPR's pins lazy 9.24 vs 6.08 s, local[4]
       .localCheckpoint(false)
     val seedsIn = seeds.select(F.col("node").cast("long").as("node"))
       .distinct()
       .join(nodes, Seq("node"), "left_semi")
+      // pin: measured — PPR's pins lazy 9.24 vs 6.08 s, local[4]
       .localCheckpoint(false)
     // bounded driver scalar, as pageRank's n; the one count job
     // materializes BOTH lazily-marked checkpoints (nodes, seedsIn)
@@ -249,6 +257,7 @@ object Graph {
     // just the aggregate. Per-row arithmetic is unchanged.
     val wedgesB = e.join(deg, "src")
       .join(base.withColumnRenamed("node", "src"), "src")
+      // pin: measured — PPR's pins lazy 9.24 vs 6.08 s, local[4]
       .localCheckpoint()
     var contrib = wedgesB
       .select(F.col("dst").as("cn"),
@@ -265,6 +274,7 @@ object Graph {
         .select(F.col("cn2").as("cn"), F.col("w"))
         .groupBy("cn").agg(F.sum("w").as("inflow"))
       if (i % CkptRounds == 0) {
+        // pin: measured — lazy 20.54 vs 8.38 s at 16 iters, local[4] (3 pairs)
         contrib = contrib.localCheckpoint() // lineage bound, deep loops
         if (lastCk != null) GraftReleaseBridge.release(lastCk)
         lastCk = contrib
@@ -276,6 +286,7 @@ object Graph {
         ((F.lit(1.0) - damping) * F.col("base")
           + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0)))
           .as("ppr"))
+      // pin: measured — PPR's pins lazy 9.24 vs 6.08 s, local[4]
       .localCheckpoint() // one job runs every lazy round above
     // the result is checkpointed — every pinned loop input is superseded
     GraftReleaseBridge.release(e)
@@ -311,14 +322,17 @@ object Graph {
     // pin the (possibly expensive) edge lineage ONCE — nodes and the
     // directed relation both derive from it
     val und = edges.select(F.col("a").cast("long").as("a"),
+      // pin: measured — q232 with these pins lazy 6.48 vs 4.88 s, local[32]
       F.col("b").cast("long").as("b")).localCheckpoint()
     val nodes = und.select(F.col("a").as("node"))
       .unionAll(und.select(F.col("b").as("node")))
+      // pin: measured — q232 with these pins lazy 6.48 vs 4.88 s, local[32]
       .distinct().localCheckpoint(false) // materialized by dir's job
     val dir = und.select(F.col("a").as("src"), F.col("b").as("dst"))
       .unionAll(und.select(F.col("b").as("src"), F.col("a").as("dst")))
       .unionAll(nodes.select(F.col("node").as("src"),
         F.col("node").as("dst")))
+      // pin: measured — q232 with these pins lazy 6.48 vs 4.88 s, local[32]
       .localCheckpoint()
     var lab = nodes.select(F.col("node"), F.col("node").as("lab"))
     var lastCk: DataFrame = null
@@ -335,6 +349,8 @@ object Graph {
         .agg(F.expr("mode(lab, true)").as("lab"))
         .select(F.col("dst").as("node"), F.col("lab"))
       if (r % CkptRounds == 0 || r == rounds) {
+        // at 16 rounds: lazy 10.58 vs 6.91 s, local[4] (3 pairs)
+        // pin: measured — q232 lazy 6.48 vs 4.88 s, local[32]
         lab = lab.localCheckpoint() // one job runs every lazy round above
         if (lastCk != null) GraftReleaseBridge.release(lastCk)
         lastCk = lab
@@ -370,8 +386,10 @@ object Graph {
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int)
       : DataFrame = {
     val e = edges.select(F.col("src").cast("long").as("src"),
+      // pin: measured — q213 with these pins lazy 9.81 vs 5.27 s, local[4]
       F.col("dst").cast("long").as("dst")).localCheckpoint()
     var frontier = seeds.select(F.col("node").cast("long").as("node"))
+      // pin: measured — q213 with these pins lazy 9.81 vs 5.27 s, local[4]
       .distinct().localCheckpoint(false) // the liveness count materializes it
     // hop-stamped, disjoint, individually checkpointed frontiers;
     // their union IS the visited set (and the result)
@@ -384,6 +402,7 @@ object Graph {
       val next = e.join(frontier, F.col("src") === F.col("node"))
         .select(F.col("dst").as("node")).distinct()
         .join(visited, Seq("node"), "left_anti")
+        // pin: measured — q213 lazy 33.5 vs 5.27 s, local[4] (1-run smoke)
         .localCheckpoint(false)
       val nNext = next.count() // ONE job: materializes next AND counts it
       live = nNext > 0

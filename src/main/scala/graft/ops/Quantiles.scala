@@ -76,7 +76,10 @@ object Quantiles {
   /** Exact interpolated quantiles of several numeric columns; all
     * columns and quantiles share each refinement pass. `stats` can
     * supply precomputed (min, max, non-null count) per column to skip
-    * the first pass (describe already has them). */
+    * the first pass (describe already has them).
+    *
+    * kernel: measured — q21 on the built-in `percentile` form 4.26 vs
+    * 1.97 s, local[4] (SCALE.md §describe). */
   def exactMulti(df: DataFrame, cols: Seq[String], qs: Seq[Double],
                  stats: Map[String, (Double, Double, Long)] = Map.empty,
                  k: Int = DefaultK,

@@ -15,44 +15,16 @@ object StatOps {
 
     /** reference describe (src/dataframe.jl:867-906): per numeric column
       * Min/1Q/Median/Mean/3Q/Max plus count and NA count. Quantiles are
-      * EXACT (`percentile`, linear interpolation) matching DuckDB's
-      * quantile_cont; swap to approx_percentile at the 100 TB tier where
-      * a bounded-error sketch is the right trade.
-      */
-    def describeCols(cols: Seq[String], digits: Int = 6): DataFrame = {
-      // ONE percentile buffer per column (array form) — three separate
-      // percentile aggs each build their own per-partition value map,
-      // tripling the dominant cost.
-      val aggs = cols.flatMap { c =>
-        Seq(
-          F.expr(s"round(min($c), $digits)").as(s"${c}__min"),
-          F.expr(s"percentile($c, array(0.25, 0.5, 0.75))").as(s"${c}__qs"),
-          F.expr(s"round(avg($c), $digits)").as(s"${c}__mean"),
-          F.expr(s"round(max($c), $digits)").as(s"${c}__max"),
-          F.expr(s"count($c)").cast("long").as(s"${c}__n"),
-          F.expr(s"count_if($c is null)").cast("long").as(s"${c}__n_missing"))
-      }
-      val one = df.agg(aggs.head, aggs.tail: _*)
-      // single-row unpivot: stack() over the flat aggregate row
-      val branches = cols.map { c =>
-        s"'$c', ${c}__min, round(${c}__qs[0], $digits), " +
-          s"round(${c}__qs[1], $digits), ${c}__mean, " +
-          s"round(${c}__qs[2], $digits), ${c}__max, " +
-          s"cast(${c}__n as double), cast(${c}__n_missing as double)"
-      }.mkString(", ")
-      val hdr = "min, q25, median, mean, q75, max, n, n_missing"
-      one.select(F.expr(
-        s"stack(${cols.size}, $branches) as (col_name, $hdr)"))
-    }
-
-    /** describeCols with quantiles via the sort-based exact algorithm
-      * ([[Quantiles.exactMulti]]) instead of `percentile`'s value-map
-      * buffers: same output, scales to high-cardinality columns (the
-      * value-map merge is O(distinct) on ONE reducer — measured 2.9 s
-      * for one 600k-distinct column vs 0.9 s for low-cardinality). ONE
-      * aggregate pass for min/mean/max/counts + ONE parallel sort of
-      * all columns stacked for the quantile ranks, regardless of how
-      * many columns are described.
+      * EXACT (linear interpolation) matching DuckDB's quantile_cont,
+      * via histogram refinement ([[Quantiles.exactMulti]]) instead of
+      * `percentile`'s value-map buffers (the plain form,
+      * `PlainForms.describeCols` in the tests): same output, scales to
+      * high-cardinality columns (the value-map merge is O(distinct) on
+      * ONE reducer — measured 2.9 s for one 600k-distinct column vs
+      * 0.9 s for low-cardinality). ONE aggregate pass for
+      * min/mean/max/counts + the refinement passes over all columns
+      * stacked for the quantile ranks, regardless of how many columns
+      * are described.
       */
     def describeColsExact(cols: Seq[String], digits: Int = 6): DataFrame = {
       val spark = df.sparkSession

@@ -591,7 +591,9 @@ object AnalyticsQueries extends QueryRegistry {
       val edges = cs.select(F.col("c").as("src"), F.col("sv").as("dst"))
         .unionAll(cs.select(F.col("sv").as("src"), F.col("c").as("dst")))
       val pr = graft.ops.Graph.pageRank(edges, iters = 3, damping = 0.85)
-      val n = pr.count().toDouble // checkpointed O(|V|) frame — cheap
+      // pr is lazy: this count is its own job over the loop's plan
+      // (pinning pr was not faster cold, SCALE.md §library pins)
+      val n = pr.count().toDouble
       pr.filter(F.col("node") % 2 === 1)
         .select(
           F.concat(F.lit("s"), F.expr("(node - 1) div 2")).as("node"),

@@ -250,8 +250,6 @@ object AuditQueries extends QueryRegistry {
         .select(F.col("event_type"),
           F.expr("cast(floor(unix_timestamp(ts)) as bigint)").as("sec"),
           F.expr("cast(floor((value * 100) * 1e0 + 0.5) / 1e0 as bigint)").as("cents"))
-        // pin: measured — unpinned 1.21 vs 1.14 s, local[4]
-        .localCheckpoint() // feeds bounds AND both halves
       val bounds = ev.agg(
         F.min("sec").as("t0"), F.max("sec").as("t1"),
         F.min("cents").as("c0"), F.max("cents").as("c1"))
@@ -551,8 +549,6 @@ object AuditQueries extends QueryRegistry {
         // W·cusum = W·prefix − idx·N: exact integers
         .withColumn("wcusum",
           F.expr("n_weeks * pre - idx * n"))
-        // pin: measured — unpinned 1.03 vs 0.82 s, local[4]
-        .localCheckpoint() // feeds the argmax AND the output
       val best = cs.groupBy(F.col("event_type").as("et"))
         .agg(F.max(F.struct(F.abs(F.col("wcusum")).as("a"),
           (-F.col("wk")).as("nw"))).as("m"))
@@ -845,8 +841,6 @@ object AuditQueries extends QueryRegistry {
         .select(F.expr("cast(substring(cast(cents as string), 1, 1) as bigint)")
           .as("digit"))
         .groupBy("digit").agg(F.count(F.lit(1)).as("n"))
-        // pin: measured — unpinned 0.86 vs 0.71 s, local[4]
-        .localCheckpoint() // feeds totals AND the chi2
       val tot = d.agg(F.sum("n").as("nt"))
       val terms = d.crossJoin(F.broadcast(tot))
         .select(F.col("digit"), F.col("n"), F.col("nt"),
@@ -854,7 +848,6 @@ object AuditQueries extends QueryRegistry {
         .withColumn("chiterm", F.expr(
           """cast(floor((pow(cast(n as double) - pexp * nt, 2)
              / (pexp * nt) * 100000000) * 1e0 + 0.5) / 1e0 as bigint)"""))
-        .localCheckpoint() // pin: measured — unpinned 0.86 vs 0.71 s, local[4]
       val chi = terms.agg(F.expr(
         "floor((cast(sum(chiterm) as double) / 100000000) * 1e6 + 0.5) / 1e6")
         .as("chi2"))

@@ -243,7 +243,7 @@ object EvalQueries extends QueryRegistry {
 
   /** Farthest-point sampling (k-center coreset): greedy max-min-
     * distance selection, seeded at the smallest vec_id. Same bounded
-    * machinery as [[mmrSelect]] over a pinned exploded corpus: ≤k
+    * machinery as [[mmrSelect]] over the exploded corpus: ≤k
     * selected vectors broadcast per round, one 1-row collect per round,
     * distances rounded to 6 dp before every argmax (ties to the
     * smaller vec_id). Shared by q249 and EvalSpec. */
@@ -251,7 +251,6 @@ object EvalQueries extends QueryRegistry {
     val e2 = emb.select(F.col("vec_id"),
         F.posexplode(F.col("embedding")).as(Seq("pos", "x")))
       .withColumn("x", F.col("x").cast("double"))
-      .localCheckpoint() // pin: measured — unpinned 2.61 vs 2.26 s, local[32]
     val start = e2.agg(F.min("vec_id")).collect()(0).getLong(0)
     var selected = Vector((1, start, 0.0))
     var step = 2
@@ -276,10 +275,8 @@ object EvalQueries extends QueryRegistry {
         step += 1
       }
     }
-    val out = emb.sparkSession.createDataFrame(selected)
+    emb.sparkSession.createDataFrame(selected)
       .toDF("step", "vec_id", "dmin")
-    GraftReleaseBridge.release(e2)
-    out
   }
 
   /** One k-anonymity audit level: equivalence-class stats of a

@@ -167,7 +167,7 @@ object MetricQueries extends QueryRegistry {
             .as("f2"),
           F.expr("substring(c_name, length(c_name) - 1, 2)")
             .as("f3"))
-        // pin: measured — unpinned 1.83 vs 1.70 s, local[32]
+        // pin: measured — unpinned 2.02 vs 1.66 s, local[32]
         .localCheckpoint() // feeds 3 u-estimates AND the pair join
       def uW(field: String) = {
         // DECIMAL(38,0) before every product: nv*(nv-1) and N*(N-1)

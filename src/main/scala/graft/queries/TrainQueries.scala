@@ -236,15 +236,14 @@ object TrainQueries extends QueryRegistry {
     // closed-form driver arithmetic on that 1-row collect (bounded —
     // q279's pinned-tiny-state discipline), and (a, b) are rounded to
     // 8 dp each round so engine and oracle iterate on identical state
-    // (q231/q279 rule). The data relation is pinned once; the corpus
-    // is scanned exactly 3 + 1 times with no driver-side data loop.
+    // (q231/q279 rule). The corpus is scanned 3 + 1 times (one per
+    // Newton step, one for the loss) with no driver-side data loop.
     "q285_platt_scale" -> { (s, dir) =>
       import s.implicits._
       val d = T.load(s, dir, "lineitem")
         .select(F.col("l_discount").as("s"),
           F.when(F.col("l_returnflag") === "R", 1.0d).otherwise(0.0d)
             .as("y"))
-        .localCheckpoint() // pin: measured — unpinned 1.30 vs 1.15 s, local[32]
       def r8(x: Double): Double =
         BigDecimal(x).setScale(8, BigDecimal.RoundingMode.HALF_UP)
           .toDouble
@@ -442,8 +441,6 @@ object TrainQueries extends QueryRegistry {
         .withColumn("rn", F.row_number().over(w1))
         .filter(F.col("rn") === 1)
         .select(F.col("item"), F.col("lbl").as("maj"))
-        // pin: measured — unpinned 3.38 vs 3.08 s, local[32]
-        .localCheckpoint() // feeds reliability AND the round-2 vote
       val rel = ann.join(maj, "item")
         .groupBy("ann")
         .agg(F.expr(

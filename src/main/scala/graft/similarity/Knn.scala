@@ -193,26 +193,20 @@ object Knn {
     import graft.plans.VectorExpressions.{dotF, normF}
     // per-vector norm precomputed ONCE: pair scoring is then
     // dot/(qn*cn) — 3x fewer flops than cosineF per pair, and
-    // bit-identical to it (same kernel, same op order; zero guard kept)
-    // pinned FIRST (round-10 ADVICE: the adaptive count used to
-    // re-evaluate the whole corpus plan a second time): this pin feeds
-    // the adaptive count plus FOUR consumers — the two stats passes
-    // (cents, cellStats) and the phase-A / phase-B scoring joins.
-    // Without a pin the scan re-runs for each (measured 21.7 s → the
-    // dominant cost of q207 in r5's bench). The cell id is a cheap
-    // projection over the pin (bits ≤ 16 sign dots per row),
-    // re-derived per consumer rather than double-materialized.
-    // Bench/Verify sweep the blocks post-query.
+    // bit-identical to it (same kernel, same op order; zero guard kept).
+    // The corpus feeds the adaptive count plus FOUR consumers — the two
+    // stats passes (cents, cellStats) and the phase-A / phase-B scoring
+    // joins — and each re-reads it: pinning it was not faster cold
+    // (q207, q212 at sf0.1; SCALE.md §library pins). The cell id is a
+    // cheap projection (bits ≤ 16 sign dots per row), re-derived per
+    // consumer.
     val base = corpus
       .select(F.col(idCol).as("neighbor_id"), F.col(vecCol).as("cvec"),
         normF(F.col(vecCol)).as("cn"))
-      .localCheckpoint(false) // the adaptive count materializes it
     val bits =
       if (cellBits > 0) cellBits
       else {
-        // one long; the count job also materializes the lazily-marked
-        // pin (ckpt+count fused — round 12), so the plan still runs once
-        val n = base.count()
+        val n = base.count() // one long
         math.min(16, math.max(4,
           math.ceil(math.log(math.max(1.0, n / 256.0)) / math.log(2.0))
             .toInt))
@@ -306,17 +300,15 @@ object Knn {
           (ucj + F.lit(r)).as("ub"))
       }: _*))
       val ranked = q.withColumn("cells", cellArr)
-      // phase A pinned by an eager checkpoint (n x k rows): the tq
-      // branch, the candB derivation and the final union all read it —
-      // without the pin the whole probe scoring would re-run up to 3x.
-      // Bench/Verify sweep the blocks post-query.
+      // phase A (n x k rows) is read by the tq branch, the candB
+      // derivation and the final union; the probe scoring re-runs for
+      // each, and pinning it was not faster cold (q207, q212 at sf0.1)
       val topA = TopK.perGroup[Long](
         score(ranked.select(F.col("query_id"), F.col("qvec"), F.col("qn"),
           F.explode(F.expr(s"slice(cells, 1, $nprobe)")).as("pc"))
           .select(F.col("query_id"), F.col("qvec"), F.col("qn"),
             F.col("pc.cell").as("cell"))),
         Seq("query_id"), "sim", "neighbor_id", k)
-        .localCheckpoint()
       // threshold: kth-best rounded sim among probed cells (no k
       // candidates yet -> -2 = no pruning possible for that query)
       val tq = topA.filter(F.col("rank") === k)
@@ -355,7 +347,10 @@ object Knn {
         .toDF("cell", "cf", "r")
       val statsDf = cellStats.select(F.col("cell"), F.col("cf"), F.col("r"))
         .unionByName(sentinel)
-        .localCheckpoint() // O(2^bits) rows; read by 2 scoring passes
+        // O(2^bits) rows of double averages, read by probe ranking and
+        // by phase B: two evaluations could rank a cell on both sides
+        // of the probe boundary
+        .localCheckpoint() // pin: correctness — double averages, read twice
       // exact u.c_j per (query, cell) — the same guarded expression as
       // the literal path's cellArr, evaluated against the broadcast
       // relation; re-derived for phase B rather than materializing the
@@ -366,16 +361,17 @@ object Knn {
         .withColumn("ucj", F.when(F.col("qn") === 0d, 0d)
           .otherwise(dotF(F.col("qvec"), F.col("cf")) / F.col("qn")))
       // probe selection: top-nprobe cells per query by (ucj desc,
-      // cell asc) — the same order the literal path's array_sort uses
+      // cell asc) — the same order the literal path's array_sort uses.
+      // probes (read by phase A and the bound) and phase A (read by tq
+      // and the final union) are re-derived per reader: pinning either
+      // was not faster cold (SCALE.md §library pins)
       val probes = TopK.perGroup[Long](
         cellScoreAll(q).select(F.col("query_id"), F.col("ucj"),
           F.col("cell")),
         Seq("query_id"), "ucj", "cell", nprobe, rankName = "crank")
-        .localCheckpoint() // O(queries × nprobe); read twice (A + bound)
       val topA = TopK.perGroup[Long](
         score(probes.select("query_id", "cell").join(q, "query_id")),
         Seq("query_id"), "sim", "neighbor_id", k)
-        .localCheckpoint()
       val tq = topA.filter(F.col("rank") === k)
         .select(F.col("query_id"), F.col("sim").as("tq"))
       // the probe boundary: phase B = cells STRICTLY after it in

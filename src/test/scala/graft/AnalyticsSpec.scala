@@ -15,28 +15,32 @@ class AnalyticsSpec extends SparkSpec {
     // undirected star 1—2, 1—3, 1—4 plus chain 4—5 (both directions)
     val und = Seq((1L, 2L), (1L, 3L), (1L, 4L), (4L, 5L))
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
-    val got = Graph.pageRank(edges, iters = 3, damping = 0.85)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // 16 iterations cross two CkptRounds boundaries: the returned frame
+    // reads the last round checkpoint, which must still be there
+    for (iters <- Seq(3, 16)) {
+      val got = Graph.pageRank(edges, iters = iters, damping = 0.85)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
-    // dense reference computation
-    val nodes = (1L to 5L).toSeq
-    val n = nodes.size
-    val out = (und ++ und.map(_.swap)).groupBy(_._1)
-      .view.mapValues(_.map(_._2)).toMap
-    var pr = nodes.map(v => v -> 1.0 / n).toMap
-    for (_ <- 1 to 3) {
-      val inflow = nodes.map { v =>
-        v -> nodes.filter(u => out(u).contains(v))
-          .map(u => pr(u) / out(u).size).sum
-      }.toMap
-      pr = nodes.map(v => v -> (0.15 / n + 0.85 * inflow(v))).toMap
+      // dense reference computation
+      val nodes = (1L to 5L).toSeq
+      val n = nodes.size
+      val out = (und ++ und.map(_.swap)).groupBy(_._1)
+        .view.mapValues(_.map(_._2)).toMap
+      var pr = nodes.map(v => v -> 1.0 / n).toMap
+      for (_ <- 1 to iters) {
+        val inflow = nodes.map { v =>
+          v -> nodes.filter(u => out(u).contains(v))
+            .map(u => pr(u) / out(u).size).sum
+        }.toMap
+        pr = nodes.map(v => v -> (0.15 / n + 0.85 * inflow(v))).toMap
+      }
+      nodes.foreach { v =>
+        assert(math.abs(got(v) - pr(v)) < 1e-12,
+          s"iters $iters, node $v: got ${got(v)}, want ${pr(v)}")
+      }
+      // no dangling nodes → total mass conserved
+      assert(math.abs(got.values.sum - 1.0) < 1e-12)
     }
-    nodes.foreach { v =>
-      assert(math.abs(got(v) - pr(v)) < 1e-12,
-        s"node $v: got ${got(v)}, want ${pr(v)}")
-    }
-    // no dangling nodes → total mass conserved
-    assert(math.abs(got.values.sum - 1.0) < 1e-12)
   }
 
   test("pageRank handles dangling nodes (rank received, none emitted)") {
@@ -254,6 +258,27 @@ class AnalyticsSpec extends SparkSpec {
     val full = graft.ops.Graph.kCore(edges, 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(full == Map(6L -> 2L, 7L -> 2L, 8L -> 2L))
+  }
+
+  test("kCore leaves no per-round checkpoint behind") {
+    import spark.implicits._
+    // a path peels its two end nodes per round at k = 2, so its length
+    // sets the round count; what kCore leaves pinned must not grow with
+    // it, on the converged exit and on the maxRounds exit
+    def path(n: Long) = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
+    // count only RDDs made by this call (ids only grow): the context
+    // holds persisted RDDs weakly, so older ones vanish on any GC
+    def left(n: Long, maxRounds: Int): Int = {
+      val sc = spark.sparkContext
+      val firstId = sc.emptyRDD[Int].id
+      val got = graft.ops.Graph.kCore(path(n), 2, maxRounds)
+      got.collect()
+      val pinned = sc.getPersistentRDDs.keys.count(_ > firstId)
+      assert(got.columns.nonEmpty) // keeps what the result reads alive
+      pinned
+    }
+    assert(left(6, 32) == left(20, 32)) // 4 vs 11 rounds
+    assert(left(40, 2) == left(40, 6))
   }
 
   test("q186 distributed peel equals driver-side simultaneous peeling") {

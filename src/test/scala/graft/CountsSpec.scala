@@ -310,14 +310,16 @@ class CountsSpec extends AnyFunSuite {
     }.map(i => s"$file:${i + 1}")
   }
 
-  test("every localCheckpoint in the query files states its reason") {
-    // A pin truncates lineage and fixes a materialization point; in a
-    // query file it stays only with a measured loss without it or a
-    // correctness reason (a non-deterministic input read twice).
-    val dir = "src/main/scala/graft/queries/"
-    val qs = mainSources.filter(_.getPath.startsWith(dir))
-    assert(qs.exists(f => readFile(f).contains("localCheckpoint(")),
-      s"scan found no localCheckpoint under $dir (wrong directory?)")
+  test("every localCheckpoint in src/main states its reason") {
+    // A pin truncates lineage and fixes a materialization point; it
+    // stays only with a measured loss without it or a correctness
+    // reason (a non-deterministic input read twice).
+    val qs = mainSources
+    for (dir <- Seq("src/main/scala/graft/queries/",
+        "src/main/scala/graft/ops/"))
+      assert(qs.exists(f => f.getPath.startsWith(dir) &&
+        readFile(f).contains("localCheckpoint(")),
+        s"scan found no localCheckpoint under $dir (wrong directory?)")
     val stray = qs.flatMap(f => untaggedPins(f.getPath, readFile(f)))
     assert(stray.isEmpty, "localCheckpoint without a `pin: measured` " +
       "or `pin: correctness` tag:\n" + stray.mkString("\n"))

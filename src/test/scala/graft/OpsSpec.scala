@@ -77,9 +77,9 @@ class OpsSpec extends SparkSpec {
     assert(math.abs(last - direct) / direct < 1e-9)
   }
 
-  test("describeCols returns one row per column with exact count") {
+  test("describeColsExact returns one row per column with exact count") {
     val li = T.load(spark, sf, "lineitem")
-    val d = li.describeCols(Seq("l_quantity", "l_discount")).collect()
+    val d = li.describeColsExact(Seq("l_quantity", "l_discount")).collect()
     assert(d.length == 2)
     val n = li.count().toDouble
     d.foreach { r => assert(r.getAs[Double]("n") == n) }
@@ -144,7 +144,7 @@ class OpsSpec extends SparkSpec {
       assert(math.abs(a - b) < 1e-9, s"$a != $b")
     }
     // describe variants agree
-    val d1 = li.describeCols(Seq("l_quantity", "l_discount"))
+    val d1 = PlainForms.describeCols(li, Seq("l_quantity", "l_discount"))
     val d2 = li.describeColsExact(Seq("l_quantity", "l_discount"))
     assert(d1.exceptAll(d2).isEmpty && d2.exceptAll(d1).isEmpty)
   }

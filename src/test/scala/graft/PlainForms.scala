@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{Column, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, functions => F}
 
-/** The plain Spark forms of the `plans/` kernels: built-in functions
-  * and higher-order functions only. Each is its kernel's executable
-  * spec; the kernel stays because it measured faster than this form
-  * cold (SCALE.md §kernels), and PropertySpec compares the two on
-  * adversarial inputs.
+/** The plain Spark forms of the `plans/` kernels and of the other
+  * custom pieces: built-in functions and higher-order functions only.
+  * Each is its custom piece's executable spec; the piece stays because
+  * it measured faster than this form cold (SCALE.md §kernels,
+  * §describe), and PropertySpec and OpsSpec compare the two.
   */
 object PlainForms {
 
@@ -118,4 +118,30 @@ object PlainForms {
             F.aggregate(F.slice(c, q + 1, F.lit(n)), F.lit(0L),
               (h, x) => (h * 31 + x) % 1000003L)))
           .otherwise(F.array().cast("array<bigint>"))), 1))
+
+  /** `StatOps.describeColsExact` with its quantiles from the built-in
+    * exact `percentile` (linear interpolation, DuckDB's quantile_cont):
+    * one aggregate pass, one percentile buffer per column, unpivoted
+    * by `stack()` over the single result row. */
+  def describeCols(df: DataFrame, cols: Seq[String],
+                   digits: Int = 6): DataFrame = {
+    val aggs = cols.flatMap { c =>
+      Seq(
+        F.expr(s"round(min($c), $digits)").as(s"${c}__min"),
+        F.expr(s"percentile($c, array(0.25, 0.5, 0.75))").as(s"${c}__qs"),
+        F.expr(s"round(avg($c), $digits)").as(s"${c}__mean"),
+        F.expr(s"round(max($c), $digits)").as(s"${c}__max"),
+        F.expr(s"count($c)").cast("long").as(s"${c}__n"),
+        F.expr(s"count_if($c is null)").cast("long").as(s"${c}__n_missing"))
+    }
+    val one = df.agg(aggs.head, aggs.tail: _*)
+    val branches = cols.map { c =>
+      s"'$c', ${c}__min, round(${c}__qs[0], $digits), " +
+        s"round(${c}__qs[1], $digits), ${c}__mean, " +
+        s"round(${c}__qs[2], $digits), ${c}__max, " +
+        s"cast(${c}__n as double), cast(${c}__n_missing as double)"
+    }.mkString(", ")
+    val hdr = "min, q25, median, mean, q75, max, n, n_missing"
+    one.select(F.expr(s"stack(${cols.size}, $branches) as (col_name, $hdr)"))
+  }
 }
